@@ -401,19 +401,32 @@ def test_dynamic_partition_pruning_on_partitioned_fact(spark, tmp_path_factory):
     assert "dynamicpruningexpression" in plan, plan[:2000]
 
 
-def test_crawl_budget_global_rank_is_distributed(spark):
+def test_crawl_budget_global_rank_is_distributed(spark, monkeypatch):
     """The largest-remainder pick needs a GLOBAL row_number with a
     data-dependent k, which a bare Window.orderBy would execute as a
     single-partition sort at host cardinality. The plan must instead be
     the distributed form: a range exchange on the sort key, the
     host-cardinality rank partitioned by spark_partition_id, and the
     only empty-partition window left running over the per-partition
-    offset table (one row per partition, never per host)."""
+    offset table (one row per partition, never per host). The range
+    exchange runs inside the local checkpoint that pins the pids, so
+    the plan read is the checkpointed DataFrame's plus the final one."""
     from text_extraction_evaluation_spark.plans.queries import (
         crawl_budget_allocation,
     )
 
-    plan = plan_of(crawl_budget_allocation(spark, SF0001))
+    checkpointed = []
+    frame_cls = type(spark.range(1))
+    real = frame_cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpointed.append(plan_of(self))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    final = plan_of(crawl_budget_allocation(spark, SF0001))
+    assert len(checkpointed) == 1
+    plan = checkpointed[0] + "\n" + final
     assert "rangepartitioning(rem" in plan
     windows = [ln for ln in plan.splitlines() if "Window [" in ln]
     assert windows, plan
@@ -422,3 +435,16 @@ def test_crawl_budget_global_rank_is_distributed(spark):
             assert "pid" in ln.split("windowspecdefinition", 1)[1].split(",")[0], ln
     # the offsets join back to host rows must broadcast
     assert "BroadcastHashJoin" in plan
+
+
+def test_crawl_budget_leaves_nothing_cached(spark):
+    """The pid-pinning materialization must not outlive the query: no
+    entry may be left in the session's CacheManager after collect."""
+    from text_extraction_evaluation_spark.plans.queries import (
+        crawl_budget_allocation,
+    )
+
+    spark.catalog.clearCache()
+    rows = crawl_budget_allocation(spark, SF0001).collect()
+    assert rows
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

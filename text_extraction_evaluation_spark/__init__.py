@@ -15,4 +15,11 @@ in ``text_extraction_evaluation_spark.algo`` — byte-identical by
 construction, frozen by golden files in tests/.
 """
 
+from text_extraction_evaluation_spark import _zipcache
+
+# Before anything else: Spark workers import this package when they
+# unpickle a kernel, so every later task on that worker skips
+# re-reading pyspark.zip (see _zipcache).
+_zipcache.install()
+
 __version__ = "0.1.0"

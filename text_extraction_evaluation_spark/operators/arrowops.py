@@ -6,9 +6,10 @@ kernels that only slice bytes that conversion IS the cost (binary
 columns become Python ``bytes`` objects row by row). ``mapInArrow``
 hands the kernel the ``pyarrow.RecordBatch`` itself, so byte scans run
 against Arrow buffers via ``pyarrow.compute`` with no per-row Python
-objects at all. The extraction kernel genuinely needs Python strings
-(the parser), so it stays mapInPandas; this module is the pattern for
-the scan-shaped work around it.
+objects at all. The extraction kernel (``operators.extract``) is a
+``mapInArrow`` kernel too, but its parser needs one Python ``bytes``
+object per page; this module is the pattern for the scan-shaped work
+around it, which needs none.
 
 Correctness twin: every stat emitted here is also expressible as a JVM
 column expression over the same rows; tests/test_arrowops.py asserts

@@ -838,10 +838,12 @@ def crawl_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Both the offsets branch and the rank branch consume `parts`, and
     # range-boundary sampling is seeded per RDD id — two independent
     # materializations could disagree on pid assignment, desyncing the
-    # offsets from the ranks. Persist pins ONE materialization (tiny:
-    # the per-host rank table, hosts << pages) so pids are consistent
-    # across branches regardless of exchange-reuse behavior.
-    parts = parts.persist()
+    # offsets from the ranks. An eager local checkpoint pins ONE
+    # materialization (tiny: the per-host rank table, hosts << pages) so
+    # pids are consistent across branches regardless of exchange-reuse
+    # behavior. Unlike persist() it registers nothing in the session's
+    # cache; its blocks are freed once the returned DataFrame is dropped.
+    parts = parts.localCheckpoint()
     # one row per range partition; the cumulative window runs over at
     # most `nparts` rows, never over host cardinality
     offsets = (
