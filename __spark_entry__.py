@@ -82,27 +82,17 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from text_extraction_evaluation_spark.plans.queries import (
-        DRIVER_ORDER,
-        SQL_CHECKED,
-    )
+    from text_extraction_evaluation_spark.plans.queries import SQL_CHECKED
 
-    # Non-SQL-expressible pipeline operators (rows-only driver check;
-    # byte-exact parity is enforced by tests/test_parity.py instead).
-    # DRIVER_ORDER (computed once at import from the CORRECTNESS
-    # record) interleaves them into the driver's 50-entry sample window
-    # whenever their official rows-only record is stale, so the
-    # flagship's own registry entries can never sit permanently outside
-    # the window again (round-4 VERDICT item 2).
-    rows_only: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    # The oracle-checked SQL entries in registry order, then the
+    # non-SQL-expressible pipeline operators (rows-only check; byte-exact
+    # parity is enforced by tests/test_parity.py instead).
+    return {
+        **{name: fn for name, (fn, _sql) in SQL_CHECKED.items()},
         "extract_report": _pipeline_report,
         "extracted_texts": _extracted_texts,
         "extract_spans": _extract_spans,
         "doc_scores": _doc_scores,
-    }
-    return {
-        name: rows_only[name] if name in rows_only else SQL_CHECKED[name][0]
-        for name in DRIVER_ORDER
     }
 
 

@@ -1,9 +1,11 @@
 """Benchmark harness (driver contract: one JSON line to stdout).
 
 Runs the headline operators at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS]. The flagship extraction pipeline is run over
-a replicated page corpus (REPLICATE x documents, distinct urls) so the
-Arrow kernel dominates the measurement rather than fixed overheads.
+local[$SPARK_GRAFT_CPUS] (default: the cores this process may run on,
+see ``sources.readers.default_cores``). The flagship extraction
+pipeline is run over a replicated page corpus (REPLICATE x documents,
+distinct urls) so the Arrow kernel dominates the measurement rather
+than fixed overheads.
 
 Output: {"metric": "...", "value": <total sec>, "unit": "sec",
          "queries": {name: sec}, "sf": <sf>, ...extras}
@@ -13,7 +15,6 @@ from __future__ import annotations
 
 import json
 import os
-import pathlib
 import sys
 import time
 
@@ -21,47 +22,6 @@ import time
 def _noop_write(df) -> int:
     df.write.format("noop").mode("overwrite").save()
     return 0
-
-
-def _host_capacity(seconds: float = 2.0) -> float:
-    """Host-capacity probe (same burn as scripts/scaling_bench.py):
-    aggregate ops/s of an N-process pure-Python loop (N = machine
-    cores, capped at 32 to stay comparable with the scaling bench's
-    32-process probe), run in a clean subprocess (no Spark state).
-    This sandbox is co-tenant virtualized hardware whose capacity
-    oscillates on a ~10-minute timescale; the probe result is the
-    noise DENOMINATOR for cross-round comparisons of the absolute
-    throughput numbers below — a bench run taken in a degraded epoch
-    shows a proportionally lower probe value. Identical code across
-    rounds, so probe ratios == capacity ratios. Returns -1.0 (and
-    prints the reason to stderr) if the probe cannot run."""
-    import subprocess
-
-    procs = min(32, os.cpu_count() or 1)
-    code = r"""
-import multiprocessing as mp, time, sys
-def burn(sec):
-    t0 = time.time(); c = 0
-    while time.time() - t0 < sec:
-        x = 0
-        for i in range(20000): x += i * i
-        c += 20000
-    return c
-if __name__ == '__main__':
-    sec = float(sys.argv[1]); procs = int(sys.argv[2])
-    with mp.Pool(procs) as p:
-        total = sum(p.map(burn, [sec] * procs))
-    print(total / sec)
-"""
-    cmd = [sys.executable, "-c", code, str(seconds), str(procs)]
-    if os.path.exists("/usr/bin/taskset"):
-        cmd = ["taskset", "-c", f"0-{procs - 1}"] + cmd
-    try:
-        out = subprocess.run(cmd, capture_output=True, text=True, check=True)
-        return round(float(out.stdout.strip().splitlines()[-1]), 0)
-    except Exception as ex:
-        print(f"host-capacity probe failed: {ex!r}", file=sys.stderr)
-        return -1.0
 
 
 # Headline analytics benched per round (every name must be a
@@ -178,14 +138,12 @@ BENCH_QUERIES = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     # The flagship extraction pipeline runs at a LARGE replication:
     # the pipeline carries ~2 s of fixed per-job overhead (synth stage
     # launch, window shuffle barrier, task-tail at 32 cores) that at
     # replicate=32 (160k docs, ~4 s) is half the wall clock and at
     # replicate=128 (640k docs) amortizes to ~15% — the sustained rate
-    # a long 100 TB run actually sees, and the number comparable to
-    # scripts/scaling_bench.py (also replicate>=128).
+    # a long 100 TB run actually sees.
     replicate_flagship = int(os.environ.get("SPARK_GRAFT_REPLICATE_FLAGSHIP", "128"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
 
@@ -198,6 +156,7 @@ def main() -> None:
     from text_extraction_evaluation_spark.operators.score import score_extracted
     from text_extraction_evaluation_spark.plans.queries import SQL_CHECKED
     from text_extraction_evaluation_spark.sources.readers import (
+        default_cores,
         get_spark,
         gold_df,
         pages_df,
@@ -206,24 +165,13 @@ def main() -> None:
     timings: dict[str, float] = {}
     extras: dict[str, float] = {}
 
-    # host noise denominator: capacity before any Spark work starts
-    extras["host_ops_before"] = _host_capacity()
-    # Reference numerator for epoch normalization: the PINNED all-time
-    # clean-epoch capacity of the reference host (same constant as
-    # scripts/scaling_bench.py CLEAN_EPOCH_REF_OPS, same probe code).
-    # Deliberately NOT read from BENCH/scaling.json: that file's
-    # calibrations change whenever the scaling headline is replaced,
-    # which would silently change the normalization denominator between
-    # rounds — the exact confound the *_epoch_normalized fields exist
-    # to remove.
-    extras["host_ops_peak_ref"] = 5.35e8
-
+    cpus = default_cores()
     spark = get_spark(
         "bench",
         cores=cpus,
         shuffle_partitions=max(32, cpus),
-        # same GC shape scripts/scaling_bench.py measured most stable
-        # next to the Python worker pool
+        # ParallelGC with capped threads ran most stable next to the
+        # Python worker pool (measured on a 32-core host)
         extra_java_options=(
             f"-XX:+UseParallelGC -XX:ParallelGCThreads={max(2, cpus // 4)}"
         ),
@@ -233,8 +181,7 @@ def main() -> None:
     # -- warm-up (uncounted, reported): first-use costs are session
     # fixtures, not operator costs — JVM whole-stage codegen compile,
     # Python worker pool spawn, Arrow channel setup, broadcast-thread
-    # start. BENCH/BASELINE.md's scaling numbers exclude warmup the
-    # same way, so steady-state timings stay comparable.
+    # start.
     t0 = time.time()
     _noop_write(
         extracted_clean(
@@ -256,8 +203,8 @@ def main() -> None:
     # materialized extracted table (in production it reads the catalog
     # table the extract job wrote), not a re-run of the Arrow kernel.
     # Best of two timed runs: the shared virtualized host has ~10-min
-    # co-tenancy epochs that can double a single run's wall time (see
-    # BENCH/BASELINE.md); both runs are reported.
+    # co-tenancy epochs that can double a single run's wall time; both
+    # runs are reported.
     t0 = time.time()
     n_docs = extract_pages(latest).count()
     run1 = time.time() - t0
@@ -318,31 +265,8 @@ def main() -> None:
         timings[name] = round(min(runs), 3)
 
     spark.stop()
-    # capacity again after the run: a mid-run co-tenancy epoch shows up
-    # as before/after disagreement (run AFTER spark.stop so the probe
-    # measures the host, not contention with executor threads)
-    extras["host_ops_after"] = _host_capacity()
 
     total = round(sum(timings.values()), 3)
-    # Epoch normalization (round-4 verdict item 5): the host's delivered
-    # capacity swings between rounds (co-tenant epochs, node
-    # migrations), so raw cross-round per-query deltas confound plan
-    # changes with epoch changes. Scale each timing by this run's
-    # capacity fraction (mean of the before/after probes over the
-    # all-time clean reference) to get the seconds the query would take
-    # at reference capacity — the number to compare across rounds.
-    # a failed probe returns the -1.0 sentinel — exclude it (it would
-    # halve or negate the normalized numbers)
-    probes = [
-        extras[k]
-        for k in ("host_ops_before", "host_ops_after")
-        if extras[k] > 0
-    ]
-    epoch_frac = (
-        (sum(probes) / len(probes)) / extras["host_ops_peak_ref"]
-        if probes
-        else None
-    )
     full = {
         "metric": "headline_queries_total_seconds",
         "value": total,
@@ -353,25 +277,10 @@ def main() -> None:
         "replicate_flagship": replicate_flagship,
         **extras,
     }
-    if epoch_frac is not None:
-        full["epoch_capacity_frac"] = round(epoch_frac, 3)
-        full["value_epoch_normalized"] = round(total * epoch_frac, 3)
-        full["queries_epoch_normalized"] = {
-            k: round(v * epoch_frac, 3) for k, v in timings.items()
-        }
-    # Full per-query payload goes to a file; the driver's stdout capture
-    # keeps only the LAST 2000 characters, so the final printed line must
-    # be compact (round 3's official BENCH record lost its headline to a
-    # tail-truncated JSON line). Print the full dict first (humans /
-    # local logs), then the compact driver line LAST.
-    out_dir = pathlib.Path(__file__).resolve().parent / "BENCH"
-    out_path = None
-    try:
-        out_dir.mkdir(exist_ok=True)
-        out_path = out_dir / f"bench_full_{time.strftime('%m%d_%H%M%S')}.json"
-        out_path.write_text(json.dumps(full, indent=1))
-    except OSError as exc:  # read-only checkout: keep benching
-        print(f"bench: could not write full payload: {exc!r}", file=sys.stderr)
+    # Only the LAST 2000 characters of stdout are kept by the bench
+    # record, so the final printed line must be compact (round 3's
+    # record lost its headline to a tail-truncated JSON line). The full
+    # dict goes to stderr, the compact line to stdout LAST.
     print(json.dumps(full), file=sys.stderr)
     flagship = {
         k: timings[k]
@@ -396,15 +305,6 @@ def main() -> None:
         "extraction_docs_per_sec": extras.get("extraction_docs_per_sec"),
         "density_docs_per_sec": extras.get("density_docs_per_sec"),
         "bte_docs_per_sec": extras.get("bte_docs_per_sec"),
-        "host_ops_before": extras.get("host_ops_before"),
-        "host_ops_after": extras.get("host_ops_after"),
-        "epoch_capacity_frac": (
-            round(epoch_frac, 3) if epoch_frac is not None else None
-        ),
-        "value_epoch_normalized": (
-            round(total * epoch_frac, 3) if epoch_frac is not None else None
-        ),
-        "full_results": str(out_path) if out_path else None,
     }
     line = json.dumps(compact)
     assert len(line) < 1900, f"compact bench line too long: {len(line)}"

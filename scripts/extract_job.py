@@ -1,5 +1,6 @@
 """Standalone extraction job for spark-submit (scaling evidence runs).
 
+    python scripts/make_pyfiles.py   # builds dist/engine.zip
     spark-submit --master local[N] --py-files dist/engine.zip \
         scripts/extract_job.py --sf-dir /root/testdata/sf0.1 --replicate 256
 

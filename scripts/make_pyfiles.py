@@ -1,5 +1,8 @@
-"""Package the engine as dist/engine.zip for spark-submit --py-files
-(BASELINE.json:6 'via spark-submit --py-files')."""
+"""Package the engine as engine.zip for spark-submit --py-files
+(BASELINE.json:6 'via spark-submit --py-files').
+
+Usage: python scripts/make_pyfiles.py   # writes dist/engine.zip
+"""
 
 from __future__ import annotations
 
@@ -10,9 +13,9 @@ ROOT = pathlib.Path(__file__).resolve().parent.parent
 DIST = ROOT / "dist"
 
 
-def build() -> pathlib.Path:
-    DIST.mkdir(exist_ok=True)
-    out = DIST / "engine.zip"
+def build(out_dir: pathlib.Path = DIST) -> pathlib.Path:
+    out_dir.mkdir(parents=True, exist_ok=True)
+    out = out_dir / "engine.zip"
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
         for p in sorted((ROOT / "text_extraction_evaluation_spark").rglob("*.py")):
             z.write(p, p.relative_to(ROOT))

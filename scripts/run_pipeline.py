@@ -1,6 +1,7 @@
 """End-to-end pipeline CLI — the rebuild of the reference's three
 lifecycles (SURVEY.md §3) in one resumable run:
 
+    python scripts/make_pyfiles.py   # builds dist/engine.zip
     spark-submit --py-files dist/engine.zip scripts/run_pipeline.py \
         --sf-dir /root/testdata/sf0.001 --out /tmp/run1
 

@@ -4,12 +4,7 @@ scale the external driver checks), compared with the exact
 normalization of tests/test_queries_oracle.py. Prints one line per
 query and a final summary; exit 1 on any mismatch.
 
-Usage: python scripts/sweep_oracle.py [sf_dir] [--window N]
-
-With ``--window N`` only the FIRST N entries of ``queries()`` are run —
-exactly the slice the external driver samples per round — and rows-only
-pipeline entries (no oracle twin) get the driver's weaker check: the
-Spark query must run and return >= 0 rows with a stable schema.
+Usage: python scripts/sweep_oracle.py [sf_dir]
 """
 
 from __future__ import annotations
@@ -31,18 +26,9 @@ def main() -> int:
     from text_extraction_evaluation_spark.sources.readers import TABLES, get_spark
 
     argv = list(sys.argv[1:])
-    window = None
-    if "--window" in argv:
-        i = argv.index("--window")
-        if i + 1 >= len(argv):
-            print("usage: sweep_oracle.py [sf_dir] [--window N]", file=sys.stderr)
-            return 2
-        window = int(argv[i + 1])
-        del argv[i : i + 2]
     sf = argv[0] if argv else "/root/testdata/sf0.01"
     qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
-    # `is not None`: --window 0 means an empty run, not the full sweep
-    names = list(qs)[:window] if window is not None else sorted(oracles)
+    names = sorted(oracles)
     spark = get_spark("sweep")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
@@ -55,19 +41,6 @@ def main() -> int:
         t0 = time.perf_counter()
         try:
             got = normalize(qs[name](spark, sf).toPandas())
-            if name not in oracles:
-                # rows-only pipeline entry: the driver's weaker check.
-                ok = got is not None and bool(list(got.columns))
-                dt = time.perf_counter() - t0
-                print(
-                    f"{'ok  ' if ok else 'FAIL'} {name} "
-                    f"({len(got)} rows, rows-only, {dt:.1f}s)",
-                    file=sys.stderr,
-                    flush=True,
-                )
-                if not ok:
-                    fails.append(name)
-                continue
             want = normalize(con.sql(oracles[name]).df())
             if len(got) != len(want) or sorted(got.columns) != sorted(want.columns):
                 ok = False

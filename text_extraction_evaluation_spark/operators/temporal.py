@@ -54,8 +54,9 @@ def build_scd2(crawls: DataFrame) -> DataFrame:
 
     One url shuffle: the lag change-detection window and the interval
     assembly windows share partitioning and ordering, so Catalyst
-    reuses the exchange and sort (evidenced in PLANS.md for the
-    census query built on this shape)."""
+    reuses the exchange and sort (asserted on the census query built
+    on this shape in tests/test_plans.py::
+    test_scd2_history_single_url_shuffle)."""
     rows = crawls.select(
         "host",
         "url",

@@ -24,6 +24,12 @@ PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang st
 GOLD_SCHEMA = "url string, gold_text string, dataset string"
 
 
+def default_cores() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the number of cores this process may
+    run on (what ``nproc`` prints)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app: str = "text-extraction-evaluation-spark",
     cores: int | None = None,
@@ -36,7 +42,7 @@ def get_spark(
     spark-submit); AQE stays on for runtime skew-join/partition
     coalescing (SURVEY.md §4).
     """
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or 2 * cores
     builder = SparkSession.builder.master(f"local[{cores}]").appName(app)
     if os.path.isdir("/dev/shm"):
@@ -44,10 +50,8 @@ def get_spark(
         # variance that dwarfs the compute being measured
         builder = builder.config("spark.local.dir", "/dev/shm/spark-local")
     if extra_java_options:
-        # e.g. GC flags for bench runs (scripts/scaling_bench.py
-        # measured ParallelGC with capped threads most stable next to
-        # the Python worker pool); applies only when the JVM has not
-        # been launched yet
+        # e.g. GC flags for bench.py runs; applies only when the JVM has
+        # not been launched yet
         builder = builder.config(
             "spark.driver.extraJavaOptions", extra_java_options
         )
