@@ -13,11 +13,15 @@ drift (tests/golden/).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pandas as pd
 
-from text_extraction_evaluation_spark.algo.justext import extract_bytes
+from text_extraction_evaluation_spark.algo.bte import extract_bytes_bte
+from text_extraction_evaluation_spark.algo.justext import ExtractionResult, extract_bytes
 from text_extraction_evaluation_spark.algo.metrics import score_texts
 from text_extraction_evaluation_spark.algo.params import DEFAULT_PARAMS, JustextParams
+from text_extraction_evaluation_spark.algo.textdensity import extract_bytes_density
 from text_extraction_evaluation_spark.sources.synth import (
     synth_gold_pdf,
     synth_pages_pdf,
@@ -41,14 +45,15 @@ def oracle_latest_crawl(pages: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def oracle_extract(
-    pages: pd.DataFrame, params: JustextParams = DEFAULT_PARAMS
+def _oracle_extract_rows(
+    pages: pd.DataFrame, extract: Callable[[bytes, str], ExtractionResult]
 ) -> pd.DataFrame:
+    """One row per page through ``extract(raw, lang) -> ExtractionResult``."""
     rows = []
     for url, ts, raw, lang in zip(
         pages["url"], pages["warc_ts"], pages["html"], pages["lang"], strict=True
     ):
-        res = extract_bytes(raw, lang, params)
+        res = extract(raw, lang)
         rows.append((url, ts, lang, res.text, res.n_paragraphs, res.n_good,
                      res.status, res.err))
     return pd.DataFrame(
@@ -56,44 +61,22 @@ def oracle_extract(
         columns=["url", "warc_ts", "lang", "text", "n_paragraphs", "n_good",
                  "status", "err"],
     )
+
+
+def oracle_extract(
+    pages: pd.DataFrame, params: JustextParams = DEFAULT_PARAMS
+) -> pd.DataFrame:
+    return _oracle_extract_rows(pages, lambda raw, lang: extract_bytes(raw, lang, params))
 
 
 def oracle_extract_density(pages: pd.DataFrame) -> pd.DataFrame:
     """Second-extractor twin (densometric rules, algo/textdensity.py)."""
-    from text_extraction_evaluation_spark.algo.textdensity import (
-        extract_bytes_density,
-    )
-
-    rows = []
-    for url, ts, raw, lang in zip(
-        pages["url"], pages["warc_ts"], pages["html"], pages["lang"], strict=True
-    ):
-        res = extract_bytes_density(raw)
-        rows.append((url, ts, lang, res.text, res.n_paragraphs, res.n_good,
-                     res.status, res.err))
-    return pd.DataFrame(
-        rows,
-        columns=["url", "warc_ts", "lang", "text", "n_paragraphs", "n_good",
-                 "status", "err"],
-    )
+    return _oracle_extract_rows(pages, lambda raw, _lang: extract_bytes_density(raw))
 
 
 def oracle_extract_bte(pages: pd.DataFrame) -> pd.DataFrame:
     """Third-extractor twin (BTE maximum-subarray window, algo/bte.py)."""
-    from text_extraction_evaluation_spark.algo.bte import extract_bytes_bte
-
-    rows = []
-    for url, ts, raw, lang in zip(
-        pages["url"], pages["warc_ts"], pages["html"], pages["lang"], strict=True
-    ):
-        res = extract_bytes_bte(raw)
-        rows.append((url, ts, lang, res.text, res.n_paragraphs, res.n_good,
-                     res.status, res.err))
-    return pd.DataFrame(
-        rows,
-        columns=["url", "warc_ts", "lang", "text", "n_paragraphs", "n_good",
-                 "status", "err"],
-    )
+    return _oracle_extract_rows(pages, lambda raw, _lang: extract_bytes_bte(raw))
 
 
 def oracle_spans(pages: pd.DataFrame, params: JustextParams = DEFAULT_PARAMS) -> pd.DataFrame:

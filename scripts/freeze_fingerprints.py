@@ -1,8 +1,9 @@
 """Freeze golden fingerprints for the extraction-family driver gates.
 
 Runs the pinned single-process oracle (oracle/run_oracle.py — pandas, no
-Spark) at sf0.001 and sf0.01 and prints the order-independent content
-fingerprints that plans/queries.py freezes as oracle-SQL constants:
+Spark) at sf0.001, sf0.01 and sf0.1 and prints the order-independent
+content fingerprints that plans/q_extraction.py freezes as oracle-SQL
+constants:
 
 * extract_text_fingerprint  — 48-bit md5-prefix sum over
   url|lang|status|n_paragraphs|n_good|text per extracted doc
@@ -15,14 +16,18 @@ fingerprints that plans/queries.py freezes as oracle-SQL constants:
   url|extractor|dataset|matched|matched_bow|retrieved|relevant|status
   plus floor(1e9 * metric) sums for the six P/R/F1 doubles
 * status_counts             — literal (extractor, dataset, status, n)
+* the density and BTE text fingerprints, the extractor ranking, the
+  line-clean/boilerplate census, span churn, sign test and bootstrap
+  CI constants (the rest of plans/q_extraction.py and
+  plans/q_webtext.py's frozen VALUES)
 
 The constants are derived from the single-process oracle, never from
 the Spark pipeline. Honest scope (matching oracle/run_oracle.py): the
-oracle imports the same algo/ modules (justext, textdensity, metrics)
-that the Spark kernels execute, so these gates pin DISTRIBUTION-LAYER
-parity — partitioning, Arrow batching, schema, join/agg plumbing — not
-independent algorithmic correctness. Algorithm-level behavior is pinned
-separately by the rule-level unit tests (tests/test_justext_rules.py,
+oracle imports the same algo/ modules (justext, textdensity, bte,
+metrics) that the Spark kernels execute, so these gates pin
+DISTRIBUTION-LAYER parity — partitioning, Arrow batching, schema,
+join/agg plumbing — not independent algorithmic correctness.
+Algorithm-level behavior is pinned separately by the rule-level unit tests (tests/test_justext_rules.py,
 tests/test_metrics.py) and the hand-built golden cases in
 tests/golden/.
 
@@ -33,8 +38,12 @@ from __future__ import annotations
 
 import hashlib
 import math
+import pathlib
+import sys
 
-from oracle.run_oracle import (
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
+
+from oracle.run_oracle import (  # noqa: E402
     oracle_extract,
     oracle_extract_bte,
     oracle_extract_density,

@@ -1,7 +1,10 @@
-"""BTE third extractor: hand-computed maximum-subarray cases, scan
-semantics, and Spark-kernel == pandas-oracle byte parity."""
+"""BTE third extractor: hand-computed maximum-subarray cases, the
+semantics it reads from the shared lexer, and Spark-kernel ==
+pandas-oracle byte parity."""
 
 from __future__ import annotations
+
+import pytest
 
 from text_extraction_evaluation_spark.algo.bte import (
     extract_text_bte,
@@ -59,6 +62,33 @@ def test_comment_doctype_cdata_are_single_tags():
 def test_entities_decoded_in_words():
     words, _ = tokenize("<p>fish&nbsp;&amp;&nbsp;chips</p>")
     assert words == ["fish", "&", "chips"]
+
+
+# How BTE reads edge-case markup through the shared lexer:
+# (html, (words, tag-token count)).
+LEXER_CASES = [
+    # a quoted '>' does not end the tag
+    ('<a title="x>y">link</a> text', (["link", "text"], 2)),
+    # <svg/> has no content to skip; the rest of the page stays
+    ("<p>a</p><svg/><p>b c</p>", (["a", "b", "c"], 5)),
+    # skipped content ends at its close tag, or runs to EOF
+    ("<noscript><p>no js</p></noscript>body", (["body"], 2)),
+    ("<svg><text>x</text></svg>body<math>y z", (["body"], 3)),
+    # a bogus end tag is one markup token
+    ("a</ x>b", (["a", "b"], 1)),
+    # HTML5 bogus-comment rule: <![CDATA[ ... ends at the first '>'
+    ("<![CDATA[a > b]]>c", (["b]]>c"], 1)),
+    # markup cut off at EOF drops the rest of the page
+    ('<p>kept</p><a title="x>rest of page', (["kept"], 2)),
+    ("<p>kept</p>tail <div class=x", (["kept", "tail"], 2)),
+    # CPython 3.11 HTMLParser rule (the fuzz reference), not HTML5
+    ("<script>x</script foo>y", ([], 2)),
+]
+
+
+@pytest.mark.parametrize(("html", "want"), LEXER_CASES)
+def test_shared_lexer_edge_cases(html, want):
+    assert tokenize(html) == want
 
 
 def test_kadane_is_optimal_vs_brute_force():

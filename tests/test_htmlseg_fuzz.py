@@ -30,7 +30,8 @@ def html_doc(draw):
         elif kind == 2:
             parts.append(" ".join(draw(st.lists(st.sampled_from(WORDS), min_size=1, max_size=8))))
         elif kind == 3:
-            parts.append(f'<{tag} class="x" href="/y">')
+            attrs = draw(st.sampled_from(['class="x" href="/y"', 'title="a>b"']))
+            parts.append(f"<{tag} {attrs}>")
         elif kind == 4:
             parts.append("<br>")
         else:

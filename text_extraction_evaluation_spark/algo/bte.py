@@ -17,26 +17,30 @@ CleanEval-era extractor comparisons (the reference harness's
 published lineage) ran against DOM classifiers like jusText, which
 is exactly the role it plays in this engine's extractor ranking.
 
-Pure Python, zero Spark imports; shares the charset sniff
-(algo/encoding.py) with the other extractors and is executed
-identically by the Arrow kernel and the parity oracle, so extracted
-bytes are identical by construction.
+Pure Python, zero Spark imports; reads the event stream of the one
+HTML lexer (``algo/htmlseg.py``) and shares the charset sniff and the
+failure path with the other extractors (``algo/justext.py``
+``decode_and_extract``). The Arrow kernel and the parity oracle run it
+identically, so extracted bytes are identical by construction.
 
 Determinism contract:
 
-* one tag token per markup construct (open/close/void tag, comment,
-  doctype/PI, CDATA);
-* the content of ``script/style/textarea/title/noscript/iframe/svg/
-  math`` is opaque — skipped up to the first matching close tag,
-  contributing only the two enclosing tag tokens;
-* text runs are entity-decoded then whitespace-split into word
+* the lexer's rules hold (``algo/htmlseg.py`` module docstring): a
+  quoted ``>`` does not end a tag, ``script/style/textarea/title``
+  content is raw text, markup cut off at EOF drops the rest of the page;
+* one tag token per start, end or self-closing tag and per markup
+  event (comment, doctype/PI/CDATA, bogus end tag);
+* adjacent data events are joined, then whitespace-split into word
+  tokens (the lexer has decoded entities);
+* the content of ``noscript/iframe/svg/math`` yields no tokens up to
+  the first matching close tag, which counts as one tag token (to EOF
+  if there is none); raw-text elements yield just their two tag
   tokens;
 * Kadane ties resolve to the EARLIEST window: the best window is
   replaced only by a strictly greater sum, and the running window
   restarts only when its sum drops below zero;
 * a page with no positive-sum window (or no words at all) extracts
-  empty; the regex scanner cannot fail on arbitrary bytes-decoded
-  text, so status is only ever ok/empty.
+  empty.
 
 ``ExtractionResult`` field semantics for this extractor:
 ``n_paragraphs`` = total word tokens scanned, ``n_good`` = word
@@ -46,100 +50,97 @@ notion).
 
 from __future__ import annotations
 
-import re
-from html import unescape
+from functools import partial
 
-from .encoding import sniff_decode
-from .justext import STATUS_EMPTY, STATUS_OK, STATUS_PARSE_ERROR, ExtractionResult
+from .htmlseg import _RAWTEXT_TAGS, _SKIP_CONTENT_TAGS, _fast_scan
+from .justext import STATUS_EMPTY, STATUS_OK, ExtractionResult, decode_and_extract
 
-# Content of these elements never yields word tokens (mirrors the DOM
-# segmenter's skip set, algo/htmlseg.py _SKIP_CONTENT_TAGS + rawtext).
-_OPAQUE_TAGS = frozenset(
-    {"script", "style", "textarea", "title", "noscript", "iframe",
-     "svg", "math"}
-)
+# Elements whose content the lexer tokenizes but BTE drops: the
+# segmenter's skip set minus the raw-text elements (the lexer skips
+# their content itself) and minus head (BTE counts its tags like any).
+_SKIP_TAGS = _SKIP_CONTENT_TAGS - _RAWTEXT_TAGS - {"head"}
 
-# One markup construct = one tag token. Comments/CDATA first (they may
-# contain '<'), then doctype/PI, then ordinary tags with the name
-# captured for opaque-content skipping.
-_MARKUP_RE = re.compile(
-    r"<!--.*?(?:-->|\Z)"
-    r"|<!\[CDATA\[.*?(?:\]\]>|\Z)"
-    r"|<[!?][^>]*>"
-    r"|</?([a-zA-Z][a-zA-Z0-9:_-]*)[^>]*>",
-    re.S,
-)
 
-# precompiled close-tag patterns (hot path: one search per opaque
-# element; compiling inside the scan would cost a regex-cache lookup
-# per occurrence)
-_OPAQUE_CLOSE_RES = {
-    t: re.compile(rf"</{re.escape(t)}\b[^>]*>", re.I) for t in _OPAQUE_TAGS
-}
+class _TokenSink:
+    """Lexer sink -> ``toks``: a ``str`` per data event, ``None`` per
+    tag token. Data and markup events append without a Python frame
+    (bound C methods); skipped content is truncated at its close tag."""
+
+    __slots__ = ("toks", "handle_data", "handle_markup", "_skip", "_skip_from")
+
+    def __init__(self) -> None:
+        self.toks: list[str | None] = []
+        self.handle_data = self.toks.append
+        self.handle_markup = partial(self.toks.append, None)
+        self._skip: str | None = None
+        self._skip_from = 0
+
+    def handle_starttag(self, tag: str) -> None:
+        self.toks.append(None)
+        if self._skip is None and tag in _SKIP_TAGS:
+            self._skip = tag
+            self._skip_from = len(self.toks)
+
+    def handle_endtag(self, tag: str) -> None:
+        if tag == self._skip:
+            del self.toks[self._skip_from :]
+            self._skip = None
+        self.toks.append(None)
+
+    def handle_startendtag(self, tag: str) -> None:
+        self.toks.append(None)
+
+    def finish(self) -> list[str | None]:
+        if self._skip is not None:
+            del self.toks[self._skip_from :]
+        return self.toks
+
+
+def _tokens(html_text: str) -> list[str | None]:
+    sink = _TokenSink()
+    _fast_scan(html_text, sink)
+    return sink.finish()
 
 
 def tokenize(html_text: str) -> tuple[list[str], int]:
     """html -> (word tokens in document order, total tag-token count).
-    Test/inspection helper over the same scan the extractor runs."""
-    words, n_tags = [], 0
-    for tok in _scan(html_text):
-        if tok is None:
-            n_tags += 1
-        else:
-            words.append(tok)
-    return words, n_tags
-
-
-def _scan(html_text: str):
-    """Yield the BTE token stream in document order: ``None`` per tag
-    token, a ``str`` per word token."""
-    pos, n = 0, len(html_text)
-    while pos < n:
-        m = _MARKUP_RE.search(html_text, pos)
-        end = m.start() if m else n
-        if end > pos:
-            text = unescape(html_text[pos:end])
-            for w in text.split():
-                yield w
-        if m is None:
-            return
-        yield None  # the tag token itself
-        pos = m.end()
-        name = (m.group(1) or "").lower()
-        if name and not m.group(0).startswith("</") and name in _OPAQUE_TAGS:
-            # opaque content: skip to the first matching close tag
-            c = _OPAQUE_CLOSE_RES[name].search(html_text, pos)
-            if c is None:
-                return  # unterminated opaque element swallows the tail
-            yield None  # the close tag token
-            pos = c.end()
+    Test/inspection helper over the token stream the extractor reads."""
+    toks = _tokens(html_text)
+    words = "".join([" " if t is None else t for t in toks]).split()
+    return words, toks.count(None)
 
 
 def extract_text_bte(html_text: str) -> ExtractionResult:
     """html string -> body text (space-joined words of the best window)."""
-    try:
-        # Kadane over the interleaved stream: +1 word / -1 tag. Track
-        # word-index bounds of both the running and the best window so
-        # the winning words slice out without a second scan.
-        words: list[str] = []
-        best = 0  # empty window is the baseline: only positive sums win
-        best_lo = best_hi = 0  # word-index window [lo, hi)
-        cur = 0
-        cur_lo = 0  # word index where the running window starts
-        for tok in _scan(html_text):
-            if tok is None:
-                cur -= 1
-                if cur < 0:
-                    cur = 0
-                    cur_lo = len(words)
-            else:
-                words.append(tok)
-                cur += 1
-                if cur > best:
-                    best = cur
-                    best_lo, best_hi = cur_lo, len(words)
-    except Exception as exc:  # pragma: no cover - defensive
-        return ExtractionResult("", [], 0, 0, STATUS_PARSE_ERROR, repr(exc))
+    # Kadane over the interleaved stream, +1 per word and -1 per tag.
+    # Data chunks collect in ``run`` until the next tag token; the words
+    # of a run only raise the sum, so the best window can change only at
+    # a run's end. Word-index bounds of the running and the best window
+    # let the winning words slice out at the end.
+    words: list[str] = []
+    best = 0  # empty window is the baseline: only positive sums win
+    best_lo = best_hi = 0  # word-index window [lo, hi)
+    cur = 0
+    cur_lo = 0  # word index where the running window starts
+    run: list[str] = []
+    toks = _tokens(html_text)
+    toks.append(None)  # flushes the last run; a trailing tag wins nothing
+    for tok in toks:
+        if tok is not None:
+            run.append(tok)
+            continue
+        if run:
+            k = len(words)
+            words += "".join(run).split()
+            run = []
+            cur += len(words) - k
+            if cur > best:
+                best = cur
+                best_lo, best_hi = cur_lo, len(words)
+        cur -= 1
+        if cur < 0:
+            cur = 0
+            cur_lo = len(words)
     body = words[best_lo:best_hi]
     text = " ".join(body)
     return ExtractionResult(
@@ -153,8 +154,4 @@ def extract_text_bte(html_text: str) -> ExtractionResult:
 
 def extract_bytes_bte(raw: bytes) -> ExtractionResult:
     """Raw page bytes -> ExtractionResult via the shared charset sniff."""
-    try:
-        html_text, _codec = sniff_decode(bytes(raw))
-    except Exception as exc:  # pragma: no cover - defensive
-        return ExtractionResult("", [], 0, 0, STATUS_PARSE_ERROR, repr(exc))
-    return extract_text_bte(html_text)
+    return decode_and_extract(raw, extract_text_bte)

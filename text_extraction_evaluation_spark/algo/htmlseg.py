@@ -1,24 +1,44 @@
-"""HTML -> ordered paragraph blocks (jusText preprocessing + segmentation).
+"""HTML -> ordered paragraph blocks (jusText preprocessing + segmentation),
+and the package's one HTML lexer.
 
 Reimplements, from the published algorithm description (Pomikalek
 2011, "Removing Boilerplate and Duplicate Content from Web Corpora")
 and the public ``justext`` package semantics, the DOM preprocessing
 and paragraph segmentation the reference harness relied on
-(BASELINE.json:6 "DOM block segmentation"). lxml is not available in
-this sandbox; two tokenizer front-ends drive ONE shared event core:
+(BASELINE.json:6 "DOM block segmentation"). lxml is not a dependency.
 
-* ``engine='fast'`` (default): a quote-aware regex scanner that skips
-  attribute parsing and position tracking entirely — measured ~3x the
-  stdlib parser on small pages (the stdlib ``HTMLParser`` spends >80%
-  of its time in attribute/position machinery we never use);
-* ``engine='stdlib'``: ``html.parser.HTMLParser`` — kept as the
-  cross-check reference (tests fuzz both and assert identical
-  paragraphs).
+One lexer, two consumers. ``_fast_scan`` turns html text into an event
+stream: start, end and self-closing tags, character data, and one
+``handle_markup()`` per comment, doctype/PI or bogus end tag. It feeds
+
+* ``_SegmenterCore``, the segmentation semantics below, which the
+  jusText and densometric extractors share (it ignores markup events);
+* the BTE token sink (``algo/bte.py``): one tag token per tag or markup
+  event, word tokens from the data.
+
+``segment(engine='stdlib')`` drives the same segmenter core from
+``html.parser.HTMLParser`` instead; it is the cross-check reference
+(tests fuzz both front-ends and assert identical paragraphs).
 
 Pure Python, zero Spark imports — shared by the Arrow kernel and the
 parity oracle so segmentation is byte-identical by construction.
 
-Semantics:
+Lexer rules:
+
+* a ``>`` inside a quoted attribute value does not end a tag;
+* the content of ``script/style/textarea/title`` is raw text up to
+  ``</name>`` (optional whitespace before ``>``; as in CPython 3.11's
+  ``HTMLParser``, ``</script foo>`` does not close a script);
+* a comment ends at ``-->``; ``<!...>`` and ``<?...>`` (doctype, PI,
+  CDATA) end at the first ``>``; ``</`` not followed by a letter is a
+  bogus end tag that ends at the next ``>``;
+* markup cut off at EOF (``<name`` with no closing ``>``, an unbalanced
+  attribute quote, an unterminated comment) drops the rest of the page,
+  as HTML5 does (the stdlib front-end emits it as text instead);
+* any other ``<`` is character data, emitted as its own data event;
+* entity references in data are decoded.
+
+Segmentation semantics:
 
 * comments, doctypes/PIs and the content of ``script/style/head/
   title/textarea/noscript/iframe/svg/math`` are dropped;
@@ -27,10 +47,13 @@ Semantics:
 * character data inside ``<a>`` accrues ``chars_count_in_links``;
 * each paragraph records its dom path at creation time and whether
   any enclosing element is ``h1``-``h6`` (heading flag);
-* paragraph text is whitespace-normalized; entity references decoded;
-* malformed markup is tolerated: stray close tags are ignored,
-  unclosed elements are popped to the nearest matching open tag,
-  an unterminated ``<tag ...`` at EOF is dropped.
+* paragraph text is whitespace-normalized;
+* stray close tags are ignored, unclosed elements are popped to the
+  nearest matching open tag.
+
+``segment`` raises on a page it cannot segment; the extractors'
+shared decode-and-extract step (``algo/justext.py``) turns that into a
+``parse_error`` row.
 """
 
 from __future__ import annotations
@@ -233,6 +256,9 @@ class _SegmenterCore:
         if self._link_depth > 0:
             p.chars_count_in_links += len(_WS_RE.sub(" ", data).strip())
 
+    def handle_markup(self) -> None:
+        """Comment, doctype/PI or bogus end tag: no effect here."""
+
     def finish(self) -> None:
         self._flush()
 
@@ -267,21 +293,30 @@ class _HtmlParserSegmenter(HTMLParser):
 
 
 # ---------------------------------------------------------------------------
-# Front-end 2: fast quote-aware regex scanner
+# Front-end 2: the lexer
 # ---------------------------------------------------------------------------
 
-# A tag: optional '/', a name, then attribute soup where '>' inside
-# quotes does not terminate the tag. Comments/decls/PIs handled first.
+# One search per construct. At a '<': a comment opener, a doctype/PI,
+# or a tag whose attribute soup may hold a quoted '>'. The empty last
+# alternative matches any other '<'; _fast_scan resolves it (bogus end
+# tag, markup cut off at EOF, or a lone '<' that is data). A tag name
+# is a letter then [^\t\n\r\f />\x00]* (stdlib tagfind-compatible),
+# the longest such name after which the attributes parse. Backtracking
+# into a quote-free stretch of the name, or into the attribute loop
+# (which has exactly one parse), cannot change that outcome, so those
+# quantifiers are possessive: without them an unterminated tag costs
+# time exponential in its length. (A name full of quotes still costs
+# length x quotes.)
 _TAG_RE = re.compile(
     r"""<(?:
         (?P<comment>!--)
-      | [!?][^>]*>
-      | (?P<end>/)?(?P<tag>[a-zA-Z][^\t\n\r\f\ />\x00]*)   # stdlib tagfind-compatible
-        (?P<attrs>(?:[^>"']+|"[^"]*"|'[^']*')*)>
+      | [!?][^>]*+>
+      | (?P<end>/)?(?P<tag>[a-zA-Z][^\t\n\r\f\ />\x00"']*+(?:["'][^\t\n\r\f\ />\x00"']*+)*)
+        (?P<attrs>(?:[^>"']++|"[^"]*+"|'[^']*+')*+)>
+      |
     )""",
     re.X,
 )
-_COMMENT_END_RE = re.compile(r"-->")
 
 # precompiled close-tag patterns for the rawtext elements (hot path:
 # one search per <script>/<style>/... occurrence)
@@ -290,84 +325,77 @@ _RAWTEXT_CLOSE_RES = {
 }
 
 
-def _fast_scan(text: str, core: _SegmenterCore) -> None:
-    pos = 0
-    n = len(text)
-    find_lt = text.find
+def _fast_scan(text: str, sink) -> None:  # noqa: ANN001
+    """Feed ``sink`` the events of ``text`` in document order (module
+    docstring: lexer rules). ``sink`` has ``handle_starttag(tag)``,
+    ``handle_endtag(tag)``, ``handle_startendtag(tag)``,
+    ``handle_data(data)`` and ``handle_markup()``; tag names are
+    lower-cased."""
+    on_data = sink.handle_data
+    on_start = sink.handle_starttag
+    on_end = sink.handle_endtag
+    on_markup = sink.handle_markup
+    search = _TAG_RE.search
+    pos, n = 0, len(text)
     while pos < n:
-        lt = find_lt("<", pos)
-        if lt < 0:
+        m = search(text, pos)
+        if m is None:
             data = text[pos:]
-            core.handle_data(unescape(data) if "&" in data else data)
-            break
+            on_data(unescape(data) if "&" in data else data)
+            return
+        lt = m.start()
         if lt > pos:
             data = text[pos:lt]
-            core.handle_data(unescape(data) if "&" in data else data)
-        nxt = lt + 1
-        if nxt < n and text[nxt] == "/" and (nxt + 1 >= n or not text[nxt + 1].isalpha()):
-            # bogus end tag `</ ...` / `</>`: drop through next '>'
-            gt = text.find(">", nxt)
-            pos = n if gt < 0 else gt + 1
-            continue
-        m = _TAG_RE.match(text, lt)
-        if m is None:
-            if nxt < n and (text[nxt].isalpha() or text[nxt] in "!?/"):
-                # markup truncated at EOF (no closing '>'): HTML5 drops
-                # it (documented divergence: stdlib emits it as data)
-                break
-            # lone '<' (e.g. "a < b"): it is character data
-            core.handle_data("<")
-            pos = lt + 1
-            continue
+            on_data(unescape(data) if "&" in data else data)
+        pos = m.end()
         # one C call for all four groups (hot path: one per tag)
         comment, end, tag, attrs = m.group("comment", "end", "tag", "attrs")
-        if comment:
-            cm = _COMMENT_END_RE.search(text, m.end())
-            pos = n if cm is None else cm.end()
-            continue
-        if tag is None:  # decl / PI: dropped
-            pos = m.end()
-            continue
-        tag = tag.lower()
-        attrs = attrs or ""
-        pos = m.end()
-        if end:
-            core.handle_endtag(tag)
-        elif attrs.rstrip().endswith("/"):
-            core.handle_startendtag(tag)
+        if tag is not None:
+            tag = tag.lower()
+            if end:
+                on_end(tag)
+            elif attrs and attrs.rstrip().endswith("/"):
+                sink.handle_startendtag(tag)
+            else:
+                on_start(tag)
+                if tag in _RAWTEXT_TAGS:
+                    # opaque content until the matching close tag;
+                    # search from pos on the original string (slicing
+                    # the tail would copy the rest of the document)
+                    close = _RAWTEXT_CLOSE_RES[tag].search(text, pos)
+                    on_end(tag)
+                    pos = n if close is None else close.end()
+        elif comment:
+            on_markup()
+            close = text.find("-->", pos)
+            pos = n if close < 0 else close + 3
+        elif pos > lt + 1:  # doctype / PI
+            on_markup()
         else:
-            core.handle_starttag(tag)
-            if tag in _RAWTEXT_TAGS:
-                # opaque content until the matching close tag; search
-                # from pos on the original string (slicing the tail
-                # would copy the rest of the document per rawtext
-                # element — O(n) per <script>/<style>)
-                close = _RAWTEXT_CLOSE_RES[tag].search(text, pos)
-                if close is None:
-                    core.handle_endtag(tag)  # unterminated: drop rest
-                    pos = n
-                else:
-                    core.handle_endtag(tag)
-                    pos = close.end()
+            nxt = text[pos : pos + 1]
+            if nxt == "/" and not text[pos + 1 : pos + 2].isalpha():
+                # bogus end tag `</ ...` / `</>`: dropped through next '>'
+                on_markup()
+                gt = text.find(">", pos)
+                pos = n if gt < 0 else gt + 1
+            elif nxt and (nxt.isalpha() or nxt in "!?/"):
+                return  # markup cut off at EOF: the rest is dropped
+            else:
+                on_data("<")  # lone '<' (e.g. "a < b") is data
 
 
 def segment(html_text: str, engine: str = "fast") -> list[Paragraph]:
     """Parse ``html_text`` and return the ordered non-empty paragraphs.
 
     ``engine='fast'`` (default) and ``engine='stdlib'`` produce
-    identical output (fuzz-tested); the fast scanner is ~3x quicker.
+    identical output (fuzz-tested); the fast lexer is ~3x quicker.
     """
     core = _SegmenterCore()
-    try:
-        if engine == "stdlib":
-            parser = _HtmlParserSegmenter(core)
-            parser.feed(html_text)
-            parser.close()
-        else:
-            _fast_scan(html_text, core)
-    except Exception:
-        # never let a pathological page kill a whole Arrow batch:
-        # return what was segmented so far.
-        pass
+    if engine == "stdlib":
+        parser = _HtmlParserSegmenter(core)
+        parser.feed(html_text)
+        parser.close()
+    else:
+        _fast_scan(html_text, core)
     core.finish()
     return core.paragraphs

@@ -11,6 +11,7 @@ executed both inside the Arrow kernels and by the parity oracle.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from .encoding import sniff_decode
@@ -220,6 +221,22 @@ class ExtractionResult:
     err: str | None = None
 
 
+def decode_and_extract(
+    raw: bytes, extract_text_fn: Callable[..., ExtractionResult], *args
+) -> ExtractionResult:
+    """Raw page bytes -> ``extract_text_fn(html_text, *args)`` via the
+    deterministic charset sniff. Every extractor's bytes entry point
+    goes through here, and this is the one failure path: a page that
+    cannot be decoded or parsed (a null ``html``, a lexer fault) comes
+    back ``parse_error`` with the exception in ``err`` instead of
+    failing the batch."""
+    try:
+        html_text, _codec = sniff_decode(bytes(raw))
+        return extract_text_fn(html_text, *args)
+    except Exception as exc:
+        return ExtractionResult("", [], 0, 0, STATUS_PARSE_ERROR, repr(exc))
+
+
 def extract_text(
     html_text: str,
     lang: str,
@@ -227,12 +244,7 @@ def extract_text(
     stoplists: dict[str, frozenset[str]] | None = None,
 ) -> ExtractionResult:
     """html string -> main-content text ('\\n\\n'-joined good paragraphs)."""
-    try:
-        paragraphs = segment(html_text)
-        classified = classify(paragraphs, lang, params, stoplists)
-    except Exception as exc:  # pragma: no cover - defensive
-        return ExtractionResult("", [], 0, 0, STATUS_PARSE_ERROR, repr(exc))
-
+    classified = classify(segment(html_text), lang, params, stoplists)
     good = [cp.text for cp in classified if cp.class_final == GOOD]
     text = "\n\n".join(good)
     status = STATUS_OK if text else STATUS_EMPTY
@@ -254,8 +266,4 @@ def extract_bytes(
     """Raw page bytes -> ExtractionResult via the deterministic
     charset sniff (the only supported entry point for ``html:binary``
     columns — bytes are never decoded JVM-side, see SURVEY.md §7)."""
-    try:
-        html_text, _codec = sniff_decode(bytes(raw))
-    except Exception as exc:  # pragma: no cover - defensive
-        return ExtractionResult("", [], 0, 0, STATUS_PARSE_ERROR, repr(exc))
-    return extract_text(html_text, lang, params, stoplists)
+    return decode_and_extract(raw, extract_text, lang, params, stoplists)

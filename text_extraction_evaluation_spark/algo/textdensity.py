@@ -17,9 +17,8 @@ executed identically by the Arrow kernel and the parity oracle.
 
 from __future__ import annotations
 
-from .encoding import sniff_decode
 from .htmlseg import Paragraph, segment
-from .justext import STATUS_EMPTY, STATUS_OK, STATUS_PARSE_ERROR, ExtractionResult
+from .justext import STATUS_EMPTY, STATUS_OK, ExtractionResult, decode_and_extract
 
 CONTENT = "content"
 BOILERPLATE = "boilerplate"
@@ -68,11 +67,8 @@ def classify_density(paragraphs: list[Paragraph]) -> list[str]:
 
 def extract_text_density(html_text: str) -> ExtractionResult:
     """html string -> main-content text ('\\n\\n'-joined content blocks)."""
-    try:
-        paragraphs = segment(html_text)
-        classes = classify_density(paragraphs)
-    except Exception as exc:  # pragma: no cover - defensive
-        return ExtractionResult("", [], 0, 0, STATUS_PARSE_ERROR, repr(exc))
+    paragraphs = segment(html_text)
+    classes = classify_density(paragraphs)
     good = [p.text for p, c in zip(paragraphs, classes) if c == CONTENT]
     text = "\n\n".join(good)
     return ExtractionResult(
@@ -87,8 +83,4 @@ def extract_text_density(html_text: str) -> ExtractionResult:
 def extract_bytes_density(raw: bytes) -> ExtractionResult:
     """Raw page bytes -> ExtractionResult via the same deterministic
     charset sniff as the jusText path (bytes never decoded JVM-side)."""
-    try:
-        html_text, _codec = sniff_decode(bytes(raw))
-    except Exception as exc:  # pragma: no cover - defensive
-        return ExtractionResult("", [], 0, 0, STATUS_PARSE_ERROR, repr(exc))
-    return extract_text_density(html_text)
+    return decode_and_extract(raw, extract_text_density)

@@ -99,7 +99,7 @@ def _extraction_kernel(pages: DataFrame, extract_fn) -> DataFrame:
                 ngood.append(res.n_good)
                 status.append(res.status)
                 err.append(res.err)
-                bytes_in.append(len(raw))
+                bytes_in.append(0 if raw is None else len(raw))
             now = time.time()
             k = batch.num_rows
             yield pa.RecordBatch.from_arrays(

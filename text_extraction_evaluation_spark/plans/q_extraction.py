@@ -56,18 +56,47 @@ def _q9(col) -> Column:
     return F.floor(c * F.lit(1e9)).cast("bigint")
 
 
-def _extracted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.extract import extract_pages, extracted_clean, latest_crawl
+def _extracted(
+    spark: SparkSession, sf_dir: str, extractor: str = "justext_spark"
+) -> DataFrame:
+    """Latest-crawl pages of ``sf_dir`` through one extractor's kernel
+    (``justext_spark``, ``textdensity`` or ``bte``), lineage columns
+    dropped."""
+    from ..operators.extract import (
+        extract_pages,
+        extract_pages_bte,
+        extract_pages_density,
+        extracted_clean,
+        latest_crawl,
+    )
     from ..sources.readers import pages_df
 
+    extract = {
+        "justext_spark": extract_pages,
+        "textdensity": extract_pages_density,
+        "bte": extract_pages_bte,
+    }[extractor]
     pages = pages_df(spark, sf_dir, n_partitions=16)
-    return extracted_clean(extract_pages(latest_crawl(pages)))
+    return extracted_clean(extract(latest_crawl(pages)))
 
 
-def extract_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-parity of the full extraction pipeline as one driver row:
-    fingerprint over url|lang|status|n_paragraphs|n_good|text."""
-    ex = _extracted(spark, sf_dir)
+def _scored_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Score rows of all three extractors over the same latest-crawl
+    pages and gold: jusText, then density, then BTE."""
+    from ..operators.score import score_extracted
+    from ..sources.readers import gold_df
+
+    gold = gold_df(spark, sf_dir)
+    j, d, b = (
+        score_extracted(_extracted(spark, sf_dir, ex), gold, extractor=ex)
+        for ex in ("justext_spark", "textdensity", "bte")
+    )
+    return j.unionByName(d).unionByName(b)
+
+
+def _text_fingerprint(spark: SparkSession, sf_dir: str, extractor: str) -> DataFrame:
+    """One row for one extractor: row count and fingerprint sum
+    over url|lang|status|n_paragraphs|n_good|text."""
     key = F.concat_ws(
         "|",
         "url",
@@ -77,9 +106,15 @@ def extract_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_good").cast("string"),
         F.coalesce(F.col("text"), F.lit("")),
     )
-    return ex.agg(
+    return _extracted(spark, sf_dir, extractor).agg(
         F.count(F.lit(1)).alias("n_rows"), F.sum(_fp48(key)).alias("fp_sum")
     )
+
+
+def extract_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Byte-parity of the full extraction pipeline as one driver row:
+    fingerprint over url|lang|status|n_paragraphs|n_good|text."""
+    return _text_fingerprint(spark, sf_dir, "justext_spark")
 
 
 _TEXT_FP_SQL = """
@@ -313,32 +348,12 @@ WHERE n_events = (SELECT COUNT(*) FROM events)
 """
 
 
-def _extracted_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.extract import extract_pages_density, extracted_clean, latest_crawl
-    from ..sources.readers import pages_df
-
-    pages = pages_df(spark, sf_dir, n_partitions=16)
-    return extracted_clean(extract_pages_density(latest_crawl(pages)))
-
-
 def density_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-parity gate for the SECOND extractor (densometric WSDM-2010
     rules): same order-independent fingerprint shape as
     extract_text_fingerprint, constants frozen from the pandas oracle
     twin (oracle_extract_density)."""
-    ex = _extracted_density(spark, sf_dir)
-    key = F.concat_ws(
-        "|",
-        "url",
-        "lang",
-        "status",
-        F.col("n_paragraphs").cast("string"),
-        F.col("n_good").cast("string"),
-        F.coalesce(F.col("text"), F.lit("")),
-    )
-    return ex.agg(
-        F.count(F.lit(1)).alias("n_rows"), F.sum(_fp48(key)).alias("fp_sum")
-    )
+    return _text_fingerprint(spark, sf_dir, "textdensity")
 
 
 _DENSITY_FP_SQL = """
@@ -351,33 +366,13 @@ WHERE n_events = (SELECT COUNT(*) FROM events)
 """
 
 
-def _extracted_bte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.extract import extract_pages_bte, extracted_clean, latest_crawl
-    from ..sources.readers import pages_df
-
-    pages = pages_df(spark, sf_dir, n_partitions=16)
-    return extracted_clean(extract_pages_bte(latest_crawl(pages)))
-
-
 def bte_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-parity gate for the THIRD extractor (BTE maximum-subarray
     body window, Finn et al. 2001 — algo/bte.py): same order-
     independent fingerprint shape as extract_text_fingerprint,
     constants frozen from the pandas oracle twin (oracle_extract_bte,
     scripts/freeze_fingerprints.py)."""
-    ex = _extracted_bte(spark, sf_dir)
-    key = F.concat_ws(
-        "|",
-        "url",
-        "lang",
-        "status",
-        F.col("n_paragraphs").cast("string"),
-        F.col("n_good").cast("string"),
-        F.coalesce(F.col("text"), F.lit("")),
-    )
-    return ex.agg(
-        F.count(F.lit(1)).alias("n_rows"), F.sum(_fp48(key)).alias("fp_sum")
-    )
+    return _text_fingerprint(spark, sf_dir, "bte")
 
 
 _BTE_FP_SQL = """
@@ -400,21 +395,8 @@ def extractor_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash). Oracle = frozen VALUES from the pandas oracle running
     all three extractors."""
     from ..operators.report import ranked_report
-    from ..operators.score import score_extracted
-    from ..sources.readers import gold_df
 
-    gold = gold_df(spark, sf_dir)
-    scores = (
-        score_extracted(_extracted(spark, sf_dir), gold, extractor="justext_spark")
-        .unionByName(
-            score_extracted(
-                _extracted_density(spark, sf_dir), gold, extractor="textdensity"
-            )
-        )
-        .unionByName(
-            score_extracted(_extracted_bte(spark, sf_dir), gold, extractor="bte")
-        )
-    )
+    scores = _scored_all(spark, sf_dir)
     return ranked_report(scores).select(
         "dataset", "rank", "extractor", "n_ok", "n_empty", "n_fail"
     )
@@ -489,7 +471,7 @@ def extractor_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     gold = gold_df(spark, sf_dir)
     j = score_extracted(_extracted(spark, sf_dir), gold, extractor="justext_spark")
     d = score_extracted(
-        _extracted_density(spark, sf_dir), gold, extractor="textdensity"
+        _extracted(spark, sf_dir, "textdensity"), gold, extractor="textdensity"
     )
     jok = j.filter(F.col("status") == "ok").select(
         "url", "dataset", F.col("f1").alias("f1_j")
@@ -573,7 +555,7 @@ def extractor_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     gold = gold_df(spark, sf_dir)
     j = score_extracted(_extracted(spark, sf_dir), gold, extractor="justext_spark")
     d = score_extracted(
-        _extracted_density(spark, sf_dir), gold, extractor="textdensity"
+        _extracted(spark, sf_dir, "textdensity"), gold, extractor="textdensity"
     )
     jok = j.filter(F.col("status") == "ok").select(
         "url", "dataset", F.col("f1").alias("f1_j")
@@ -1619,21 +1601,7 @@ def extract_report_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     float report (`extract_report`) stays the human-facing entry; this
     twin is what a cross-engine hash can gate — macro-F1 is
     sum_f1_q9 / 1e9 / n_ok to within 1e-9."""
-    from ..operators.score import score_extracted
-    from ..sources.readers import gold_df
-
-    gold = gold_df(spark, sf_dir)
-    scores = (
-        score_extracted(_extracted(spark, sf_dir), gold, extractor="justext_spark")
-        .unionByName(
-            score_extracted(
-                _extracted_density(spark, sf_dir), gold, extractor="textdensity"
-            )
-        )
-        .unionByName(
-            score_extracted(_extracted_bte(spark, sf_dir), gold, extractor="bte")
-        )
-    )
+    scores = _scored_all(spark, sf_dir)
     ok = F.col("status") == "ok"
     return scores.groupBy("extractor", "dataset").agg(
         F.count(F.when(ok, 1)).alias("n_ok"),
