@@ -2,16 +2,20 @@
 # Round-end verification checklist. Chains, in order:
 #   1. the full pytest suite, as the tier-1 command in ROADMAP.md runs it
 #      (all usable cores, local dirs under /tmp, 2670 s budget),
-#   2. the full 174-entry registry sweep vs the DuckDB oracle at sf0.01.
+#   2. the benchmark's helper tests (perfbench/tests, ~2 s, no Spark),
+#   3. the full 174-entry registry sweep vs the DuckDB oracle at sf0.01.
 # Any failure stops the chain with a non-zero exit.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== 1/2 pytest (tier-1) =="
+echo "== 1/3 pytest (tier-1) =="
 export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local
 timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
-echo "== 2/2 full registry sweep (sf0.01) =="
+echo "== 2/3 perfbench helper tests =="
+python3 -m pytest perfbench/tests -q -p no:cacheprovider
+
+echo "== 3/3 full registry sweep (sf0.01) =="
 python scripts/sweep_oracle.py /root/testdata/sf0.01
 
 echo "ROUND CHECK: all green"

@@ -1,0 +1,135 @@
+"""The extraction job's per-run staging and per-chunk job budget: the
+latest crawl is staged once and released on every exit, a chunk costs
+two Spark jobs (the extraction write and the run_metrics write) with no
+join in its plan, and a resume commits lineage a previous run left
+missing."""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.sql import functions as F
+
+from tests.conftest import SF0001, spark_job_ids
+
+
+@pytest.fixture(scope="module")
+def latest(spark):
+    from text_extraction_evaluation_spark.operators.extract import latest_crawl
+    from text_extraction_evaluation_spark.sources.readers import pages_df
+
+    df = latest_crawl(pages_df(spark, SF0001, n_partitions=8)).cache()
+    df.count()
+    yield df
+    df.unpersist()
+
+
+def _assert_nothing_staged(spark, root, rdds_before):
+    import os
+
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert _storage_rdd_ids(spark) <= rdds_before
+    assert [p for p in os.listdir(root) if p.startswith("_staged")] == []
+
+
+def _storage_rdd_ids(spark):
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_chunk_job_budget_bucket_and_plan(spark, latest, tmp_path, monkeypatch):
+    from text_extraction_evaluation_spark.plans.jobs import run_extraction_job
+    from text_extraction_evaluation_spark.sources.catalog import LocalCatalog
+
+    plans = []
+    commit = LocalCatalog.commit_append
+
+    def spy(self, df, table, chunk_id, meta=None):
+        out = commit(self, df, table, chunk_id, meta)
+        if table == "extracted":
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(LocalCatalog, "commit_append", spy)
+    n_buckets, n_chunks = 4, 2
+    with spark_job_ids(spark) as jobs:
+        run_extraction_job(spark, latest, str(tmp_path), n_buckets=n_buckets,
+                           buckets_per_chunk=n_buckets // n_chunks)
+    assert len(jobs) <= 3 + 2 * n_chunks, sorted(jobs)
+
+    assert len(plans) == n_chunks
+    for plan in plans:
+        assert "Join" not in plan, plan
+
+    rows = LocalCatalog(str(tmp_path)).read(spark, "extracted")
+    assert rows.count() == latest.count()
+    wrong = rows.filter(
+        F.col("url_bucket") != F.pmod(F.xxhash64("url"), F.lit(n_buckets))
+    )
+    assert wrong.count() == 0
+
+
+def test_staged_input_released_on_return(spark, tmp_path):
+    from text_extraction_evaluation_spark.operators.extract import latest_crawl
+    from text_extraction_evaluation_spark.plans.jobs import run_extraction_job
+    from text_extraction_evaluation_spark.sources.readers import pages_df
+
+    spark.catalog.clearCache()
+    before = _storage_rdd_ids(spark)
+    pages = latest_crawl(pages_df(spark, SF0001, n_partitions=8))
+    run_extraction_job(spark, pages, str(tmp_path), n_buckets=4, buckets_per_chunk=2)
+    _assert_nothing_staged(spark, tmp_path, before)
+
+
+def test_staged_input_released_on_chunk_failure(spark, tmp_path):
+    from text_extraction_evaluation_spark.operators.extract import latest_crawl
+    from text_extraction_evaluation_spark.plans.jobs import (
+        ChunkFailure,
+        run_extraction_job,
+    )
+    from text_extraction_evaluation_spark.sources.readers import pages_df
+
+    spark.catalog.clearCache()
+    before = _storage_rdd_ids(spark)
+    pages = latest_crawl(pages_df(spark, SF0001, n_partitions=8))
+    with pytest.raises(ChunkFailure):
+        run_extraction_job(spark, pages, str(tmp_path), n_buckets=4,
+                           buckets_per_chunk=2, fail_after_chunks=1)
+    _assert_nothing_staged(spark, tmp_path, before)
+
+
+def test_resume_commits_missing_run_metrics(spark, latest, tmp_path, monkeypatch):
+    """A chunk whose ``extracted`` commit landed but whose
+    ``run_metrics`` commit raised gets its lineage on the next run,
+    under the run_id recorded with the chunk."""
+    from text_extraction_evaluation_spark.plans.jobs import run_extraction_job
+    from text_extraction_evaluation_spark.sources.catalog import LocalCatalog
+
+    class MetricsCommitLost(RuntimeError):
+        pass
+
+    commit = LocalCatalog.commit_append
+    raised = []
+
+    def flaky(self, df, table, chunk_id, meta=None):
+        if table == "run_metrics" and not raised:
+            raised.append(chunk_id)
+            raise MetricsCommitLost(chunk_id)
+        return commit(self, df, table, chunk_id, meta)
+
+    root = str(tmp_path)
+    monkeypatch.setattr(LocalCatalog, "commit_append", flaky)
+    with pytest.raises(MetricsCommitLost):
+        run_extraction_job(spark, latest, root, n_buckets=8, buckets_per_chunk=2,
+                           run_id="first")
+    cat = LocalCatalog(root)
+    first = set(cat.committed_chunks("extracted"))
+    assert raised[0] in first
+    assert cat.committed_chunks("run_metrics") == {}
+
+    run_extraction_job(spark, latest, root, n_buckets=8, buckets_per_chunk=2,
+                       run_id="second")
+    assert len(cat.committed_chunks("extracted")) == 4
+    assert len(cat.committed_chunks("run_metrics")) == 4
+    rm = cat.read(spark, "run_metrics").collect()
+    assert sum(r["n_docs"] for r in rm) == latest.count()
+    assert {r["run_id"] for r in rm if r["chunk_id"] in first} == {"first"}
+    assert {r["run_id"] for r in rm if r["chunk_id"] not in first} == {"second"}

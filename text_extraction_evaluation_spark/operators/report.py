@@ -44,8 +44,13 @@ def report(scores: DataFrame) -> DataFrame:
 
 
 def ranked_report(scores: DataFrame) -> DataFrame:
-    """W1: extractors ranked by macro-F1 within each dataset."""
-    rep = report(scores)
+    """W1: extractors ranked by macro-F1 within each dataset.
+
+    The report has one row per (extractor, dataset), so it is coalesced
+    to one partition after the aggregation: the rank window and the
+    final sort then run in place, with no second shuffle and no
+    range-sampling job."""
+    rep = report(scores).coalesce(1)
     w = Window.partitionBy("dataset").orderBy(F.col("avg_f1").desc(), "extractor")
     return rep.withColumn("rank", F.rank().over(w)).orderBy("dataset", "rank")
 

@@ -10,7 +10,10 @@ pipeline actually relies on and implements them on plain parquet dirs:
    readers never see partial writes, re-running a failed chunk is
    idempotent (same chunk_id -> skip);
 2. **snapshot reads**: ``read()`` loads exactly the committed chunk
-   paths from the manifest, never a directory listing.
+   paths from the manifest, never a directory listing. Each commit
+   records its chunk's schema in the manifest, so a read is typed from
+   the manifest and launches no parquet-footer inference job (legacy
+   chunks without a recorded schema fall back to inference).
 
 Swapping in Iceberg later = replacing this class with
 ``df.writeTo(table).append()`` + snapshot reads; call sites are
@@ -27,6 +30,7 @@ from pathlib import Path
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class LocalCatalog:
@@ -94,6 +98,7 @@ class LocalCatalog:
         staging = f"{path}.staging-{uuid.uuid4().hex}"
         try:
             df.write.mode("overwrite").parquet(staging)
+            meta = {**(meta or {}), "schema": df.schema.json()}
             committed = self._publish(table, chunk_id, path, staging, meta)
         finally:
             # a failed attempt (write error, publish error) must not
@@ -179,7 +184,7 @@ class LocalCatalog:
             ]
         if not vis:
             return None
-        return spark.read.parquet(*[c["path"] for c in vis])
+        return _scan(spark, vis)
 
     def _ordered_chunks(self, table: str) -> list[tuple[dict[str, Any], int]]:
         """Committed chunks in commit order, each with its EFFECTIVE
@@ -217,7 +222,7 @@ class LocalCatalog:
         ]
         if not window:
             return None
-        return spark.read.parquet(*[c["path"] for c in window])
+        return _scan(spark, window)
 
     def compact(
         self,
@@ -260,7 +265,7 @@ class LocalCatalog:
         targets = [cid for cid in targets if cid in live]
         if len(targets) < 2 or chunk_id in self.committed_chunks(table):
             return False
-        df = spark.read.parquet(*[live[cid]["path"] for cid in targets])
+        df = _scan(spark, [live[cid] for cid in targets])
         path = self.chunk_path(table, chunk_id)
         staging = f"{path}.staging-{uuid.uuid4().hex}"
         try:
@@ -288,6 +293,7 @@ class LocalCatalog:
                     "seq": seq,
                     "committed_at_unix": time.time(),
                     "compacted_from": targets,
+                    "schema": df.schema.json(),
                 }
                 self._store_manifest(table, manifest)
         finally:
@@ -318,3 +324,14 @@ class LocalCatalog:
         import shutil
 
         shutil.rmtree(self.root / table, ignore_errors=True)
+
+
+def _scan(spark: SparkSession, chunks: list[dict[str, Any]]) -> DataFrame:
+    """Read committed chunks, typed by their recorded schema when every
+    chunk carries the same one; otherwise (legacy manifest, or chunks
+    that disagree) let parquet infer it from the footers."""
+    schemas = {c.get("schema") for c in chunks}
+    reader = spark.read
+    if len(schemas) == 1 and None not in schemas:
+        reader = reader.schema(StructType.fromJson(json.loads(schemas.pop())))
+    return reader.parquet(*[c["path"] for c in chunks])
