@@ -1,8 +1,10 @@
 """Benchmark harness (driver contract: one JSON line to stdout).
 
-Runs the headline operators at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS] (default: the cores this process may run on,
-see ``sources.readers.default_cores``). The flagship extraction
+Runs the flagship pipeline and then every oracle-checked registry entry
+(``plans.queries.SQL_CHECKED``, in registry order) at
+$SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS]
+(default: the cores this process may run on, see
+``sources.readers.default_cores``). The flagship extraction
 pipeline is run over a replicated page corpus (REPLICATE x documents,
 distinct urls) so the Arrow kernel dominates the measurement rather
 than fixed overheads.
@@ -22,118 +24,6 @@ import time
 def _noop_write(df) -> int:
     df.write.format("noop").mode("overwrite").save()
     return 0
-
-
-# Headline analytics benched per round (every name must be a
-# registered SQL_CHECKED entry; tests/test_bench_list.py guards it).
-BENCH_QUERIES = [
-    "q1_pricing_summary",
-    "q_nation_revenue",
-    "q_top_customers",
-    "q_events_hourly",
-    "text_quality",
-    "dedup_minhash_lsh",
-    "dedup_minhash_verified",
-    "dedup_components",
-    "dedup_simhash",
-    "doc_rolling_fingerprints",
-    "ann_cosine_topk",
-    "dedup_embedding_cosine",
-    "ann_ivf_topk",
-    "q_events_asof_join",
-    "quality_filter",
-    "doc_sample_stratified",
-    "doc_containment",
-    "tfidf_top_terms",
-    "quality_repetition",
-    "host_pagerank",
-    "host_domain_cap",
-    "pii_redaction",
-    "boilerplate_line_census",
-    "crawl_content_diff",
-    "scd2_page_history",
-    "lm_perplexity_score",
-    "dsir_importance_weights",
-    "sequence_packing",
-    "line_dedup_clean",
-    "curation_funnel",
-    "semantic_dedup_census",
-    "crawl_bloom_novelty",
-    "quality_classifier_score",
-    "bm25_topk",
-    "bpe_train_merges",
-    "bpe_encode_census",
-    "heavy_hitters_cms",
-    "unicode_nfc_census",
-    "doc_sample_weighted",
-    "pca_power_iteration",
-    "pca_project_census",
-    "leakage_safe_split_census",
-    "outlink_path_census",
-    "template_shape_census",
-    "crawl_novel_shingles",
-    "readability_census",
-    "ann_ivf_recall",
-    "decontamination_clean",
-    "linear_probe_train",
-    "vocab_growth_census",
-    "token_entropy_census",
-    "bigram_lift_topk",
-    "anchor_text_census",
-    "page_encoding_census",
-    "hard_negative_mining",
-    "embedding_sq8_census",
-    "phrase_search_census",
-    "quality_ppl_contingency",
-    "mixture_temperature_plan",
-    "q_event_funnel",
-    "q_retention_cohorts",
-    "ann_pq_adc_topk",
-    "ann_ivfpq_topk",
-    "zorder_layout_census",
-    "dedup_jaccard_prefix",
-    "dedup_threshold_sweep",
-    "stopword_discovery",
-    "bm25_mrr_eval",
-    "ann_dim_truncation_recall",
-    "passage_chunk_census",
-    "dedup_banding_sweep",
-    "span_churn_census",
-    "q18_large_orders",
-    "q_events_rolling_window",
-    "hll_distinct_census",
-    "q_events_variant",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q17_small_quantity",
-    "q19_disjunctive_revenue",
-    "q21_waiting_suppliers",
-    "q22_dormant_customers",
-    "q_events_gapfill",
-    "dedup_minhash_calibration",
-    "host_label_propagation",
-    "q16_parts_supplier",
-    "q_integrity_audit",
-    "q_price_ntile",
-    "q_events_interpolate",
-    "trigram_index_search",
-    "crawl_budget_allocation",
-    "langid_confusion",
-    "q_events_out_of_order",
-    "q_events_percent_rank",
-    "source_length_trend",
-    "source_median_chars",
-    "source_trimmed_mean",
-    "host_bfs_depth",
-    "q_events_pit_state",
-    "dedup_edit_distance",
-    "token_source_bitmap",
-    "q_grouping_sets",
-    "q_lineitem_unpivot",
-]
 
 
 def main() -> None:
@@ -249,14 +139,12 @@ def main() -> None:
     timings["extract_bte_pipeline"] = round(t_bte, 3)
     extras["bte_docs_per_sec"] = round(n_bte / t_bte, 1)
 
-    # -- headline analytics ---------------------------------------------------
-    bench_queries = BENCH_QUERIES
+    # -- every registry entry ---------------------------------------------------
     # best of two runs per query: the shared virtualized host has
     # co-tenancy epochs that can multiply a single run's wall time
     # (measured 12x once on an unchanged plan); the min of two runs
     # a few seconds apart is a far more stable point estimate.
-    for name in bench_queries:
-        fn, _sql = SQL_CHECKED[name]
+    for name, (fn, _sql) in SQL_CHECKED.items():
         runs = []
         for _ in range(2):
             t0 = time.time()

@@ -3,7 +3,8 @@
 #   1. the full pytest suite, as the tier-1 command in ROADMAP.md runs it
 #      (all usable cores, local dirs under /tmp, 2670 s budget),
 #   2. the benchmark's helper tests (perfbench/tests, ~2 s, no Spark),
-#   3. the full 174-entry registry sweep vs the DuckDB oracle at sf0.01.
+#   3. the full registry sweep vs the DuckDB oracle at sf0.01 (the entry
+#      count it ran is printed at the end).
 # Any failure stops the chain with a non-zero exit.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -16,6 +17,9 @@ echo "== 2/3 perfbench helper tests =="
 python3 -m pytest perfbench/tests -q -p no:cacheprovider
 
 echo "== 3/3 full registry sweep (sf0.01) =="
-python scripts/sweep_oracle.py /root/testdata/sf0.01
+sweep="$(python scripts/sweep_oracle.py /root/testdata/sf0.01)" || { echo "$sweep"; exit 1; }
+echo "$sweep"
+ran="${sweep#SWEEP }"
+ran="${ran%% *}"
 
-echo "ROUND CHECK: all green"
+echo "ROUND CHECK: all green (registry sweep ran ${ran#*/} entries)"

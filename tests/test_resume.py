@@ -147,6 +147,22 @@ def test_run_metrics_lineage(spark, pages, tmp_path_factory):
         assert r["t_end"] >= r["t_start"]
 
 
+def test_run_metrics_span_a_single_batch(spark, pages, tmp_path_factory):
+    """A partition that fits in one Arrow batch still gets a time span:
+    t_start is the batch's start, t_end its end, so t_end > t_start
+    (stamping only the batch end made the two equal)."""
+    from text_extraction_evaluation_spark.plans.jobs import run_extraction_job
+    from text_extraction_evaluation_spark.sources.catalog import LocalCatalog
+
+    few = pages.orderBy("url").limit(12)  # far below one Arrow batch per partition
+    root = str(tmp_path_factory.mktemp("run_metrics_one_batch"))
+    run_extraction_job(spark, few, root, n_buckets=1, buckets_per_chunk=1)
+    rm = LocalCatalog(root).read(spark, "run_metrics").collect()
+    assert sum(r["n_docs"] for r in rm) == 12
+    for r in rm:
+        assert r["t_end"] > r["t_start"], r
+
+
 def test_four_in_flight_failure_manifest_consistent(spark, pages, tmp_path_factory):
     """>=4 chunks in flight with an injected mid-flight failure: the
     manifest must stay consistent (unique commit seqs, every committed

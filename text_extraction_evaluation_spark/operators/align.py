@@ -70,7 +70,7 @@ def crawl_span_churn(
     spans_old = extract_spans(old, params).select("url", "text")
     spans_new = extract_spans(new, params).select("url", "text")
 
-    def diff(key: tuple, a: pd.DataFrame, b: pd.DataFrame) -> pd.DataFrame:
+    def span_churn_diff(key: tuple, a: pd.DataFrame, b: pd.DataFrame) -> pd.DataFrame:
         ca = a["text"].value_counts()
         cb = b["text"].value_counts()
         common = int(
@@ -93,7 +93,7 @@ def crawl_span_churn(
     return (
         spans_old.groupby("url")
         .cogroup(spans_new.groupby("url"))
-        .applyInPandas(diff, CHURN_SCHEMA)
+        .applyInPandas(span_churn_diff, CHURN_SCHEMA)
     )
 
 

@@ -16,8 +16,9 @@ Scale notes (100 TB design):
 * columns are pruned explicitly before the kernel (the python-map
   stage consumes whole rows — Catalyst cannot prune through it);
 * per-partition lineage counters ride along as cheap columns
-  (pid/bytes_in/t_unix) and are aggregated into the ``run_metrics``
-  table by ``plans.lineage`` — no Python accumulators (per-row, slow).
+  (pid/bytes_in and each batch's start and end time) and are
+  aggregated into the ``run_metrics`` table by ``plans.jobs`` — no
+  Python accumulators (per-row, slow).
 """
 
 from __future__ import annotations
@@ -38,7 +39,7 @@ EXTRACTED_COLS = ["url", "warc_ts", "lang", "text", "n_paragraphs", "n_good", "s
 EXTRACT_SCHEMA = (
     "url string, warc_ts timestamp, lang string, text string, "
     "n_paragraphs int, n_good int, status string, err string, "
-    "pid int, bytes_in long, t_unix double"
+    "pid int, bytes_in long, t_unix_start double, t_unix double"
 )
 
 SPANS_SCHEMA = (
@@ -62,8 +63,9 @@ def salted_repartition(pages: DataFrame, num_partitions: int, salt: int = 8) -> 
 
 def _extraction_kernel(pages: DataFrame, extract_fn) -> DataFrame:
     """Shared kernel plumbing for every extractor: pruned input, raw
-    Arrow batches, per-partition lineage ride-alongs (pid/bytes_in/
-    t_unix), EXTRACT_SCHEMA output. ``extract_fn(raw, lang) ->
+    Arrow batches, per-partition lineage ride-alongs (pid/bytes_in,
+    and the batch's start and end time as t_unix_start/t_unix),
+    EXTRACT_SCHEMA output. ``extract_fn(raw, lang) ->
     ExtractionResult`` is the only per-extractor piece — jusText and
     textdensity must stay schema- and lineage-identical because
     extractor_ranking unions their scored outputs.
@@ -78,10 +80,11 @@ def _extraction_kernel(pages: DataFrame, extract_fn) -> DataFrame:
     original Arrow arrays, zero-copy."""
     pruned = pages.select("url", "warc_ts", "html", "lang")
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def extract_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         for batch in batches:
+            start = time.time()
             names = batch.schema.names
             langs_arr = batch.column(names.index("lang"))
             raws = batch.column(names.index("html")).to_pylist()
@@ -114,14 +117,15 @@ def _extraction_kernel(pages: DataFrame, extract_fn) -> DataFrame:
                     pa.array(err, pa.string()),
                     pa.array([pid] * k, pa.int32()),
                     pa.array(bytes_in, pa.int64()),
+                    pa.array([start] * k, pa.float64()),
                     pa.array([now] * k, pa.float64()),
                 ],
                 names=["url", "warc_ts", "lang", "text", "n_paragraphs",
                        "n_good", "status", "err", "pid", "bytes_in",
-                       "t_unix"],
+                       "t_unix_start", "t_unix"],
             )
 
-    return pruned.mapInArrow(kernel, EXTRACT_SCHEMA)
+    return pruned.mapInArrow(extract_kernel, EXTRACT_SCHEMA)
 
 
 def extract_pages(
@@ -149,7 +153,7 @@ def extract_spans(
     and final classes + features (FIXTURES.md §4 ``paragraphs``)."""
     pruned = pages.select("url", "html", "lang")
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def spans_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             names = batch.schema.names
             cols: tuple[list, ...] = ([], [], [], [], [], [], [], [], [])
@@ -184,7 +188,7 @@ def extract_spans(
                        "heading"],
             )
 
-    return pruned.mapInArrow(kernel, SPANS_SCHEMA)
+    return pruned.mapInArrow(spans_kernel, SPANS_SCHEMA)
 
 
 def extract_pages_density(pages: DataFrame) -> DataFrame:

@@ -52,7 +52,7 @@ def score_extracted(
         F.broadcast(gold.select("url", "gold_text", "dataset")), "url", "inner"
     )
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def score_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             names = batch.schema.names
             urls = batch.column(names.index("url"))
@@ -90,4 +90,4 @@ def score_extracted(
                 out_names.append(c)
             yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
-    return joined.mapInArrow(kernel, schema)
+    return joined.mapInArrow(score_kernel, schema)

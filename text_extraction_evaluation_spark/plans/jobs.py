@@ -76,7 +76,9 @@ def with_bucket(pages: DataFrame, n_buckets: int) -> DataFrame:
 
 def run_metrics_from_extracted(extracted_chunk: DataFrame, run_id: str, chunk_id: str) -> DataFrame:
     """Lineage rows aggregated from the lineage ride-along columns the
-    kernel emits (pid/bytes_in/t_unix) — no Python accumulators."""
+    kernel emits (pid/bytes_in, each batch's start and end time) — no
+    Python accumulators. ``t_start`` is the earliest batch start and
+    ``t_end`` the latest batch end of the partition."""
     ok = F.col("status") == "ok"
     return (
         extracted_chunk.groupBy("pid", "url_bucket")
@@ -85,7 +87,7 @@ def run_metrics_from_extracted(extracted_chunk: DataFrame, run_id: str, chunk_id
             F.count(F.when(ok, 1)).alias("n_ok"),
             F.count(F.when(F.col("status") == "parse_error", 1)).alias("n_err"),
             F.sum("bytes_in").alias("bytes_in"),
-            F.min("t_unix").alias("t_start"),
+            F.min("t_unix_start").alias("t_start"),
             F.max("t_unix").alias("t_end"),
         )
         .select(
