@@ -1,6 +1,11 @@
 """Unit tests for the HTML segmenter (SURVEY.md §2.3 E1a/E1b/E1c)."""
 
-from text_extraction_evaluation_spark.algo.htmlseg import segment
+import re
+
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+
+from text_extraction_evaluation_spark.algo.htmlseg import _normalize, segment
 
 
 def texts(html):
@@ -79,3 +84,16 @@ def test_table_cells_are_paragraphs():
 
 def test_empty_page_no_paragraphs():
     assert texts("<html><head></head><body></body></html>") == []
+
+
+# The whitespace characters most likely to split str.split from the regex
+# \s: the ASCII separators \x1c-\x1f, NEL, no-break space, the line
+# separator and the ideographic space.
+_UNUSUAL_WS = "\x1c\x1d\x1e\x1f\x85\xa0\u2028\u3000"
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.text() | st.text(alphabet=st.sampled_from(list(_UNUSUAL_WS + " \t\nab"))))
+@example(_UNUSUAL_WS + "a" + "b".join(_UNUSUAL_WS) + _UNUSUAL_WS)
+def test_normalize_equals_regex_collapse_and_strip(s):
+    assert _normalize(s) == re.sub(r"\s+", " ", s).strip()

@@ -59,7 +59,6 @@ shared decode-and-extract step (``algo/justext.py``) turns that into a
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
 from html import unescape
 from html.parser import HTMLParser
 
@@ -90,25 +89,28 @@ _VOID_TAGS = frozenset(
      "meta", "param", "source", "track", "wbr"}
 )
 
-_WS_RE = re.compile(r"\s+")
-
 
 def _normalize(text: str) -> str:
-    return _WS_RE.sub(" ", text).strip()
+    r"""Runs of whitespace -> one space, no leading or trailing space.
+    ``str.split``, ``str.strip`` and the regex ``\s`` share one
+    definition of whitespace, so this equals
+    ``re.sub(r"\s+", " ", text).strip()`` without the regex pass."""
+    return " ".join(text.split())
 
 
-@dataclass
 class Paragraph:
     """One segmented block, before classification."""
 
-    dom_path: str
-    heading: bool
-    chunks: list[str] = field(default_factory=list)
-    chars_count_in_links: int = 0
-    tags_count: int = 0  # non-empty inline markup boundaries seen
+    __slots__ = ("dom_path", "heading", "chunks", "chars_count_in_links",
+                 "_text", "_words")
 
-    _text: str | None = None
-    _words: list[str] | None = None
+    def __init__(self, dom_path: str, heading: bool) -> None:
+        self.dom_path = dom_path
+        self.heading = heading
+        self.chunks: list[str] = []
+        self.chars_count_in_links = 0
+        self._text: str | None = None
+        self._words: list[str] | None = None
 
     @property
     def text(self) -> str:
@@ -157,14 +159,6 @@ class _SegmenterCore:
         self._open_counts: dict[str, int] = {}
         self._heading_depth = 0
 
-    # -- stack maintenance ---------------------------------------------------
-    def _push(self, tag: str) -> None:
-        self.stack.append(tag)
-        c = self._open_counts
-        c[tag] = c.get(tag, 0) + 1
-        if tag in _HEADING_TAGS:
-            self._heading_depth += 1
-
     # -- paragraph lifecycle -------------------------------------------------
     def _flush(self) -> None:
         p = self._cur
@@ -173,20 +167,14 @@ class _SegmenterCore:
         self._cur = None
         self._br_pending = False
 
-    def _ensure(self) -> Paragraph:
-        if self._cur is None:
-            path = ".".join(self.stack)
-            self._cur = Paragraph(dom_path=path, heading=self._heading_depth > 0)
-        return self._cur
-
     # -- events ----------------------------------------------------------
+    # Hot path: one call per lexer event, so the stack push and pop and
+    # the paragraph creation are written out inline.
     def handle_starttag(self, tag: str) -> None:
         if tag in _SKIP_CONTENT_TAGS:
             self._flush()
             self._skip_depth += 1
-            self._push(tag)
-            return
-        if tag == "br":
+        elif tag == "br":
             if self._br_pending:
                 self._flush()
             else:
@@ -194,17 +182,19 @@ class _SegmenterCore:
                 if self._cur is not None:
                     self._cur.chunks.append(" ")
             return
-        if tag in _VOID_TAGS:
+        elif tag in _VOID_TAGS:
             return
-        self._push(tag)
-        if tag in PARAGRAPH_TAGS:
+        elif tag in PARAGRAPH_TAGS:
             self._flush()
         else:
             self._br_pending = False
             if tag == "a":
                 self._link_depth += 1
-            if self._cur is not None:
-                self._cur.tags_count += 1
+        self.stack.append(tag)
+        c = self._open_counts
+        c[tag] = c.get(tag, 0) + 1
+        if tag in _HEADING_TAGS:
+            self._heading_depth += 1
 
     def handle_startendtag(self, tag: str) -> None:
         if tag == "br":
@@ -214,28 +204,25 @@ class _SegmenterCore:
             self._flush()
 
     def handle_endtag(self, tag: str) -> None:
-        if tag == "br" or tag in _VOID_TAGS:
-            return
         if tag in _SKIP_CONTENT_TAGS:
             if self._skip_depth > 0:
                 self._skip_depth -= 1
-            self._pop_until(tag)
+        elif tag == "br" or tag in _VOID_TAGS:
             return
-        if tag == "a" and self._link_depth > 0:
-            self._link_depth -= 1
-        if tag in PARAGRAPH_TAGS:
-            self._flush()
-        self._pop_until(tag)
-
-    def _pop_until(self, tag: str) -> None:
+        else:
+            if tag == "a" and self._link_depth > 0:
+                self._link_depth -= 1
+            if tag in PARAGRAPH_TAGS:
+                self._flush()
         # Tolerate malformed nesting: pop to the nearest matching open
         # tag if one exists, else ignore the stray close tag. O(1)
         # membership via the open-tag counts.
-        if not self._open_counts.get(tag):
-            return
         c = self._open_counts
-        while self.stack:
-            t = self.stack.pop()
+        if not c.get(tag):
+            return
+        stack = self.stack
+        while stack:
+            t = stack.pop()
             c[t] -= 1
             if t in _HEADING_TAGS:
                 self._heading_depth -= 1
@@ -245,16 +232,19 @@ class _SegmenterCore:
     def handle_data(self, data: str) -> None:
         if self._skip_depth > 0 or not data:
             return
+        p = self._cur
         if data.isspace():
             # pure whitespace: acts as a separator, never starts a paragraph
-            if self._cur is not None:
-                self._cur.chunks.append(" ")
+            if p is not None:
+                p.chunks.append(" ")
             return
         self._br_pending = False
-        p = self._ensure()
+        if p is None:
+            # a paragraph records its dom path and heading flag at creation
+            p = self._cur = Paragraph(".".join(self.stack), self._heading_depth > 0)
         p.chunks.append(data)
         if self._link_depth > 0:
-            p.chars_count_in_links += len(_WS_RE.sub(" ", data).strip())
+            p.chars_count_in_links += len(_normalize(data))
 
     def handle_markup(self) -> None:
         """Comment, doctype/PI or bogus end tag: no effect here."""
@@ -348,8 +338,8 @@ def _fast_scan(text: str, sink) -> None:  # noqa: ANN001
             data = text[pos:lt]
             on_data(unescape(data) if "&" in data else data)
         pos = m.end()
-        # one C call for all four groups (hot path: one per tag)
-        comment, end, tag, attrs = m.group("comment", "end", "tag", "attrs")
+        # one C call for all four groups, by number (hot path: one per tag)
+        comment, end, tag, attrs = m.group(1, 2, 3, 4)
         if tag is not None:
             tag = tag.lower()
             if end:

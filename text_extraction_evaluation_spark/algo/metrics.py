@@ -7,6 +7,20 @@ overlap"). The LCS mode uses ``difflib.SequenceMatcher`` over token
 sequences (ordered, non-crossing alignment — exactly the matched-block
 semantics the reference's evaluator produced); the bag-of-words mode
 is multiset intersection. Pure Python, zero Spark imports.
+
+``score_texts`` skips both matchers when the answer is known from the
+token lists alone, and each short-cut gives exactly what the matchers
+would, whether the LCS mode is ``SequenceMatcher`` or a true longest
+common subsequence:
+
+* *equal lists*: every matcher matches all ``n`` tokens;
+* *containment*: the shorter list occurs as a contiguous run in the
+  longer one. Then LCS matched = BoW matched = the shorter length
+  ``k``. No common subsequence or sub-multiset is longer than ``k``,
+  and the run itself is one of length ``k``. ``SequenceMatcher``
+  (no junk, ``autojunk=False``) first takes a longest common block.
+  That block has length ``k``, so it covers the whole shorter list and
+  nothing is left to match on either side of it.
 """
 
 from __future__ import annotations
@@ -64,15 +78,27 @@ def bow_matched(retrieved: list[str], relevant: list[str]) -> int:
     return sum(min(n, cg[t]) for t, n in cr.items() if t in cg)
 
 
+def _contains(short: list[str], long: list[str]) -> bool:
+    """True iff ``short`` occurs as a contiguous run in ``long``. One
+    substring test on the space-joined lists, padded with a space at
+    both ends: ``tokens`` splits on whitespace, so no token is empty or
+    holds a space, and a match between padding spaces covers whole
+    tokens only."""
+    return not short or f" {' '.join(short)} " in f" {' '.join(long)} "
+
+
 def score_texts(extracted_text: str, gold_text: str) -> DocScore:
     retrieved = tokens(extracted_text)
     relevant = tokens(gold_text)
-    if retrieved == relevant:
-        # exact-match fast path: SequenceMatcher on identical sequences
-        # yields matched == len, and the multiset intersection equals
-        # len as well — skip both O(n*m) passes (the common case on a
-        # well-extracted corpus).
-        m_lcs = m_bow = len(retrieved)
+    short, long = sorted((retrieved, relevant), key=len)
+    if retrieved == relevant or _contains(short, long):
+        # the two fast paths of the module docstring, exact for
+        # SequenceMatcher and for a true LCS alike: equal lists match
+        # in full, and a shorter list that is a contiguous run of the
+        # longer one matches in full on both measures. They skip both
+        # O(n*m) passes on a well-extracted page and on one whose
+        # extract is a clean slice of gold (or gold of the extract).
+        m_lcs = m_bow = len(short)
     else:
         m_lcs = lcs_matched(retrieved, relevant)
         m_bow = bow_matched(retrieved, relevant)

@@ -6,10 +6,18 @@ feature computation, context-free classification, context-sensitive
 smoothing, text assembly) are intra-document, so the operator is
 perfectly data-parallel: no shuffle, no state across rows.
 
-Scale notes (100 TB design):
-* input is pre-partitioned by url-hash (+ salt for skewed hosts) BEFORE
-  this operator — see ``salted_repartition`` — because AQE cannot
-  rebalance a python-map stage's input after the fact;
+Scale notes:
+* the kernel keeps its input's partitioning, and AQE cannot rebalance
+  a python-map stage's input after the fact. A caller that needs row
+  balance (skewed hosts) repartitions first, with
+  ``salted_repartition``. The pipeline does not: its input is
+  ``latest_crawl``'s url shuffle, which AQE coalesces by bytes, so on
+  the 4-core benchmark host ``ranking``'s extraction stage runs 3
+  tasks (perfbench/README.md, finding 8). That is fine there,
+  because the stage is CPU-bound: each task runs an extraction and a
+  scoring Python worker side by side, which keeps about 4 vCPUs busy,
+  and a row-sized ``repartition(n, "url")`` measured no faster
+  (ROADMAP.md, item 1);
 * ``html`` stays ``BinaryType`` end-to-end JVM-side; bytes are decoded
   only inside the kernel with the pinned deterministic sniff, so no
   JVM re-encoding can break byte parity (BASELINE.json:14);
@@ -74,9 +82,9 @@ def _extraction_kernel(pages: DataFrame, extract_fn) -> DataFrame:
     Python ``bytes`` per row either way (``to_pylist`` on the binary
     column is the same materialization ``to_pandas`` does), but the
     pandas leg adds a DataFrame build + block consolidation on BOTH
-    sides of every batch — measured 5.3 ms vs 1.6 ms per 525-row batch
-    (~7 us/doc, ~4% of the 177 us/doc jusText kernel at 8 busy cores,
-    more at 32 where the copies contend for memory bandwidth). The url/warc_ts/lang columns pass through as the
+    sides of every batch — 5.3 ms vs 1.6 ms per 525-row batch, about
+    7 us/doc (measured on an earlier 32-core host, not re-measured on
+    the 4-core one). The url/warc_ts/lang columns pass through as the
     original Arrow arrays, zero-copy."""
     pruned = pages.select("url", "warc_ts", "html", "lang")
 
@@ -215,10 +223,13 @@ def extract_pages_bte(pages: DataFrame) -> DataFrame:
 def latest_crawl(pages: DataFrame) -> DataFrame:
     """Keep the newest crawl per url (W-dedup; SURVEY.md §2.10).
 
-    row_number over (url, warc_ts desc) — a single shuffle on url; at
-    100 TB this is the one unavoidable wide dependency before
-    extraction and it doubles as the url-hash partitioning the kernel
-    wants, so no extra repartition is needed afterwards.
+    row_number over (url, warc_ts desc) — a single shuffle on url, the
+    one unavoidable wide dependency before extraction. The extraction
+    kernels read its output as partitioned; AQE coalesces the shuffle by
+    bytes, not rows, so on 4 cores ``ranking`` extracts in 3 tasks
+    (perfbench/README.md, finding 8). No repartition follows: the
+    stage is CPU-bound, and a row-sized ``repartition(n, "url")`` here
+    measured no faster on that host (ROADMAP.md, item 1).
     """
     from pyspark.sql.window import Window
 

@@ -62,10 +62,13 @@ def get_spark(
         # AQE coalesces post-shuffle partitions by SHUFFLE BYTES, but a
         # Python-kernel stage costs per-row CPU: with the default 1 MB
         # floor the well-compressed html shuffle collapsed to 16
-        # partitions on 32 cores (half idle + 3x row skew through the
-        # extraction kernel — measured 6.6s -> 4.0s median at sf0.1).
-        # A 64 KB floor lets parallelismFirst keep every core fed while
-        # still merging genuinely tiny partitions.
+        # partitions on an earlier 32-core host (half idle + 3x row skew
+        # through the extraction kernel — 6.6s -> 4.0s median at sf0.1
+        # with this 64 KB floor). The floor does not give every core a
+        # task on a small shuffle: perfbench's ``ranking`` still
+        # extracts in 3 tasks on 4 cores (perfbench/README.md, finding
+        # 8). That stage is CPU-bound, with an extraction and a scoring
+        # worker per task, so about 4 vCPUs stay busy.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
