@@ -1,8 +1,8 @@
 """The extraction job's per-run staging and per-chunk job budget: the
 latest crawl is staged once and released on every exit, a chunk costs
 two Spark jobs (the extraction write and the run_metrics write) with no
-join in its plan, and a resume commits lineage a previous run left
-missing."""
+join in its plan, a resume commits lineage a previous run left
+missing, and a re-run removes what a hard-killed run left staged."""
 
 from __future__ import annotations
 
@@ -133,3 +133,51 @@ def test_resume_commits_missing_run_metrics(spark, latest, tmp_path, monkeypatch
     assert sum(r["n_docs"] for r in rm) == latest.count()
     assert {r["run_id"] for r in rm if r["chunk_id"] in first} == {"first"}
     assert {r["run_id"] for r in rm if r["chunk_id"] not in first} == {"second"}
+
+
+def test_rerun_reclaims_orphans_of_a_killed_run(spark, latest, tmp_path):
+    """A hard kill skips the ``finally`` that removes a run's staged input
+    and the commit-staging directories. The next run of each job removes
+    them before its first write and leaves committed chunks as they were."""
+    import os
+
+    from text_extraction_evaluation_spark.plans.jobs import (
+        ChunkFailure,
+        run_extraction_job,
+        run_score_job,
+    )
+    from text_extraction_evaluation_spark.sources.catalog import LocalCatalog
+    from text_extraction_evaluation_spark.sources.readers import gold_df
+
+    root = str(tmp_path)
+    with pytest.raises(ChunkFailure):
+        run_extraction_job(spark, latest, root, n_buckets=4, buckets_per_chunk=2,
+                           fail_after_chunks=1)
+    cat = LocalCatalog(root)
+    committed = cat.committed_chunks("extracted")
+    assert len(committed) == 1
+    files = {cid: sorted(os.listdir(c["path"])) for cid, c in committed.items()}
+
+    def plant(*parts):
+        path = os.path.join(root, *parts)
+        os.makedirs(path)
+        open(os.path.join(path, "part-0.parquet"), "wb").close()
+        return path
+
+    orphans = [
+        plant("_staged-deadbeef"),
+        plant("extracted", "chunk=b0002-0003.staging-deadbeef"),
+        plant("run_metrics", "chunk=b0002-0003.staging-deadbeef"),
+    ]
+    run_extraction_job(spark, latest, root, n_buckets=4, buckets_per_chunk=2)
+    assert [p for p in orphans if os.path.exists(p)] == []
+    assert {cid: c for cid, c in cat.committed_chunks("extracted").items()
+            if cid in committed} == committed
+    assert {cid: sorted(os.listdir(c["path"])) for cid, c in committed.items()} == files
+    assert cat.read(spark, "extracted").count() == latest.count()
+
+    orphans = [plant("scores", "chunk=full.staging-deadbeef"),
+               plant("report", "chunk=full.staging-deadbeef")]
+    run_score_job(spark, root, gold_df(spark, SF0001))
+    assert [p for p in orphans if os.path.exists(p)] == []
+    assert cat.is_committed("scores", "full") and cat.is_committed("report", "full")

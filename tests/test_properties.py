@@ -53,38 +53,6 @@ def test_shingle_set_matches_naive(words):
     assert len(got) == len(set(got))  # distinct, order-preserving
 
 
-@given(st.integers(1, 10_000), st.sampled_from(["second", "minute", "hour"]), st.booleans())
-@settings(max_examples=100, deadline=None)
-def test_interval_parse_roundtrip(n, unit, plural):
-    from text_extraction_evaluation_spark.streaming.stream import _parse_interval_ms
-
-    s = f"{n} {unit}{'s' if plural else ''}"
-    mult = {"second": 1, "minute": 60, "hour": 3600}[unit]
-    assert _parse_interval_ms(s) == n * mult * 1000
-
-
-@given(st.lists(st.integers(0, 3_600_000), min_size=1, max_size=60), st.integers(1, 600))
-@settings(max_examples=200, deadline=None)
-def test_gap_sessionize_invariants(offsets_s, gap_s):
-    """Pure-python twin of the fold's gap split: sessions partition the
-    events; within-session consecutive gaps <= gap; between-session
-    gaps > gap (on sorted input)."""
-    ts = sorted(offsets_s)
-    sessions: list[list[int]] = []
-    cur: list[int] = []
-    for t in ts:
-        if cur and t - cur[-1] > gap_s:
-            sessions.append(cur)
-            cur = []
-        cur.append(t)
-    sessions.append(cur)
-    assert sum(len(s) for s in sessions) == len(ts)
-    for s in sessions:
-        assert all(b - a <= gap_s for a, b in zip(s, s[1:]))
-    for s1, s2 in zip(sessions, sessions[1:]):
-        assert s2[0] - s1[-1] > gap_s
-
-
 @given(st.integers(1, 10**12))
 @settings(max_examples=300, deadline=None)
 def test_sign_lsh_bits_occupancy_rule(n):

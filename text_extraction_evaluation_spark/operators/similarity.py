@@ -110,17 +110,6 @@ def rp_lsh_buckets(
     return emb.select(id_col, vec_col).mapInPandas(kernel, BUCKET_SCHEMA)
 
 
-def _probe_buckets(bucket: int, n_planes: int, multiprobe: int) -> list[int]:
-    out = [bucket]
-    for d in range(1, multiprobe + 1):
-        for bits in combinations(range(n_planes), d):
-            m = 0
-            for b in bits:
-                m |= 1 << b
-            out.append(bucket ^ m)
-    return out
-
-
 def ann_lsh_topk(
     emb: DataFrame,
     query_ids: list[int],

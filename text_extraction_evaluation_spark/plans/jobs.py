@@ -18,7 +18,9 @@ the committed urls) are written ONCE per run to a parquet directory
 under the catalog root, hash-spread by url to one file per core, so
 the chunks filter the staged rows instead of re-running the scan, the
 latest-crawl window and its shuffle. The directory is removed when the
-run returns or raises. (On a 4-core host an eager
+run returns or raises; the next run removes one that a hard-killed run
+left behind, and the commit-staging directories such a run orphaned,
+before its first write. (On a 4-core host an eager
 ``localCheckpoint()`` of the same rows measured the same within noise,
 slightly slower; the parquet stage also survives a lost executor.)
 
@@ -172,6 +174,12 @@ def run_extraction_job(
 
     cat = LocalCatalog(out_root)
     run_id = run_id or uuid.uuid4().hex[:12]
+    # one driver owns a catalog root at a time (LocalCatalog), so before
+    # the first write whatever a hard-killed run left staged is an orphan
+    for orphan in cat.root.glob("_staged-*"):
+        shutil.rmtree(orphan, ignore_errors=True)
+    cat.vacuum("extracted")
+    cat.vacuum("run_metrics")
     _backfill_run_metrics(spark, cat)
 
     pending: list[tuple[list[int], str]] = []
@@ -298,6 +306,9 @@ def run_score_job(
     from ..operators.score import score_extracted
 
     cat = LocalCatalog(out_root)
+    # orphans of a hard-killed run, as in run_extraction_job
+    cat.vacuum("scores")
+    cat.vacuum("report")
     extracted = read_extracted(spark, out_root)
     if extracted is None:
         raise RuntimeError(f"no committed extraction output under {out_root}")

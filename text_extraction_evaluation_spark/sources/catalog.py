@@ -320,11 +320,6 @@ class LocalCatalog:
                 self._store_manifest(table, manifest)
         return removed
 
-    def drop(self, table: str) -> None:
-        import shutil
-
-        shutil.rmtree(self.root / table, ignore_errors=True)
-
 
 def _scan(spark: SparkSession, chunks: list[dict[str, Any]]) -> DataFrame:
     """Read committed chunks, typed by their recorded schema when every

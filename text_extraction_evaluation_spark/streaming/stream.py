@@ -4,8 +4,11 @@ The reference is pure batch and the 10^12-row rebuild is batch with
 resumable chunks — but because the extraction kernel is stateless per
 row, it lifts unchanged into Structured Streaming: a parquet-directory
 stream of pages -> the same ``extract_pages`` kernel -> append sink
-with checkpointing. This module is that lift, plus a watermarked
-windowed quality aggregate as the stateful example.
+with checkpointing. This module is that lift and the page streams
+around it: url dedup within a watermark, stream-static scoring against
+the gold table, and two watermarked windowed aggregates (micro-F1
+token counters and extraction status counts). Each has a batch twin
+built from the same operators, which the tests compare it against.
 
 Use case at scale: continuous extraction of newly-landed crawl
 segments (file-arrival stream on the pages table location).
@@ -16,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import EXTRACT_SCHEMA, extract_pages
+from ..operators.extract import extract_pages
 from ..sources.readers import PAGES_SCHEMA
 
 
@@ -112,371 +115,3 @@ def windowed_status_counts(pages_stream: DataFrame, watermark: str = "1 hour"):
         .groupBy(F.window("warc_ts", "10 minutes"), "status")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
-
-
-SESSION_STATE_SCHEMA = "n_events long, t_first timestamp, t_last timestamp"
-SESSION_OUT_SCHEMA = (
-    "user_id long, session_events long, t_first timestamp, t_last timestamp, "
-    "closed boolean"
-)
-
-
-def _parse_interval_ms(interval: str | int) -> int:
-    """'N seconds|minutes|hours' (or an int of seconds) -> milliseconds.
-    Raises ValueError for anything else — a silently-coerced gap would
-    sessionize wrongly with no error."""
-    import re
-
-    if isinstance(interval, int):
-        return interval * 1000
-    m = re.fullmatch(r"\s*(\d+)\s+(second|minute|hour)s?\s*", interval)
-    if not m:
-        raise ValueError(
-            f"unsupported interval {interval!r}; use 'N seconds', "
-            "'N minutes', 'N hours', or an int of seconds"
-        )
-    n, unit = int(m.group(1)), m.group(2)
-    return n * {"second": 1, "minute": 60, "hour": 3600}[unit] * 1000
-
-
-def sessionize_events_stream(
-    events_stream: DataFrame,
-    gap: str | int = "30 minutes",
-    watermark: str = "1 hour",
-):
-    """Custom stateful streaming operator via ``applyInPandasWithState``
-    (the build-brief surface for operators Spark's built-in windowed
-    aggregates can't express): per-user GAP sessionization.
-
-    State per user_id = the open session (event count, first ts, last
-    ts). Each micro-batch folds its events in event-time order: an
-    event more than ``gap`` after the open session's last event CLOSES
-    that session (emitted with closed=true) and starts a new one — so
-    two bursts inside one batch split exactly like the batch twin
-    ``q_event_sessions`` (lag + cumulative sum) splits them. An event
-    at or before the open session's last timestamp (late but inside
-    the watermark) folds into the open session. The state's event-time
-    timeout is anchored at max(last event, watermark) + gap — session
-    closing tracks the EVENT-TIME gap, not arrival quiescence — and
-    emits the final closed row; a live progress row (closed=false) is
-    emitted each batch.
-
-    Arrival-order contract (standard for watermarked stateful ops):
-    rows older than ``watermark`` behind the stream's max event time
-    are dropped by Spark before reaching the state function. Replaying
-    an unordered historical dump through this operator loses events;
-    use the batch twin for backfills, this operator for live tails.
-    tests/test_streaming.py asserts the batch twin equivalence on
-    ordered input.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_ms = _parse_interval_ms(gap)
-
-    def fold(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        (user_id,) = key
-        cols = ["user_id", "session_events", "t_first", "t_last", "closed"]
-        if state.hasTimedOut:
-            n, t_first, t_last = state.get
-            state.remove()
-            yield pd.DataFrame([(user_id, n, t_first, t_last, True)], columns=cols)
-            return
-        had_state = state.exists
-        n, t_first, t_last = state.get if had_state else (0, None, None)
-        rows = []
-        # pd.notna, not `is not None`: null timestamps in a datetime64
-        # Series iterate as pd.NaT, whose epoch math would fabricate an
-        # ancient event and a bogus session split
-        ts_sorted = sorted(
-            t for pdf in pdfs if len(pdf) for t in pdf["ts"] if pd.notna(t)
-        )
-        # gap compares FLOORED epoch seconds — the exact rule of the
-        # batch twin (floor(epoch(ts)) - floor(epoch(lag)) > gap)
-        gap_sec = gap_ms // 1000
-
-        def esec(t) -> int:
-            # state round-trips restore datetime.datetime, in-batch rows
-            # are pandas Timestamps — normalize before epoch math
-            return int(pd.Timestamp(t).value // 1_000_000_000)
-
-        for t in ts_sorted:
-            if t_last is None:
-                n, t_first, t_last = 1, t, t
-            elif esec(t) - esec(t_last) <= gap_sec:
-                # in-session (covers late rows with t <= t_last too)
-                n += 1
-                t_first = min(t_first, t)
-                t_last = max(t_last, t)
-            else:
-                rows.append((user_id, n, t_first, t_last, True))
-                n, t_first, t_last = 1, t, t
-        if not had_state and t_last is None:
-            # every row in this batch had a null ts and there is no
-            # open session: updating state here would emit a bogus
-            # progress row and later a closed session with 0 events
-            # and null timestamps (ADVICE r2)
-            return
-        state.update((n, t_first, t_last))
-        # event-time gap anchor: the session closes gap after its LAST
-        # EVENT (never before the watermark — Spark requires timeout
-        # timestamps beyond the current watermark)
-        t_last_ms = (
-            int(pd.Timestamp(t_last).value // 1_000_000) if t_last is not None else 0
-        )
-        state.setTimeoutTimestamp(
-            max(t_last_ms, state.getCurrentWatermarkMs()) + gap_ms
-        )
-        rows.append((user_id, n, t_first, t_last, False))
-        yield pd.DataFrame(rows, columns=cols)
-
-    return (
-        events_stream.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fold,
-            outputStructType=SESSION_OUT_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-HH_OUT_SCHEMA = "grp int, seq int, term string, est bigint, err bigint"
-HH_STATE_SCHEMA = (
-    "seq int, terms array<string>, counts array<long>, errs array<long>"
-)
-
-
-def attribute_purchases_stream(
-    events_stream: DataFrame,
-    attribution_window: str | int = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """STREAM-STREAM interval join (the one Structured Streaming join
-    shape the other operators here don't exercise): click→purchase
-    attribution — every (click, purchase) pair for the same user where
-    the purchase lands within ``attribution_window`` AFTER the click.
-
-    Both sides carry an event-time watermark and the join condition is
-    equality on user plus a bounded time range, which is exactly what
-    Spark needs to run it as a StreamingSymmetricHashJoin with BOUNDED
-    state: a click can be evicted once the purchase-side watermark
-    passes click_ts + window, a purchase once the click-side watermark
-    passes purchase_ts — state never grows with stream length. At
-    scale both sides hash-partition on user_id, so each pair is
-    resolved executor-locally.
-
-    Same arrival-order contract as the sessionizer: rows later than
-    ``watermark`` behind max event time may be dropped/evicted, so
-    historical backfills belong to the batch twin (the identical join
-    on static DataFrames — tests/test_streaming.py asserts equality on
-    an ordered replay)."""
-    win_s = _parse_interval_ms(attribution_window) // 1000
-    clicks = (
-        events_stream.filter(F.col("event_type") == "click")
-        .select(
-            "user_id",
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        events_stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    cond = F.expr(
-        "user_id = p_user AND purchase_ts >= click_ts "
-        f"AND purchase_ts <= click_ts + INTERVAL {win_s} SECONDS"
-    )
-    return clicks.join(purchases, cond, "inner").select(
-        "user_id",
-        "purchase_id",
-        "purchase_ts",
-        "purchase_value",
-        "click_id",
-        "click_ts",
-    )
-
-
-def heavy_hitters_stream(
-    terms_stream: DataFrame, capacity: int = 16, groups: int = 8
-) -> DataFrame:
-    """Streaming heavy hitters via the SPACE-SAVING sketch (Metwally,
-    Agrawal & El Abbadi 2005) as a custom stateful operator — the
-    bounded-state frequency tracker for an unbounded term stream,
-    complementing the batch ``heavy_hitters_cms`` query.
-
-    The term space partitions DISJOINTLY by hash into ``groups``
-    state keys, so each group's sketch tracks only its own terms and
-    the union of group candidates is the global candidate set. State
-    per group is at most ``capacity`` counters (term, est, err):
-    a batch's term counts fold in deterministically (sorted order);
-    a new term beyond capacity evicts the minimum counter (ties on
-    term) and inherits its count as overestimation error — giving the
-    classic guarantees ``est >= true >= est - err`` and every term
-    with true count > N_group/capacity is retained. Total state is
-    bounded by groups*capacity rows forever, regardless of stream
-    length.
-
-    Each micro-batch emits the group's full current counter table
-    tagged with a per-group ``seq`` number (progress rows, append
-    mode); the final table per group is its max-seq emission.
-    tests/test_streaming.py replays a finite corpus and checks the
-    retention + error-bound guarantees against exact batch counts."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def fold(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        (grp,) = key
-        seq, counters = 0, {}
-        if state.exists:
-            seq, ts_, cs, es = state.get
-            counters = {t: [c, e] for t, c, e in zip(ts_, cs, es)}
-        batch: dict[str, int] = {}
-        for pdf in pdfs:
-            for t in pdf["term"]:
-                batch[t] = batch.get(t, 0) + 1
-        for term in sorted(batch):
-            cnt = batch[term]
-            if term in counters:
-                counters[term][0] += cnt
-            elif len(counters) < capacity:
-                counters[term] = [cnt, 0]
-            else:
-                mt = min(counters, key=lambda t: (counters[t][0], t))
-                mc = counters[mt][0]
-                del counters[mt]
-                counters[term] = [mc + cnt, mc]
-        seq += 1
-        items = sorted(counters.items())
-        state.update(
-            (
-                seq,
-                [t for t, _ in items],
-                [c for _, (c, _e) in items],
-                [e for _, (_c, e) in items],
-            )
-        )
-        yield pd.DataFrame(
-            [(grp, seq, t, c, e) for t, (c, e) in items],
-            columns=["grp", "seq", "term", "est", "err"],
-        )
-
-    keyed = terms_stream.withColumn(
-        "grp", F.pmod(F.xxhash64("term"), F.lit(groups)).cast("int")
-    )
-    return keyed.groupBy("grp").applyInPandasWithState(
-        fold,
-        outputStructType=HH_OUT_SCHEMA,
-        stateStructType=HH_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-SCD2_OUT_SCHEMA = (
-    "url string, host string, version_no int, raw_h string, "
-    "ep_from long, ep_to long, closed boolean"
-)
-SCD2_STATE_SCHEMA = "version_no int, raw_h string, ep_from long, host string"
-
-
-def scd2_pages_stream(pages_stream: DataFrame) -> DataFrame:
-    """STREAMING SCD-2 maintenance: the live twin of
-    ``operators.temporal.merge_scd2_increment`` — per-url state holds
-    the OPEN version (version_no, raw_h, ep_from); each micro-batch
-    emits every newly-CLOSED interval (closed=true) plus one progress
-    row for the current open version (closed=false). Closed rows +
-    the latest progress row per url reconstruct exactly the batch
-    ``build_scd2`` table on ordered replay
-    (tests/test_streaming.py::test_scd2_stream_equals_batch_twin,
-    with the crawl history split across micro-batches so state
-    genuinely crosses batch boundaries).
-
-    Same event-time contract as the batch merge: a row at or before
-    the open version's ``ep_from`` is a late history rewrite and is
-    dropped; a recrawl whose bytes did not change is a no-op (no new
-    version). Epochs are floored seconds, the repo-wide convention.
-
-    State contract: one small fixed-width row per url that never
-    expires — SCD-2 keeps every url's current version forever, so
-    this operator's memory is O(#urls), NOT bounded by a watermark
-    horizon. At 10^12 urls you run it per crawl-shard (url-hash
-    partitioned checkpoint) or periodically flush the state into the
-    catalog and reseed via the batch merge — the documented
-    batch/stream split, same stance as the sessionizer's backfill
-    note."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    keyed = pages_stream.select(
-        "url",
-        F.regexp_extract("url", r"^http://([^/]+)/", 1).alias("host"),
-        "warc_ts",
-        F.md5("html").alias("raw_h"),
-    )
-
-    def fold(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        (url,) = key
-        cols = [
-            "url", "host", "version_no", "raw_h", "ep_from", "ep_to", "closed",
-        ]
-        if state.exists:
-            vno, cur_h, ep_from, host = state.get
-        else:
-            vno, cur_h, ep_from, host = 0, None, None, None
-        rows: list[tuple] = []
-        batch = sorted(
-            (
-                (int(pd.Timestamp(t).value // 1_000_000_000), h, hs)
-                for pdf in pdfs
-                if len(pdf)
-                for t, h, hs in zip(pdf["warc_ts"], pdf["raw_h"], pdf["host"])
-                if pd.notna(t)
-            ),
-        )
-        for ep, h, hs in batch:
-            if cur_h is None:
-                vno, cur_h, ep_from, host = 1, h, ep, hs
-            elif ep > ep_from and h != cur_h:
-                rows.append((url, host, vno, cur_h, ep_from, ep, True))
-                vno, cur_h, ep_from = vno + 1, h, ep
-            # else: late rewrite or byte-identical recrawl -> no-op
-        if cur_h is None:
-            return  # every row was null-ts and no prior state
-        state.update((vno, cur_h, ep_from, host))
-        rows.append((url, host, vno, cur_h, ep_from, None, False))
-        yield pd.DataFrame(rows, columns=cols)
-
-    return keyed.groupBy("url").applyInPandasWithState(
-        fold,
-        outputStructType=SCD2_OUT_SCHEMA,
-        stateStructType=SCD2_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-__all__ = [
-    "EXTRACT_SCHEMA",
-    "read_pages_stream",
-    "extract_stream",
-    "start_extraction_stream",
-    "dedup_pages_stream",
-    "windowed_status_counts",
-    "sessionize_events_stream",
-    "heavy_hitters_stream",
-    "scd2_pages_stream",
-]
