@@ -42,13 +42,11 @@ def test_recorded_schema_read_matches_legacy_read(spark, tmp_path):
     assert all("schema" in c for c in cat.committed_chunks("t").values())
     typed = cat.read(spark, "t")
     typed_rows, typed_schema = _rows(typed), typed.schema
-    typed_diff = _rows(cat.read_diff(spark, "t", 1, 3))
 
     _strip_schemas(cat, "t")
     legacy = cat.read(spark, "t")
     assert _rows(legacy) == typed_rows
     assert legacy.schema == typed_schema
-    assert _rows(cat.read_diff(spark, "t", 1, 3)) == typed_diff
     assert len(typed_rows) == 15
 
 
@@ -57,16 +55,7 @@ def test_read_with_recorded_schema_launches_no_job(spark, tmp_path):
     _commit_chunks(spark, cat)
     with spark_job_ids(spark) as jobs:
         cat.read(spark, "t")
-        cat.read(spark, "t", as_of=2)
-        cat.read_diff(spark, "t", 1, 3)
     assert jobs == []
-
-    # a compacted chunk records its schema too
-    assert cat.compact(spark, "t", "compacted-1")
-    with spark_job_ids(spark) as jobs:
-        df = cat.read(spark, "t")
-    assert jobs == []
-    assert len(df.collect()) == 15
 
     # legacy manifest: the read falls back to footer inference
     _strip_schemas(cat, "t")

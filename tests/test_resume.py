@@ -105,29 +105,6 @@ def test_rerun_is_idempotent_noop(spark, pages, tmp_path_factory):
     assert before == after  # same commits, same timestamps: nothing re-ran
 
 
-def test_time_travel_reads_commit_prefix(spark, pages, tmp_path_factory):
-    """read(as_of=k) sees exactly the first k commits — the
-    LocalCatalog analogue of Iceberg VERSION AS OF."""
-    from text_extraction_evaluation_spark.plans.jobs import run_extraction_job
-    from text_extraction_evaluation_spark.sources.catalog import LocalCatalog
-
-    root = str(tmp_path_factory.mktemp("run_tt"))
-    run_extraction_job(spark, pages, root, n_buckets=8, buckets_per_chunk=2)
-    cat = LocalCatalog(root)
-    full = cat.read(spark, "extracted").count()
-    counts = [cat.read(spark, "extracted", as_of=k).count() for k in range(1, 5)]
-    assert counts[-1] == full
-    assert all(a < b for a, b in zip(counts, counts[1:]))  # strictly growing
-    assert cat.read(spark, "extracted", as_of=0) is None
-    # as_of=k row set == union of the first k committed chunk files
-    ordered = sorted(
-        cat.committed_chunks("extracted").values(),
-        key=lambda c: c["committed_at_unix"],
-    )
-    two = spark.read.parquet(*[c["path"] for c in ordered[:2]]).count()
-    assert cat.read(spark, "extracted", as_of=2).count() == two
-
-
 def test_run_metrics_lineage(spark, pages, tmp_path_factory):
     from text_extraction_evaluation_spark.plans.jobs import run_extraction_job
     from text_extraction_evaluation_spark.sources.catalog import LocalCatalog
@@ -165,9 +142,9 @@ def test_run_metrics_span_a_single_batch(spark, pages, tmp_path_factory):
 
 def test_four_in_flight_failure_manifest_consistent(spark, pages, tmp_path_factory):
     """>=4 chunks in flight with an injected mid-flight failure: the
-    manifest must stay consistent (unique commit seqs, every committed
-    path readable), fail-fast must cancel the queued tail, and a
-    concurrent resume must complete to the exact single-run output."""
+    manifest must stay consistent (every committed path readable),
+    fail-fast must cancel the queued tail, and a concurrent resume must
+    complete to the exact single-run output."""
     from text_extraction_evaluation_spark.plans.jobs import (
         ChunkFailure,
         read_extracted,
@@ -184,8 +161,6 @@ def test_four_in_flight_failure_manifest_consistent(spark, pages, tmp_path_facto
     # the 3 counted commits are durable; fail-fast cancelled the queued
     # tail (in-flight chunks may still land — never all 8)
     assert 3 <= len(committed) < 8
-    seqs = [c["seq"] for c in committed.values()]
-    assert len(set(seqs)) == len(seqs)  # commit sequence has no ties
     for c in committed.values():
         assert spark.read.parquet(c["path"]).count() > 0  # no torn chunk
 
@@ -232,28 +207,3 @@ def test_vacuum_reclaims_orphan_staging_only(spark, pages, tmp_path_factory):
     assert set(cat.committed_chunks("extracted")) == before
     for c in cat.committed_chunks("extracted").values():
         assert spark.read.parquet(c["path"]).count() > 0
-
-
-def test_read_diff_is_incremental_append_scan(spark, pages, tmp_path_factory):
-    """read_diff(from, to) == the rows added in that commit window:
-    diffs partition the table (prefix + diff == larger prefix), the
-    full-range diff equals the full table, and empty/invalid windows
-    return None — the change-data feed a downstream consumer tails."""
-    from text_extraction_evaluation_spark.plans.jobs import run_extraction_job
-    from text_extraction_evaluation_spark.sources.catalog import LocalCatalog
-
-    root = str(tmp_path_factory.mktemp("run_diff"))
-    run_extraction_job(spark, pages, root, n_buckets=8, buckets_per_chunk=2)
-    cat = LocalCatalog(root)
-    n_commits = len(cat.committed_chunks("extracted"))
-    assert n_commits >= 3
-    full = cat.read(spark, "extracted").count()
-
-    assert cat.read_diff(spark, "extracted", 0, n_commits).count() == full
-    for k in range(1, n_commits):
-        prefix = cat.read(spark, "extracted", as_of=k).count()
-        nxt = cat.read(spark, "extracted", as_of=k + 1).count()
-        assert cat.read_diff(spark, "extracted", k, k + 1).count() == nxt - prefix
-    assert cat.read_diff(spark, "extracted", 2, 2) is None
-    assert cat.read_diff(spark, "extracted", 3, 2) is None
-    assert cat.read_diff(spark, "extracted", n_commits, n_commits + 5) is None

@@ -201,39 +201,6 @@ def test_kmeans_embeddings_converges_and_stays_mapside(spark):
     assert "Exchange hashpartitioning(vec_id" not in plan
 
 
-def test_ivf_index_persist_and_probe_equals_fresh(spark, tmp_path):
-    """Index lifecycle: build-once/probe-many must equal the fresh
-    train-and-probe path exactly, re-build must be an idempotent no-op,
-    and probing an empty catalog must fail loudly."""
-    import pytest as _pytest
-
-    from text_extraction_evaluation_spark.operators.index import (
-        build_kmeans_index,
-        ivf_topk_with_index,
-        load_kmeans_index,
-    )
-    from text_extraction_evaluation_spark.plans.queries import ann_ivf_kmeans_topk
-
-    sf = SF0001
-    root = str(tmp_path / "idx")
-    with _pytest.raises(ValueError):
-        ivf_topk_with_index(spark, sf, root)
-
-    assert build_kmeans_index(spark, sf, root) is True
-    assert build_kmeans_index(spark, sf, root) is False  # idempotent
-
-    got = {
-        (r["query_id"], r["neighbor_id"]): (r["nn_rank"], r["cos_sim"])
-        for r in ivf_topk_with_index(spark, sf, root).collect()
-    }
-    want = {
-        (r["query_id"], r["neighbor_id"]): (r["nn_rank"], r["cos_sim"])
-        for r in ann_ivf_kmeans_topk(spark, sf).collect()
-    }
-    assert got == want
-    assert load_kmeans_index(spark, root).count() > 0
-
-
 def test_dim_truncation_recall_bounds_and_numpy_twin(spark):
     """Truncated-prefix recall@5: bounded, 10 query rows, and the
     truncated top-5 neighbor sets equal a numpy recomputation of

@@ -2,18 +2,23 @@
 
 BASELINE.json:14 requires resumable runs over an Iceberg table with
 per-partition lineage. No Iceberg runtime jar exists in this sandbox
-(SURVEY.md Appendix C), so the catalog abstracts the two properties the
-pipeline actually relies on and implements them on plain parquet dirs:
+(SURVEY.md Appendix C), so the catalog implements the three operations
+the pipeline uses on plain parquet dirs, and nothing else:
 
-1. **atomic append commits**: a chunk directory becomes visible only
-   when the JSON manifest is atomically replaced (tmp + os.replace) —
-   readers never see partial writes, re-running a failed chunk is
-   idempotent (same chunk_id -> skip);
-2. **snapshot reads**: ``read()`` loads exactly the committed chunk
+1. **atomic append commits** (``commit_append``): a chunk directory
+   becomes visible only when the JSON manifest is atomically replaced
+   (tmp + os.replace) — readers never see partial writes, re-running a
+   failed chunk is idempotent (same chunk_id -> skip);
+2. **snapshot reads** (``read``): loads exactly the committed chunk
    paths from the manifest, never a directory listing. Each commit
    records its chunk's schema in the manifest, so a read is typed from
    the manifest and launches no parquet-footer inference job (legacy
-   chunks without a recorded schema fall back to inference).
+   chunks without a recorded schema fall back to inference);
+3. **orphan cleanup** (``vacuum``): removes the staging dirs that a
+   hard-killed commit left behind.
+
+Opening a catalog creates nothing on disk; the first commit creates
+the table's directory.
 
 Swapping in Iceberg later = replacing this class with
 ``df.writeTo(table).append()`` + snapshot reads; call sites are
@@ -36,7 +41,6 @@ from pyspark.sql.types import StructType
 class LocalCatalog:
     def __init__(self, root: str | os.PathLike) -> None:
         self.root = Path(root)
-        self.root.mkdir(parents=True, exist_ok=True)
         # serializes the manifest read-modify-write for concurrent chunk
         # commits from one driver (plans/jobs.py thread pool). Scope is
         # per-process by design: Iceberg's optimistic-concurrency commit
@@ -126,15 +130,8 @@ class LocalCatalog:
             # is safe
             shutil.rmtree(path, ignore_errors=True)
             os.replace(staging, path)
-            # monotonic commit sequence: wall-clock alone cannot order
-            # two commits inside one clock tick (concurrent chunks) or
-            # across a clock step — time travel sorts on seq
-            seq = 1 + max(
-                (c.get("seq", 0) for c in manifest["chunks"].values()), default=0
-            )
             manifest["chunks"][chunk_id] = {
                 "path": path,
-                "seq": seq,
                 "committed_at_unix": time.time(),
                 **(meta or {}),
             }
@@ -161,164 +158,13 @@ class LocalCatalog:
                 removed.append(str(p))
         return removed
 
-    def read(
-        self, spark: SparkSession, table: str, as_of: int | None = None
-    ) -> DataFrame | None:
-        """Snapshot read of committed chunks (None if no commits).
-
-        ``as_of=k`` reads the table AS OF its k-th commit (time travel
-        on commit order — the LocalCatalog analogue of Iceberg's
-        ``VERSION AS OF``): only chunks committed by version k AND not
-        retired by a compaction at or before version k are visible —
-        exactly what a reader at that point saw, because the manifest
-        is replaced atomically per commit. Pre-compaction versions
-        read the original chunks until ``expire_retired``."""
-        ordered = self._ordered_chunks(table)
-        if as_of is None:
-            vis = [c for c, _eff in ordered if "retired_seq" not in c]
-        else:
-            vis = [
-                c
-                for c, eff in ordered
-                if eff <= as_of and c.get("retired_seq", as_of + 1) > as_of
-            ]
-        if not vis:
+    def read(self, spark: SparkSession, table: str) -> DataFrame | None:
+        """Snapshot read of the committed chunks, in the order the
+        manifest lists them (None if no commits)."""
+        chunks = list(self.committed_chunks(table).values())
+        if not chunks:
             return None
-        return _scan(spark, vis)
-
-    def _ordered_chunks(self, table: str) -> list[tuple[dict[str, Any], int]]:
-        """Committed chunks in commit order, each with its EFFECTIVE
-        version number: the stored monotonic ``seq``, or the 1-based
-        commit position for legacy manifests written before seq."""
-        chunks = self.committed_chunks(table)
-        ordered = sorted(
-            chunks.values(),
-            key=lambda c: (c.get("seq", 0), c["committed_at_unix"]),
-        )
-        return [(c, c.get("seq", i + 1)) for i, c in enumerate(ordered)]
-
-    def read_diff(
-        self, spark: SparkSession, table: str, from_version: int, to_version: int
-    ) -> DataFrame | None:
-        """Incremental snapshot diff: the rows ADDED between commit
-        ``from_version`` (exclusive) and ``to_version`` (inclusive) —
-        the LocalCatalog analogue of Iceberg's incremental append scan
-        (``start-snapshot-id``/``end-snapshot-id``). Because chunks are
-        append-only and immutable once committed, the diff is exactly
-        the chunk files in that commit-order window — no row-level
-        comparison, no read of the earlier snapshot. This is the
-        change-data feed a downstream consumer (index refresh,
-        incremental dedup, mix rebuild) tails instead of re-reading
-        the table. Compaction chunks are SKIPPED — a rewrite adds no
-        rows, so the feed must not replay them (Iceberg's incremental
-        append scan makes the same exclusion for replace snapshots).
-        Returns None if the window holds no chunks."""
-        if to_version <= from_version:
-            return None
-        window = [
-            c
-            for c, eff in self._ordered_chunks(table)
-            if from_version < eff <= to_version and "compacted_from" not in c
-        ]
-        if not window:
-            return None
-        return _scan(spark, window)
-
-    def compact(
-        self,
-        spark: SparkSession,
-        table: str,
-        chunk_id: str,
-        chunk_ids: list[str] | None = None,
-        n_output_files: int = 1,
-    ) -> bool:
-        """Rewrite committed chunks into one compacted chunk — the
-        LocalCatalog analogue of Iceberg's ``rewrite_data_files``
-        (small-file compaction). Long-running chunked jobs accrete many
-        small parquet dirs; readers pay per-file open cost, so
-        maintenance rewrites them into few large files WITHOUT changing
-        table contents or destroying history:
-
-        * the rewrite targets a FIXED chunk set (``chunk_ids``, default
-          = the chunks live when the call started) — chunks committed
-          concurrently with the rewrite are untouched and stay live;
-        * the swap is ONE atomic manifest replace: readers see either
-          all originals or the compacted chunk, never both;
-        * retired chunks keep their files and manifest entries (with
-          ``retired_seq``) so ``read(as_of=...)`` of pre-compaction
-          versions still works — until ``expire_retired`` (the
-          ``expire_snapshots`` analogue) reclaims them;
-        * ``read_diff`` skips compaction chunks: a rewrite adds no
-          rows, so the change-data feed must not replay them.
-
-        Returns False (no-op) when fewer than 2 target chunks exist or
-        the output chunk_id is taken."""
-        import shutil
-        import uuid
-
-        live = {
-            cid: c
-            for cid, c in self.committed_chunks(table).items()
-            if "retired_seq" not in c
-        }
-        targets = sorted(chunk_ids) if chunk_ids is not None else sorted(live)
-        targets = [cid for cid in targets if cid in live]
-        if len(targets) < 2 or chunk_id in self.committed_chunks(table):
-            return False
-        df = _scan(spark, [live[cid] for cid in targets])
-        path = self.chunk_path(table, chunk_id)
-        staging = f"{path}.staging-{uuid.uuid4().hex}"
-        try:
-            df.coalesce(n_output_files).write.mode("overwrite").parquet(staging)
-            with self._commit_lock:
-                manifest = self._load_manifest(table)
-                if chunk_id in manifest["chunks"]:
-                    return False
-                # a target retired/vacuumed since the read started
-                # would make the rewrite stale — abort, caller retries
-                for cid in targets:
-                    c = manifest["chunks"].get(cid)
-                    if c is None or "retired_seq" in c:
-                        return False
-                shutil.rmtree(path, ignore_errors=True)
-                os.replace(staging, path)
-                seq = 1 + max(
-                    (c.get("seq", 0) for c in manifest["chunks"].values()),
-                    default=0,
-                )
-                for cid in targets:
-                    manifest["chunks"][cid]["retired_seq"] = seq
-                manifest["chunks"][chunk_id] = {
-                    "path": path,
-                    "seq": seq,
-                    "committed_at_unix": time.time(),
-                    "compacted_from": targets,
-                    "schema": df.schema.json(),
-                }
-                self._store_manifest(table, manifest)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        return True
-
-    def expire_retired(self, table: str) -> list[str]:
-        """Drop retired (compacted-away) chunks: delete their data dirs
-        and manifest entries — the ``expire_snapshots`` analogue.
-        Pre-compaction ``as_of`` versions become unreadable (they
-        return the post-compaction visible set instead), exactly the
-        trade Iceberg makes. Returns the removed chunk paths."""
-        import shutil
-
-        removed: list[str] = []
-        with self._commit_lock:
-            manifest = self._load_manifest(table)
-            for cid in sorted(manifest["chunks"]):
-                if "retired_seq" in manifest["chunks"][cid]:
-                    c = manifest["chunks"].pop(cid)
-                    shutil.rmtree(c["path"], ignore_errors=True)
-                    removed.append(c["path"])
-            if removed:
-                self._store_manifest(table, manifest)
-        return removed
+        return _scan(spark, chunks)
 
 
 def _scan(spark: SparkSession, chunks: list[dict[str, Any]]) -> DataFrame:
