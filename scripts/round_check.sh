@@ -5,7 +5,10 @@
 #   2. the benchmark's helper tests (perfbench/tests, ~2 s, no Spark),
 #   3. the full registry sweep vs the DuckDB oracle at sf0.01 (the entry
 #      count it ran is printed at the end),
-# and then prints the package's .py line count and the tier-1 test count.
+# and then prints the package's .py line count, the tier-1 test count and
+# the dead-code scan (the verify skill's deleting-code step 0): every
+# top-level def/class outside the query registry that only its own
+# definition line and tests/ name.
 # Any failure stops the chain with a non-zero exit.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -29,3 +32,16 @@ echo "ROUND CHECK: all green (registry sweep ran ${ran#*/} entries)"
 pkg_lines="$(find text_extraction_evaluation_spark -name '*.py' -print0 | xargs -0 cat | wc -l)"
 n_tests="$(python -m pytest tests/ -q --collect-only -p no:cacheprovider | tail -n 1)"
 echo "SIZE: package ${pkg_lines} .py lines; tier-1 ${n_tests}"
+
+# step-0 scan: "<hits in own file> <file> <name>" for each top-level name
+# nothing outside its own file names except tests; 1 hit = only the
+# definition, so only tests reach it (no pipefail: grep -q may close the
+# pipe early)
+dead="$(set +o pipefail; for f in $(find text_extraction_evaluation_spark -name '*.py' ! -name 'q_*.py' ! -name sql_relational.py); do
+  { grep -oP '^(def|class) \K\w+' "$f" || true; } | while read -r n; do
+    grep -rlw --include=*.py "$n" text_extraction_evaluation_spark scripts perfbench bench.py oracle __spark_entry__.py \
+      | grep -qvx "$f" || echo "$(grep -cw "$n" "$f") $f $n"
+  done
+done | awk '$1 == 1 { print $2 " " $3 }' | sort)"
+echo "DEAD: $(printf '%s' "$dead" | grep -c . || true) names only tests reach"
+[ -z "$dead" ] || printf '%s\n' "$dead"

@@ -11,8 +11,31 @@ from pyspark.sql import functions as F
 from tests.conftest import SF0001
 from text_extraction_evaluation_spark.operators.align import (
     crawl_span_churn,
-    crawl_span_churn_join_twin,
+    recrawled_pair,
 )
+from text_extraction_evaluation_spark.operators.extract import extract_spans
+
+
+def crawl_span_churn_join_twin(pages):
+    """JVM-only recomputation of the same census: per (url, text)
+    counts on each side, full-outer join, least() for the multiset
+    intersection — no Python past the span kernel."""
+    old, new = recrawled_pair(pages)
+    ca = extract_spans(old).groupBy("url", "text").agg(F.count(F.lit(1)).alias("ca"))
+    cb = extract_spans(new).groupBy("url", "text").agg(F.count(F.lit(1)).alias("cb"))
+    j = ca.join(cb, ["url", "text"], "full_outer").select(
+        "url",
+        F.coalesce("ca", F.lit(0)).alias("ca"),
+        F.coalesce("cb", F.lit(0)).alias("cb"),
+    )
+    common = F.sum(F.least("ca", "cb"))
+    return j.groupBy("url").agg(
+        F.sum("ca").alias("n_spans_old"),
+        F.sum("cb").alias("n_spans_new"),
+        common.alias("n_common"),
+        (F.sum("cb") - common).alias("n_added"),
+        (F.sum("ca") - common).alias("n_removed"),
+    )
 
 
 @pytest.fixture(scope="module")

@@ -207,3 +207,34 @@ def test_vacuum_reclaims_orphan_staging_only(spark, pages, tmp_path_factory):
     assert set(cat.committed_chunks("extracted")) == before
     for c in cat.committed_chunks("extracted").values():
         assert spark.read.parquet(c["path"]).count() > 0
+
+
+def test_vacuum_reclaims_unrecorded_chunk_dirs(spark, pages, tmp_path_factory):
+    """A commit killed between its rename and its manifest store leaves
+    a ``chunk=<id>`` dir no manifest names; a rerun with another
+    bucketing never commits that id again, so vacuum() must reclaim it
+    by id, beside staging orphans, and leave every committed chunk."""
+    import os
+
+    from text_extraction_evaluation_spark.plans.jobs import (
+        read_extracted,
+        run_extraction_job,
+    )
+    from text_extraction_evaluation_spark.sources.catalog import LocalCatalog
+
+    root = str(tmp_path_factory.mktemp("vacuum_unrecorded"))
+    run_extraction_job(spark, pages, root, n_buckets=4, buckets_per_chunk=2)
+    cat = LocalCatalog(root)
+    before = set(cat.committed_chunks("extracted"))
+    assert before == {"b0000-0001", "b0002-0003"}
+
+    tdir = os.path.join(root, "extracted")
+    orphans = [os.path.join(tdir, "chunk=b0000-0003"),
+               os.path.join(tdir, "chunk=b0004-0007.staging-ab")]
+    for o in orphans:
+        os.makedirs(o)
+        open(os.path.join(o, "part-0.parquet"), "wb").close()
+    assert sorted(cat.vacuum("extracted")) == orphans
+    assert not any(os.path.exists(o) for o in orphans)
+    assert set(cat.committed_chunks("extracted")) == before
+    assert read_extracted(spark, root).count() == pages.count()

@@ -96,34 +96,3 @@ def crawl_span_churn(
         .applyInPandas(span_churn_diff, CHURN_SCHEMA)
     )
 
-
-def crawl_span_churn_join_twin(
-    pages: DataFrame,
-    params: JustextParams = DEFAULT_PARAMS,
-) -> DataFrame:
-    """JVM-only recomputation of the same census (tests twin): per
-    (url, text) counts on each side, full-outer join, least() for the
-    multiset intersection — no Python past the span kernel."""
-    old, new = recrawled_pair(pages)
-    ca = (
-        extract_spans(old, params)
-        .groupBy("url", "text")
-        .agg(F.count(F.lit(1)).alias("ca"))
-    )
-    cb = (
-        extract_spans(new, params)
-        .groupBy("url", "text")
-        .agg(F.count(F.lit(1)).alias("cb"))
-    )
-    j = ca.join(cb, ["url", "text"], "full_outer").select(
-        "url",
-        F.coalesce("ca", F.lit(0)).alias("ca"),
-        F.coalesce("cb", F.lit(0)).alias("cb"),
-    )
-    return j.groupBy("url").agg(
-        F.sum("ca").alias("n_spans_old"),
-        F.sum("cb").alias("n_spans_new"),
-        F.sum(F.least("ca", "cb")).alias("n_common"),
-        (F.sum("cb") - F.sum(F.least("ca", "cb"))).alias("n_added"),
-        (F.sum("ca") - F.sum(F.least("ca", "cb"))).alias("n_removed"),
-    )

@@ -36,19 +36,9 @@ def score_extracted(
     extracted: DataFrame,
     gold: DataFrame,
     extractor: str = "justext_spark",
-    keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """scores(url, extractor, dataset, P/R/F1 x {lcs,bow}, counters, status).
-
-    ``keep_cols`` passes named columns of ``extracted`` through the
-    kernel untouched (typed from the input schema) — the streaming
-    scorer uses it to keep ``warc_ts`` alive for event-time windowed
-    micro aggregates, which the url-keyed score row otherwise drops."""
-    passthrough = [
-        f"{c} {extracted.schema[c].dataType.simpleString()}" for c in keep_cols
-    ]
-    schema = ", ".join([SCORES_SCHEMA, *passthrough])
-    joined = extracted.select("url", "text", *keep_cols).join(
+    """scores(url, extractor, dataset, P/R/F1 x {lcs,bow}, counters, status)."""
+    joined = extracted.select("url", "text").join(
         F.broadcast(gold.select("url", "gold_text", "dataset")), "url", "inner"
     )
 
@@ -85,9 +75,6 @@ def score_extracted(
                          "precision_bow", "recall_bow", "f1_bow",
                          "matched", "matched_bow", "retrieved", "relevant",
                          "status"]
-            for c in keep_cols:
-                arrays.append(batch.column(names.index(c)))
-                out_names.append(c)
             yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
-    return joined.mapInArrow(score_kernel, schema)
+    return joined.mapInArrow(score_kernel, SCORES_SCHEMA)

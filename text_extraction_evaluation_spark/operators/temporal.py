@@ -15,10 +15,10 @@ increment's urls enter the window stage, whose input is
 |Δ| + |open rows of Δ's urls| ≈ 2|Δ| rows. History depth per url is
 bounded by recrawl policy, so the url key cannot be hot.
 
-Late-arrival contract (same stance as streaming/stream.py): an
-increment row whose timestamp is at or before the url's current open
-``ep_from`` is dropped — history is append-only in event time;
-backfills go through `build_scd2` from the full log.
+Late-arrival contract: an increment row whose timestamp is at or
+before the url's current open ``ep_from`` is dropped — history is
+append-only in event time; backfills go through `build_scd2` from the
+full log.
 
 Interval schema (both functions): host, url, version_no, raw_h,
 ep_from, ep_to — ``ep_to`` NULL while current; epochs are floored

@@ -14,8 +14,10 @@ the pipeline uses on plain parquet dirs, and nothing else:
    records its chunk's schema in the manifest, so a read is typed from
    the manifest and launches no parquet-footer inference job (legacy
    chunks without a recorded schema fall back to inference);
-3. **orphan cleanup** (``vacuum``): removes the staging dirs that a
-   hard-killed commit left behind.
+3. **orphan cleanup** (``vacuum``): removes every chunk dir the
+   manifest does not name — the staging dirs of a hard-killed write
+   and the published-but-unrecorded dir of a commit killed between its
+   rename and its manifest store.
 
 Opening a catalog creates nothing on disk; the first commit creates
 the table's directory.
@@ -139,13 +141,15 @@ class LocalCatalog:
         return True
 
     def vacuum(self, table: str) -> list[str]:
-        """Remove orphaned ``chunk=*.staging-*`` directories left by
-        hard-killed commit attempts (the LocalCatalog analogue of
-        Iceberg's remove_orphan_files). Committed data is never touched
-        — staging dirs are by construction unreferenced by the
-        manifest. Run only while no writer is active on ``table``: a
-        concurrent in-flight commit's staging dir is indistinguishable
-        from an orphan. Returns the removed paths."""
+        """Remove every ``chunk=<id>`` dir whose ``<id>`` is not a
+        committed chunk id (Iceberg's remove_orphan_files analogue):
+        staging dirs of hard-killed writes, and the dir of a commit
+        killed between its rename and its manifest store, which a rerun
+        with other buckets never commits again. Decided by id, not by
+        the manifest's recorded path, so a catalog opened under another
+        root never loses committed data. Run only while no writer is
+        active on ``table``: an in-flight commit's dirs look like
+        orphans. Returns the removed paths."""
         import shutil
 
         tdir = self.root / table
@@ -153,9 +157,11 @@ class LocalCatalog:
         if not tdir.is_dir():
             return removed
         with self._commit_lock:
-            for p in sorted(tdir.glob("chunk=*.staging-*")):
-                shutil.rmtree(p, ignore_errors=True)
-                removed.append(str(p))
+            committed = self.committed_chunks(table)
+            for p in sorted(tdir.glob("chunk=*")):
+                if p.name.removeprefix("chunk=") not in committed:
+                    shutil.rmtree(p, ignore_errors=True)
+                    removed.append(str(p))
         return removed
 
     def read(self, spark: SparkSession, table: str) -> DataFrame | None:

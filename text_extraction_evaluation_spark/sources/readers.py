@@ -207,15 +207,8 @@ def gold_df(spark: SparkSession, sf_dir: str, replicate: int = 1) -> DataFrame:
     return docs.mapInArrow(gen, GOLD_SCHEMA)
 
 
-def dataset_col(source_col):
-    """Column-expression twin of synth.dataset_for (kept in sync by
-    tests) so dataset labels can be derived JVM-side when needed."""
-    n = F.regexp_replace(source_col, "^src", "").cast("int")
-    return F.when(n < 10, F.lit("cleaneval")).otherwise(F.lit("googlenews"))
-
-
 __all__ = [
     "TABLES", "PAGES_SCHEMA", "GOLD_SCHEMA",
-    "get_spark", "load_table", "pages_df", "gold_df", "dataset_col",
+    "get_spark", "load_table", "pages_df", "gold_df",
     "dataset_for",
 ]
