@@ -5,9 +5,10 @@ Runs the flagship pipeline and then every oracle-checked registry entry
 $SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS]
 (default: the cores this process may run on, see
 ``sources.readers.default_cores``). The flagship extraction
-pipeline is run over a replicated page corpus (REPLICATE x documents,
-distinct urls) so the Arrow kernel dominates the measurement rather
-than fixed overheads.
+pipeline runs over the pages synthesized from that fixture as they
+are; at small scale factors its fixed per-job overhead is a large
+share of the time. ``perfbench/`` is the benchmark; these numbers are
+context only.
 
 Output: {"metric": "...", "value": <total sec>, "unit": "sec",
          "queries": {name: sec}, "sf": <sf>, ...extras}
@@ -28,13 +29,6 @@ def _noop_write(df) -> int:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # The flagship extraction pipeline runs at a LARGE replication:
-    # the pipeline carries ~2 s of fixed per-job overhead (synth stage
-    # launch, window shuffle barrier, task-tail at 32 cores) that at
-    # replicate=32 (160k docs, ~4 s) is half the wall clock and at
-    # replicate=128 (640k docs) amortizes to ~15% — the sustained rate
-    # a long 100 TB run actually sees.
-    replicate_flagship = int(os.environ.get("SPARK_GRAFT_REPLICATE_FLAGSHIP", "128"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
 
     from text_extraction_evaluation_spark.operators.extract import (
@@ -84,10 +78,10 @@ def main() -> None:
 
     # -- flagship: synth -> dedup -> extract -> score -> report -------------
     n_parts = cpus * 3
-    pages = pages_df(spark, sf_dir, n_partitions=n_parts, replicate=replicate_flagship)
+    pages = pages_df(spark, sf_dir, n_partitions=n_parts)
     latest = latest_crawl(pages)
     extracted = extracted_clean(extract_pages(latest))
-    gold = gold_df(spark, sf_dir, replicate=replicate_flagship)
+    gold = gold_df(spark, sf_dir)
 
     # Persist the extraction output: the scoring stage consumes the
     # materialized extracted table (in production it reads the catalog
@@ -117,7 +111,7 @@ def main() -> None:
     extras["score_runs"] = score_runs
     extracted.unpersist()
 
-    # second extractor (densometric rules) over the same replicated pages
+    # second extractor (densometric rules) over the same pages
     from text_extraction_evaluation_spark.operators.extract import (
         extract_pages_density,
     )
@@ -162,7 +156,6 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "cpus": cpus,
-        "replicate_flagship": replicate_flagship,
         **extras,
     }
     # Only the LAST 2000 characters of stdout are kept by the bench
@@ -188,7 +181,6 @@ def main() -> None:
         "sf": sf,
         "cpus": cpus,
         "n_queries": len(timings),
-        "replicate_flagship": replicate_flagship,
         "extraction_docs": extras.get("extraction_docs"),
         "extraction_docs_per_sec": extras.get("extraction_docs_per_sec"),
         "density_docs_per_sec": extras.get("density_docs_per_sec"),

@@ -6,9 +6,10 @@
 #   3. the full registry sweep vs the DuckDB oracle at sf0.01 (the entry
 #      count it ran is printed at the end),
 # and then prints the package's .py line count, the tier-1 test count and
-# the dead-code scan (the verify skill's deleting-code step 0): every
+# the dead-code scans (the verify skill's deleting-code step 0): every
 # top-level def/class outside the query registry that only its own
-# definition line and tests/ name.
+# definition line and tests/ name, then every package module that
+# nothing outside tests/ imports.
 # Any failure stops the chain with a non-zero exit.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -45,3 +46,49 @@ dead="$(set +o pipefail; for f in $(find text_extraction_evaluation_spark -name 
 done | awk '$1 == 1 { print $2 " " $3 }' | sort)"
 echo "DEAD: $(printf '%s' "$dead" | grep -c . || true) names only tests reach"
 [ -z "$dead" ] || printf '%s\n' "$dead"
+
+# whole-module scan: the name scan above misses a module whose names are
+# only used inside it, so also list every package module (bar
+# __init__.py) that no import statement outside its own file names
+dead_mods="$(python3 - <<'PY'
+import ast
+import pathlib
+
+PKG = "text_extraction_evaluation_spark"
+
+
+def modname(path):
+    parts = list(path.with_suffix("").parts)
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+files = sorted(pathlib.Path(PKG).rglob("*.py"))
+users = files + sorted(pathlib.Path("scripts").glob("*.py")) + sorted(
+    pathlib.Path("perfbench").rglob("*.py")
+) + sorted(pathlib.Path("oracle").rglob("*.py")) + [
+    pathlib.Path("bench.py"), pathlib.Path("__spark_entry__.py")
+]
+imported = {}  # dotted module name -> files that import it
+for f in users:
+    me = modname(f)
+    pkg = me if f.name == "__init__.py" else me.rpartition(".")[0]
+    for node in ast.walk(ast.parse(f.read_text(), str(f))):
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                up = pkg.rsplit(".", node.level - 1)[0]
+                base = f"{up}.{base}" if base else up
+            names = [base] + [f"{base}.{a.name}" for a in node.names]
+        else:
+            continue
+        for n in names:
+            imported.setdefault(n, set()).add(f)
+for f in files:
+    if f.name != "__init__.py" and not imported.get(modname(f), set()) - {f}:
+        print(f)
+PY
+)"
+echo "DEAD MODULES: $(printf '%s' "$dead_mods" | grep -c . || true)"
+[ -z "$dead_mods" ] || printf '%s\n' "$dead_mods"

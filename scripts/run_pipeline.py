@@ -8,7 +8,7 @@ lifecycles (SURVEY.md §3) in one resumable run:
 1. ingest: synthesize/load pages
 2. extract: chunked resumable extraction with lineage (re-run resumes)
 3. score+report: LCS/BoW scoring vs gold, ranked report
-4. sinks: markdown + LaTeX tables, SVG/matplotlib F1 chart
+4. sinks: markdown + LaTeX tables, SVG F1 chart
 """
 
 from __future__ import annotations
@@ -23,7 +23,6 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--n-buckets", type=int, default=16)
     ap.add_argument("--buckets-per-chunk", type=int, default=4)
-    ap.add_argument("--replicate", type=int, default=1)
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -45,14 +44,12 @@ def main() -> None:
     from text_extraction_evaluation_spark.sources.readers import gold_df, pages_df
 
     cores = spark.sparkContext.defaultParallelism
-    pages = latest_crawl(
-        pages_df(spark, args.sf_dir, n_partitions=cores * 2, replicate=args.replicate)
-    )
+    pages = latest_crawl(pages_df(spark, args.sf_dir, n_partitions=cores * 2))
     run_extraction_job(
         spark, pages, args.out,
         n_buckets=args.n_buckets, buckets_per_chunk=args.buckets_per_chunk,
     )
-    run_score_job(spark, args.out, gold_df(spark, args.sf_dir, replicate=args.replicate))
+    run_score_job(spark, args.out, gold_df(spark, args.sf_dir))
 
     cat = LocalCatalog(args.out)
     report = cat.read(spark, "report")

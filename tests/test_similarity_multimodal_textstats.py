@@ -72,7 +72,6 @@ def test_lsh_buckets_deterministic(spark, emb):
 def test_multimodal_plumbing(spark):
     from text_extraction_evaluation_spark.operators.multimodal import (
         extract_media_features,
-        frame_sample_plan,
         synth_media_df,
     )
 
@@ -85,13 +84,6 @@ def test_multimodal_plumbing(spark):
     # deterministic across runs
     again = extract_media_features(media, dim=16).collect()
     assert sorted(map(str, feats)) == sorted(map(str, again))
-
-    plan = frame_sample_plan(media, every_nth=5)
-    rows = plan.collect()
-    vids = media.filter(F.col("kind") == "video").select("media_id", "meta.n_frames").collect()
-    expect = sum(len(range(0, r["n_frames"], 5)) for r in vids)
-    assert len(rows) == expect
-    assert all(r["frame_idx"] % 5 == 0 for r in rows)
 
 
 def test_real_decoder_raises(spark):

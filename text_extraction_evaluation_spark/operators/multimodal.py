@@ -19,7 +19,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, "
@@ -110,20 +109,6 @@ def extract_media_features(
             )
 
     return pruned.mapInPandas(kernel, FEATURE_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_nth: int = 5) -> DataFrame:
-    """Video frame-sampling plan: explode (media_id, frame_idx) for
-    frames ≡ 0 (mod every_nth) — pure JVM from metadata, the cheap
-    planning half of frame extraction (the decode half is the stub)."""
-    vids = media.filter(F.col("kind") == "video").select(
-        "media_id", F.col("meta.n_frames").alias("n_frames")
-    )
-    idx = F.filter(
-        F.sequence(F.lit(0), F.col("n_frames") - 1),
-        lambda i: i % every_nth == 0,
-    )
-    return vids.select("media_id", F.explode(idx).alias("frame_idx"))
 
 
 # ---------------------------------------------------------------------------

@@ -132,7 +132,6 @@ def ann_lsh_topk(
         F.col("bucket").alias("qbucket"),
     )
     # expand each query to its probe set (tiny: |queries| x |probes|)
-    probes = F.array(*[F.lit(0)])  # placeholder replaced below
     probe_masks = [0] + [
         sum(1 << b for b in bits)
         for d in range(1, multiprobe + 1)

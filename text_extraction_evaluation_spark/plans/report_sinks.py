@@ -3,10 +3,9 @@ charts the reference rendered from its pickled results — rebuilt as
 driver-side sinks over the tiny aggregated report DataFrame.
 
 The reference used matplotlib bar charts (mean ± stddev per extractor)
-and LaTeX tables. matplotlib is not installed in this sandbox, so the
-chart sink emits a dependency-free SVG (same content: grouped bars
-with error whiskers); if matplotlib IS importable it is used instead.
-Tables are emitted as Markdown + LaTeX.
+and LaTeX tables. The chart sink emits a dependency-free SVG with the
+same content (grouped bars with error whiskers); tables are emitted as
+Markdown + LaTeX.
 """
 
 from __future__ import annotations
@@ -66,28 +65,7 @@ def write_latex_table(report: DataFrame, path: str | Path) -> None:
 
 def write_f1_bar_chart(report: DataFrame, path: str | Path) -> None:
     """Grouped bar chart of macro-F1 ± stddev per (extractor, dataset)."""
-    rows = _rows(report)
-    try:  # pragma: no cover - matplotlib absent in this sandbox
-        import matplotlib
-
-        matplotlib.use("Agg")
-        import matplotlib.pyplot as plt
-
-        labels = [f"{r['extractor']}\n{r['dataset']}" for r in rows]
-        vals = [r["avg_f1"] or 0.0 for r in rows]
-        errs = [r["std_f1"] or 0.0 for r in rows]
-        fig, ax = plt.subplots(figsize=(max(4, len(rows) * 1.2), 4))
-        ax.bar(range(len(rows)), vals, yerr=errs, capsize=4)
-        ax.set_xticks(range(len(rows)), labels, fontsize=8)
-        ax.set_ylabel("macro-F1")
-        ax.set_ylim(0, 1.05)
-        fig.tight_layout()
-        fig.savefig(str(path))
-        plt.close(fig)
-        return
-    except ImportError:
-        pass
-    _write_svg_bars(rows, path)
+    _write_svg_bars(_rows(report), path)
 
 
 def _write_svg_bars(rows: list[dict], path: str | Path) -> None:

@@ -9,10 +9,8 @@ BASELINE.json:15).
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .synth import dataset_for
 
@@ -88,100 +86,27 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-_REPLICA_STRIDE = 10_000_000  # divisible by 16 and 20: preserves the
-# template-variant and second-crawl selectors of the base doc_id
-
-# (sf_dir, mtime_ns, size) -> verified dense row count. Keying on the
-# documents.parquet stat (not sf_dir alone) invalidates the cache when
-# a fixture is rewritten in-process — a stale count would silently
-# reintroduce the dropped-replica bug the density check guards against
-# (ADVICE r2). Guarded by a lock for concurrent bench threads.
-_N_BASE_CACHE: dict[tuple[str, int, int], int] = {}
-_N_BASE_LOCK = threading.Lock()
-
-
-def _docs_cache_key(sf_dir: str) -> tuple[str, int, int]:
-    p = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(p)
-        mtime, size = st.st_mtime_ns, st.st_size
-        if os.path.isdir(p):  # Spark-written dataset: stat the parts too
-            for f in sorted(os.listdir(p)):
-                s = os.stat(os.path.join(p, f))
-                mtime = max(mtime, s.st_mtime_ns)
-                size += s.st_size
-    except OSError:
-        mtime, size = -1, -1
-    return (sf_dir, mtime, size)
-
-
 def _docs(
-    spark: SparkSession, sf_dir: str, replicate: int, n_partitions: int | None
+    spark: SparkSession, sf_dir: str, n_partitions: int | None
 ) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source"
     )
-    if replicate <= 1:
-        # Spread the SMALL base corpus across cores (the fixture is one
-        # parquet file = one input split).
-        if n_partitions:
-            docs = docs.repartition(n_partitions, "doc_id")
-        return docs
-    # Replication path: generate (base_id, replica) pairs from
-    # spark.range — born perfectly partitioned, ZERO serial scan — and
-    # broadcast-join the tiny base corpus onto them. The previous
-    # read->repartition->explode shape carried a ~1.5 s serial prefix
-    # (single-split read + shuffle of the base table) that capped the
-    # 32-core leg's scaling (Amdahl); range+broadcast removes it.
-    # base_id = id % N reproduces the exact explode row set ONLY for
-    # dense 0..N-1 doc_ids — asserted below (once per sf_dir, cached:
-    # a non-dense corpus would silently drop replicas otherwise).
-    key = _docs_cache_key(sf_dir)
-    with _N_BASE_LOCK:
-        n_base = _N_BASE_CACHE.get(key)
-    if n_base is None:
-        n, n_distinct, min_id, max_id = docs.agg(
-            F.count(F.lit(1)), F.countDistinct("doc_id"),
-            F.min("doc_id"), F.max("doc_id"),
-        ).first()
-        # density needs all three: no duplicates, min 0, max N-1 —
-        # max==N-1 alone passes corpora with duplicates + gaps
-        if n_distinct != n or min_id != 0 or max_id != n - 1:
-            raise ValueError(
-                f"replication requires dense doc_ids 0..N-1; {sf_dir} has "
-                f"N={n}, distinct={n_distinct}, min={min_id}, max={max_id}"
-            )
-        with _N_BASE_LOCK:
-            _N_BASE_CACHE[key] = n
-        n_base = n
-    n_parts = n_partitions or spark.sparkContext.defaultParallelism
-    rng = spark.range(0, n_base * replicate, 1, n_parts)
-    pairs = rng.select(
-        (F.col("id") % n_base).alias("base_id"),
-        (F.col("id") / n_base).cast("long").alias("r"),
-    )
-    return (
-        pairs.join(F.broadcast(docs), pairs.base_id == docs.doc_id)
-        .select(
-            (F.col("base_id") + F.col("r") * _REPLICA_STRIDE).alias("doc_id"),
-            "text", "lang", "source",
-        )
-    )
+    # Spread the corpus across cores (the fixture is one parquet file =
+    # one input split).
+    if n_partitions:
+        docs = docs.repartition(n_partitions, "doc_id")
+    return docs
 
 
 def pages_df(
-    spark: SparkSession,
-    sf_dir: str,
-    n_partitions: int | None = None,
-    replicate: int = 1,
+    spark: SparkSession, sf_dir: str, n_partitions: int | None = None
 ) -> DataFrame:
     """Synthesize the Common-Crawl-style ``pages`` table from the seed
     corpus, distributed: each partition of ``documents`` synthesizes
     its own pages inside one Arrow kernel (no shuffle of html bytes —
-    pages are born partitioned). ``replicate`` fans the corpus out
-    deterministically (distinct urls, same variant mix) for
-    throughput benchmarking at larger volumes."""
-    docs = _docs(spark, sf_dir, replicate, n_partitions)
+    pages are born partitioned)."""
+    docs = _docs(spark, sf_dir, n_partitions)
 
     def gen(batches):
         from .synth import synth_pages_batch
@@ -192,11 +117,10 @@ def pages_df(
     return docs.mapInArrow(gen, PAGES_SCHEMA)
 
 
-def gold_df(spark: SparkSession, sf_dir: str, replicate: int = 1) -> DataFrame:
+def gold_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """gold(url, gold_text, dataset) — tiny vs pages; always the
     broadcast side of the scoring join."""
-    n_parts = spark.sparkContext.defaultParallelism if replicate > 1 else None
-    docs = _docs(spark, sf_dir, replicate, n_parts).select("doc_id", "text", "source")
+    docs = _docs(spark, sf_dir, None).select("doc_id", "text", "source")
 
     def gen(batches):
         from .synth import synth_gold_batch
