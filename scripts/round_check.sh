@@ -7,9 +7,10 @@
 #      count it ran is printed at the end),
 # and then prints the package's .py line count, the tier-1 test count and
 # the dead-code scans (the verify skill's deleting-code step 0): every
-# top-level def/class outside the query registry that only its own
-# definition line and tests/ name, then every package module that
-# nothing outside tests/ imports.
+# top-level def/class in the package that only its own definition line
+# and tests/ name (a registry entry is named twice in its own file, at
+# its def and in _REGISTRY, so only unreached helpers show), then every
+# package module that nothing outside tests/ imports.
 # Any failure stops the chain with a non-zero exit.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -38,7 +39,7 @@ echo "SIZE: package ${pkg_lines} .py lines; tier-1 ${n_tests}"
 # nothing outside its own file names except tests; 1 hit = only the
 # definition, so only tests reach it (no pipefail: grep -q may close the
 # pipe early)
-dead="$(set +o pipefail; for f in $(find text_extraction_evaluation_spark -name '*.py' ! -name 'q_*.py' ! -name sql_relational.py); do
+dead="$(set +o pipefail; for f in $(find text_extraction_evaluation_spark -name '*.py'); do
   { grep -oP '^(def|class) \K\w+' "$f" || true; } | while read -r n; do
     grep -rlw --include=*.py "$n" text_extraction_evaluation_spark scripts perfbench bench.py oracle __spark_entry__.py \
       | grep -qvx "$f" || echo "$(grep -cw "$n" "$f") $f $n"

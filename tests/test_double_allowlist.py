@@ -51,7 +51,6 @@ DOUBLE_ALLOWLIST: dict[str, tuple[str, ...]] = {
     "embedding_norms": ("avg_norm", "min_norm", "max_norm"),
     "embedding_sq8_census": ("mse_per_dim",),
     "hard_negative_mining": ("avg_hard_cos",),
-    "host_skew_census": ("crawls_per_url",),
     "lang_distribution": ("avg_chars",),
     "lang_id": ("lang_score",),
     "lm_perplexity_score": ("avg_nll", "ppl"),

@@ -2,7 +2,7 @@
 an EMPTY (or schema-stable) result on a zero-row fixture, not crash —
 the behavior a production run hits on an empty partition/day/source.
 Covers each plan family: scans, aggregates, windows, joins, iterative
-loops (BPE / k-means / PCA / probe / pagerank), sketches, kernels."""
+loops (BPE / k-means / PCA / probe), sketches, kernels."""
 
 from __future__ import annotations
 
@@ -42,7 +42,6 @@ REPRESENTATIVE = [
     "quality_repetition",
     "quality_classifier_score",
     "sequence_packing",
-    "host_pagerank",
     "benchmark_decontamination",
     "decontamination_clean",
     "crawl_novel_shingles",
@@ -87,7 +86,6 @@ REPRESENTATIVE = [
     "q_event_transitions",
     "table_profile_census",
     "textrank_keywords",
-    "host_triangle_census",
 ]
 
 

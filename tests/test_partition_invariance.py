@@ -16,19 +16,16 @@ from tests.test_queries_oracle import normalize
 from text_extraction_evaluation_spark.plans.queries import SQL_CHECKED
 
 # One representative per exact-arithmetic family: fingerprint sums,
-# quantized-metric sums, iterative integer fixpoints, sketch register
-# sums, decimal money aggregates, window-gated dedup.
+# quantized-metric sums, sketch register sums, decimal money
+# aggregates, window-gated dedup.
 INVARIANCE_QUERIES = [
     "extract_report_exact",      # q9 metric sums over the Arrow kernel
     "lm_perplexity_score",       # integer micro-nat NLL sums
-    "host_pagerank",             # iterative integer-quantized fixpoint
     "hll_distinct_census",       # sketch register max + BIGINT sums
     "dedup_minhash_lsh",         # banded signature equi-join
     "q1_pricing_summary",        # DECIMAL money aggregates
     "tfidf_top_terms",           # integer-quantized idf ranking
     "line_dedup_clean",          # fingerprint sum over a broadcast anti-flag
-    "host_label_propagation",    # iterative argmax with explicit tie-break
-    "crawl_budget_allocation",   # largest-remainder global ranking
     "q_events_interpolate",      # IGNORE-NULLS window neighbors on a spine
     "source_length_trend",       # integer normal-equation sums
     # The round-4 audit's formerly order-dependent AVG-over-double

@@ -24,8 +24,8 @@ PIPELINE_KERNEL = re.compile(
 )
 
 # Registry entries whose executed plan runs no pipeline kernel: the
-# relational, corpus, NLP, LM, host-graph and embedding analytics. CHANGES.md
-# names the plan node that decided each one. They are the backlog of
+# relational, corpus, NLP, LM and embedding analytics. CHANGES.md names
+# the plan node that decided each one. They are the backlog of
 # ROADMAP item 5; the set may shrink but never grow, and it must match
 # the registry exactly.
 NON_PIPELINE = frozenset({
@@ -36,8 +36,8 @@ NON_PIPELINE = frozenset({
     "bigram_lift_topk", "bm25_mrr_eval", "bm25_topk", "bpe_encode_census",
     "bpe_pair_census", "bpe_train_merges", "corpus_length_histogram",
     "corpus_length_percentiles", "corpus_mixture_weights",
-    "crawl_bloom_novelty", "crawl_budget_allocation", "crawl_content_diff",
-    "crawl_novel_shingles", "curation_funnel", "decontamination_clean",
+    "crawl_bloom_novelty", "crawl_content_diff", "crawl_novel_shingles",
+    "curation_funnel", "decontamination_clean",
     "dedup_banding_sweep", "dedup_cluster_histogram", "dedup_components",
     "dedup_edit_distance", "dedup_embedding_cosine", "dedup_exact",
     "dedup_jaccard_prefix", "dedup_keep_best_census", "dedup_keep_census",
@@ -48,9 +48,7 @@ NON_PIPELINE = frozenset({
     "doc_sample_stratified", "doc_sample_weighted", "doc_shard_assignment",
     "dsir_importance_weights", "dup_span_census", "dup_span_clean",
     "embedding_norms", "embedding_sq8_census", "hard_negative_mining",
-    "heavy_hitters_cms", "hll_distinct_census", "host_bfs_depth",
-    "host_domain_cap", "host_label_propagation", "host_pagerank",
-    "host_skew_census", "host_triangle_census", "kmeans_embeddings",
+    "heavy_hitters_cms", "hll_distinct_census", "kmeans_embeddings",
     "lang_distribution", "lang_id", "lang_source_pivot", "langid_confusion",
     "leakage_safe_split_census", "linear_probe_train",
     "lm_perplexity_score", "media_features", "mixture_temperature_plan",
@@ -83,8 +81,8 @@ NON_PIPELINE = frozenset({
     "table_profile_census", "template_shape_census", "text_quality",
     "text_token_stats", "textrank_keywords", "tfidf_top_terms",
     "token_entropy_census", "token_source_bitmap", "trigram_index_search",
-    "unicode_nfc_census", "url_blocklist_filter", "url_canonical_dedup",
-    "vocab_growth_census", "zorder_layout_census"
+    "unicode_nfc_census", "url_blocklist_filter", "vocab_growth_census",
+    "zorder_layout_census"
 })
 
 

@@ -71,39 +71,6 @@ def word_shingles(tok: Column, n: int = 3) -> Column:
     return F.array_distinct(word_shingles_all(tok, n))
 
 
-def canonical_url(url: Column) -> Column:
-    """Crawl-frontier URL normalization, pure JVM column expressions:
-    drop the fragment, lowercase the host and strip a default :80
-    port, strip one trailing slash from the path, drop utm_* tracking
-    params and sort the kept ones for a stable key. IDEMPOTENT:
-    canonical(canonical(u)) == canonical(u) (property-tested), the
-    invariant that lets the normalizer run at ingest AND at dedup time
-    without double-mangling."""
-    no_frag = F.regexp_replace(url, r"#.*$", "")
-    host = F.lower(
-        F.regexp_replace(
-            F.regexp_extract(no_frag, r"^http://([^/?#]+)", 1), r":80$", ""
-        )
-    )
-    path = F.regexp_replace(
-        F.regexp_extract(no_frag, r"^http://[^/?#]+([^?#]*)", 1), r"/+$", ""
-    )
-    qs = F.regexp_extract(no_frag, r"\?([^#]*)", 1)
-    kept = F.array_join(
-        F.array_sort(
-            F.filter(
-                F.split(qs, "&"),
-                lambda p: (p != "") & ~p.startswith("utm_"),
-            )
-        ),
-        "&",
-    )
-    return F.concat(
-        F.lit("http://"), host, path,
-        F.when(kept != "", F.concat(F.lit("?"), kept)).otherwise(F.lit("")),
-    )
-
-
 def minhash_signature(shingles: Column) -> list[Column]:
     """16 minhash values via xor-permuted md5 integers — one
     ``array_min(transform(...))`` per seed, fully JVM-side."""

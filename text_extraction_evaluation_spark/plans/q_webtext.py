@@ -748,9 +748,9 @@ def outlink_path_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link-graph extraction from RAW HTML: pull every ``href`` out of
     the page bytes and census the link targets — (path, total links,
     pages containing it). This is the edge-builder that feeds
-    ``host_pagerank``-style graph analytics and the 'which targets are
-    sitewide boilerplate' signal (a path on nearly every page of the
-    corpus is chrome, not content).
+    link-graph analytics and the 'which targets are sitewide
+    boilerplate' signal (a path on nearly every page of the corpus is
+    chrome, not content).
 
     Scale shape: a pure map-side JVM pass over the html bytes
     (binary→string cast + ``regexp_extract_all`` + explode, no

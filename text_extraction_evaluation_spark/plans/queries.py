@@ -15,8 +15,6 @@ directly above/below its SQL twin, so the pair stays in sync):
   mixtures, phrase/trigram/bitmap indexes
 * ``plans.q_embedding``  — ANN/similarity, specialty joins, TPC-H tail
 * ``plans.q_extraction`` — extraction-family gates + profiling/pivot
-* ``plans.q_hostgraph``  — host graph (PageRank/LPA/triangles/BFS) +
-  URL/crawl ops (canonical dedup, domain cap, budget allocation)
 * ``plans.q_webtext``    — crawl/host/URL/layout operators
 * ``plans.q_lm``         — perplexity, DSIR, packing, curation funnel
 
@@ -43,17 +41,9 @@ function and merges the per-module registries into ``SQL_CHECKED``.
 
 from __future__ import annotations
 
-from .common import (  # noqa: F401 — back-compat re-exports
-    STOPWORDS_SORTED,
-    _STOP_SQL,
-    _dec,
-    _docs_par,
-    _t,
-)
 from .q_corpus import *  # noqa: F401,F403
 from .q_embedding import *  # noqa: F401,F403
 from .q_extraction import *  # noqa: F401,F403
-from .q_hostgraph import *  # noqa: F401,F403
 from .q_lm import *  # noqa: F401,F403
 from .q_nlp import *  # noqa: F401,F403
 from .q_relational import *  # noqa: F401,F403
@@ -62,7 +52,6 @@ from . import (
     q_corpus,
     q_embedding,
     q_extraction,
-    q_hostgraph,
     q_lm,
     q_nlp,
     q_relational,
@@ -89,7 +78,6 @@ SQL_CHECKED = merge_registries(
     q_corpus._REGISTRY,
     q_embedding._REGISTRY,
     q_extraction._REGISTRY,
-    q_hostgraph._REGISTRY,
     q_webtext._REGISTRY,
     q_lm._REGISTRY,
     q_nlp._REGISTRY,
