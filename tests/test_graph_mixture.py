@@ -6,7 +6,6 @@ operators MEAN what they say)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 

@@ -1,7 +1,10 @@
 """End-to-end pipeline job tests: score/report through the catalog,
-natural stoplists on real-language HTML."""
+no report over a partial extraction, natural stoplists on
+real-language HTML."""
 
 from __future__ import annotations
+
+import pytest
 
 from tests.conftest import SF0001
 
@@ -37,6 +40,50 @@ def test_extract_then_score_job(spark, tmp_path_factory):
 
     paths = write_all(report, f"{root}/artifacts")
     assert open(paths["chart"]).read().startswith("<svg")
+
+
+def test_score_job_refuses_a_partial_extraction(spark, tmp_path):
+    """A score run over the chunks a failed run left raises and commits
+    nothing (a ``full`` report of the partial output would be returned
+    by every later run); after a resume, here under a finer bucketing
+    that nests in the first, it reports every url that both the
+    extraction and gold hold. A resume whose bucketing does not nest
+    skips chunk ids that cover other urls, and is refused."""
+    from text_extraction_evaluation_spark.operators.extract import latest_crawl
+    from text_extraction_evaluation_spark.plans.jobs import (
+        ChunkFailure,
+        read_extracted,
+        run_extraction_job,
+        run_score_job,
+    )
+    from text_extraction_evaluation_spark.sources.catalog import LocalCatalog
+    from text_extraction_evaluation_spark.sources.readers import gold_df, pages_df
+
+    root = str(tmp_path)
+    pages = latest_crawl(pages_df(spark, SF0001, n_partitions=8))
+    gold = gold_df(spark, SF0001)
+    with pytest.raises(ChunkFailure):
+        run_extraction_job(spark, pages, root, n_buckets=4, buckets_per_chunk=2,
+                           fail_after_chunks=1)
+    with pytest.raises(RuntimeError, match="incomplete extraction"):
+        run_score_job(spark, root, gold)
+    cat = LocalCatalog(root)
+    assert cat.committed_chunks("scores") == {} == cat.committed_chunks("report")
+
+    run_extraction_job(spark, pages, root, n_buckets=8, buckets_per_chunk=2)
+    run_score_job(spark, root, gold)
+    n_scored = sum(r["n_ok"] + r["n_empty"] + r["n_fail"]
+                   for r in cat.read(spark, "report").collect())
+    assert n_scored == read_extracted(spark, root).join(gold, "url").count()
+    assert read_extracted(spark, root).count() == pages.count()
+
+    other = str(tmp_path / "not_nested")
+    with pytest.raises(ChunkFailure):
+        run_extraction_job(spark, pages, other, n_buckets=4, buckets_per_chunk=2,
+                           fail_after_chunks=1)
+    run_extraction_job(spark, pages, other, n_buckets=6, buckets_per_chunk=2)
+    with pytest.raises(RuntimeError, match="incomplete extraction"):
+        run_score_job(spark, other, gold)
 
 
 def test_natural_stoplists_on_real_language_page(spark):

@@ -1,8 +1,9 @@
 """The extraction job's per-run staging and per-chunk job budget: the
 latest crawl is staged once and released on every exit, a chunk costs
-two Spark jobs (the extraction write and the run_metrics write) with no
-join in its plan, a resume commits lineage a previous run left
-missing, and a re-run removes what a hard-killed run left staged."""
+one Spark job (its extraction write) with no join in its plan, a
+chunk's lineage is readable as soon as its commit lands, under the
+run_id that committed it, and a re-run removes what a hard-killed run
+left staged."""
 
 from __future__ import annotations
 
@@ -53,7 +54,7 @@ def test_chunk_job_budget_bucket_and_plan(spark, latest, tmp_path, monkeypatch):
     with spark_job_ids(spark) as jobs:
         run_extraction_job(spark, latest, str(tmp_path), n_buckets=n_buckets,
                            buckets_per_chunk=n_buckets // n_chunks)
-    assert len(jobs) <= 3 + 2 * n_chunks, sorted(jobs)
+    assert len(jobs) <= 3 + n_chunks, sorted(jobs)
 
     assert len(plans) == n_chunks
     for plan in plans:
@@ -96,40 +97,32 @@ def test_staged_input_released_on_chunk_failure(spark, tmp_path):
     _assert_nothing_staged(spark, tmp_path, before)
 
 
-def test_resume_commits_missing_run_metrics(spark, latest, tmp_path, monkeypatch):
-    """A chunk whose ``extracted`` commit landed but whose
-    ``run_metrics`` commit raised gets its lineage on the next run,
-    under the run_id recorded with the chunk."""
-    from text_extraction_evaluation_spark.plans.jobs import run_extraction_job
+def test_lineage_lands_with_its_chunk(spark, latest, tmp_path):
+    """A run stopped after one chunk already has that chunk's lineage,
+    under its run_id, with no second run; after a resume under another
+    run_id the view shows each id on the chunks it committed."""
+    from text_extraction_evaluation_spark.plans.jobs import (
+        ChunkFailure,
+        read_run_metrics,
+        run_extraction_job,
+    )
     from text_extraction_evaluation_spark.sources.catalog import LocalCatalog
 
-    class MetricsCommitLost(RuntimeError):
-        pass
-
-    commit = LocalCatalog.commit_append
-    raised = []
-
-    def flaky(self, df, table, chunk_id, meta=None):
-        if table == "run_metrics" and not raised:
-            raised.append(chunk_id)
-            raise MetricsCommitLost(chunk_id)
-        return commit(self, df, table, chunk_id, meta)
-
     root = str(tmp_path)
-    monkeypatch.setattr(LocalCatalog, "commit_append", flaky)
-    with pytest.raises(MetricsCommitLost):
+    with pytest.raises(ChunkFailure):
         run_extraction_job(spark, latest, root, n_buckets=8, buckets_per_chunk=2,
-                           run_id="first")
+                           run_id="first", fail_after_chunks=1)
     cat = LocalCatalog(root)
     first = set(cat.committed_chunks("extracted"))
-    assert raised[0] in first
-    assert cat.committed_chunks("run_metrics") == {}
+    assert len(first) == 1
+    rm = read_run_metrics(spark, root).collect()
+    assert {(r["run_id"], r["chunk_id"]) for r in rm} == {("first", c) for c in first}
+    assert sum(r["n_docs"] for r in rm) == cat.read(spark, "extracted").count()
 
     run_extraction_job(spark, latest, root, n_buckets=8, buckets_per_chunk=2,
                        run_id="second")
     assert len(cat.committed_chunks("extracted")) == 4
-    assert len(cat.committed_chunks("run_metrics")) == 4
-    rm = cat.read(spark, "run_metrics").collect()
+    rm = read_run_metrics(spark, root).collect()
     assert sum(r["n_docs"] for r in rm) == latest.count()
     assert {r["run_id"] for r in rm if r["chunk_id"] in first} == {"first"}
     assert {r["run_id"] for r in rm if r["chunk_id"] not in first} == {"second"}
@@ -167,7 +160,6 @@ def test_rerun_reclaims_orphans_of_a_killed_run(spark, latest, tmp_path):
     orphans = [
         plant("_staged-deadbeef"),
         plant("extracted", "chunk=b0002-0003.staging-deadbeef"),
-        plant("run_metrics", "chunk=b0002-0003.staging-deadbeef"),
     ]
     run_extraction_job(spark, latest, root, n_buckets=4, buckets_per_chunk=2)
     assert [p for p in orphans if os.path.exists(p)] == []

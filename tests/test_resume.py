@@ -106,13 +106,14 @@ def test_rerun_is_idempotent_noop(spark, pages, tmp_path_factory):
 
 
 def test_run_metrics_lineage(spark, pages, tmp_path_factory):
-    from text_extraction_evaluation_spark.plans.jobs import run_extraction_job
-    from text_extraction_evaluation_spark.sources.catalog import LocalCatalog
+    from text_extraction_evaluation_spark.plans.jobs import (
+        read_run_metrics,
+        run_extraction_job,
+    )
 
     root = str(tmp_path_factory.mktemp("run_metrics"))
     run_extraction_job(spark, pages, root, n_buckets=4, buckets_per_chunk=2)
-    cat = LocalCatalog(root)
-    rm = cat.read(spark, "run_metrics").collect()
+    rm = read_run_metrics(spark, root).collect()
     assert rm, "no lineage rows"
     total_docs = sum(r["n_docs"] for r in rm)
     assert total_docs == pages.count()
@@ -128,16 +129,42 @@ def test_run_metrics_span_a_single_batch(spark, pages, tmp_path_factory):
     """A partition that fits in one Arrow batch still gets a time span:
     t_start is the batch's start, t_end its end, so t_end > t_start
     (stamping only the batch end made the two equal)."""
-    from text_extraction_evaluation_spark.plans.jobs import run_extraction_job
-    from text_extraction_evaluation_spark.sources.catalog import LocalCatalog
+    from text_extraction_evaluation_spark.plans.jobs import (
+        read_run_metrics,
+        run_extraction_job,
+    )
 
     few = pages.orderBy("url").limit(12)  # far below one Arrow batch per partition
     root = str(tmp_path_factory.mktemp("run_metrics_one_batch"))
     run_extraction_job(spark, few, root, n_buckets=1, buckets_per_chunk=1)
-    rm = LocalCatalog(root).read(spark, "run_metrics").collect()
+    rm = read_run_metrics(spark, root).collect()
     assert sum(r["n_docs"] for r in rm) == 12
     for r in rm:
         assert r["t_end"] > r["t_start"], r
+
+
+def test_run_metrics_view_is_each_chunks_own_lineage(spark, pages, tmp_path_factory):
+    """The lineage view holds, for every committed chunk, exactly the
+    rows ``run_metrics_from_extracted`` derives from that chunk's files
+    alone, under the chunk's id and the run_id of its manifest entry."""
+    from text_extraction_evaluation_spark.plans.jobs import (
+        RUN_METRICS_COLS,
+        read_run_metrics,
+        run_extraction_job,
+        run_metrics_from_extracted,
+    )
+    from text_extraction_evaluation_spark.sources.catalog import LocalCatalog
+
+    root = str(tmp_path_factory.mktemp("run_metrics_view"))
+    run_extraction_job(spark, pages, root, n_buckets=8, buckets_per_chunk=2, run_id="r1")
+    view = read_run_metrics(spark, root)
+    assert view.columns == RUN_METRICS_COLS
+    rows = view.collect()
+    committed = LocalCatalog(root).committed_chunks("extracted")
+    assert {r["chunk_id"] for r in rows} == set(committed)
+    for chunk_id, entry in committed.items():
+        own = run_metrics_from_extracted(spark.read.parquet(entry["path"]), "r1", chunk_id)
+        assert sorted(r for r in rows if r["chunk_id"] == chunk_id) == sorted(own.collect())
 
 
 def test_four_in_flight_failure_manifest_consistent(spark, pages, tmp_path_factory):

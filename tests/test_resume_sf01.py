@@ -24,6 +24,7 @@ def test_resume_sf01_matches_single_run(spark, pages_sf01, tmp_path_factory):
     from text_extraction_evaluation_spark.plans.jobs import (
         ChunkFailure,
         read_extracted,
+        read_run_metrics,
         run_extraction_job,
     )
     from text_extraction_evaluation_spark.sources.catalog import LocalCatalog
@@ -59,4 +60,5 @@ def test_resume_sf01_matches_single_run(spark, pages_sf01, tmp_path_factory):
     assert diff == 0
 
     # lineage metrics cover every committed chunk of the resumed run
-    assert len(cat.committed_chunks("run_metrics")) == 4
+    chunk_ids = read_run_metrics(spark, root_a).select("chunk_id").distinct().collect()
+    assert len(chunk_ids) == 4

@@ -24,9 +24,10 @@ Scale notes:
 * columns are pruned explicitly before the kernel (the python-map
   stage consumes whole rows — Catalyst cannot prune through it);
 * per-partition lineage counters ride along as cheap columns
-  (pid/bytes_in and each batch's start and end time) and are
-  aggregated into the ``run_metrics`` table by ``plans.jobs`` — no
-  Python accumulators (per-row, slow).
+  (pid/bytes_in and each batch's start and end time), are committed
+  with the extracted rows, and are aggregated when read by
+  ``plans.jobs.read_run_metrics`` — no Python accumulators (per-row,
+  slow).
 """
 
 from __future__ import annotations

@@ -2,12 +2,12 @@
 
 The 100 TB design: pages are bucketed by url-hash; buckets are grouped
 into CHUNKS; each chunk is extracted and committed atomically through
-the catalog together with its per-partition lineage rows
-(``run_metrics``). A re-run after any failure:
+the catalog. Its per-partition lineage rides along in the committed
+rows (the kernel's ``pid``/``bytes_in``/batch-time columns) and its
+``run_id`` in the chunk's manifest entry, so lineage lands in the same
+commit as the data; ``read_run_metrics`` aggregates it when asked. A
+re-run after any failure:
 
-* first commits the ``run_metrics`` of any committed chunk that lacks
-  them (a run that died between a chunk's two commits), from the
-  committed files and the ``run_id`` in the chunk's manifest entry;
 * skips chunks whose commit is already in the manifest (fast path);
 * anti-joins the committed url set out of the staged input (safety
   net — no url is ever extracted twice even if bucket assignment
@@ -26,15 +26,11 @@ slightly slower; the parquet stage also survives a lost executor.)
 
 Spark job budget: staging is one job per shuffle in the input's
 lineage (under adaptive execution: the latest-crawl window, the url
-repartition) plus the staging write; each chunk is then exactly two
-jobs — the extraction write and the ``run_metrics`` write:
+repartition) plus the staging write; each chunk is then exactly one
+job, its extraction write:
 
 * ``url_bucket`` is recomputed from the kernel's output ``url``, so a
   chunk's plan has no join back to its input;
-* ``run_metrics`` come from the chunk's read-back coalesced to one
-  partition, so the aggregation needs no shuffle, and when chunks run
-  one at a time a chunk's lineage commit overlaps the next chunk's
-  extraction;
 * every read is typed (explicit or manifest-recorded schema), so none
   pays a parquet-footer inference job.
 
@@ -48,8 +44,10 @@ extraction kernel is a map-only stage.
 
 from __future__ import annotations
 
+import math
 import shutil
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -102,27 +100,6 @@ def run_metrics_from_extracted(extracted_chunk: DataFrame, run_id: str, chunk_id
     )
 
 
-def _commit_run_metrics(spark: SparkSession, cat: LocalCatalog, chunk_id: str, run_id: str) -> None:
-    """Derive a committed chunk's lineage rows from its files and commit
-    them. The chunk is read back typed and coalesced to one partition,
-    so the aggregation needs no shuffle: one Spark job."""
-    path = cat.committed_chunks("extracted")[chunk_id]["path"]
-    back = spark.read.schema(CHUNK_SCHEMA).parquet(path).coalesce(1)
-    cat.commit_append(
-        run_metrics_from_extracted(back, run_id, chunk_id),
-        "run_metrics", chunk_id, meta={"run_id": run_id},
-    )
-
-
-def _backfill_run_metrics(spark: SparkSession, cat: LocalCatalog) -> None:
-    """Commit the missing lineage of chunks whose ``extracted`` commit
-    landed but whose ``run_metrics`` commit did not."""
-    have = cat.committed_chunks("run_metrics")
-    for chunk_id, entry in sorted(cat.committed_chunks("extracted").items()):
-        if chunk_id not in have and "run_id" in entry:
-            _commit_run_metrics(spark, cat, chunk_id, entry["run_id"])
-
-
 def _stage(
     spark: SparkSession,
     pages: DataFrame,
@@ -166,9 +143,8 @@ def run_extraction_job(
 
     ``fail_after_chunks=k`` raises ChunkFailure after k successful chunk
     commits (resume-test hook). Re-invoking with the same ``out_root``
-    resumes: missing lineage is committed first, committed chunks are
-    skipped, the committed url set is anti-joined out of the staged
-    input.
+    resumes: committed chunks are skipped, the committed url set is
+    anti-joined out of the staged input.
     """
     import threading
 
@@ -179,8 +155,6 @@ def run_extraction_job(
     for orphan in cat.root.glob("_staged-*"):
         shutil.rmtree(orphan, ignore_errors=True)
     cat.vacuum("extracted")
-    cat.vacuum("run_metrics")
-    _backfill_run_metrics(spark, cat)
 
     pending: list[tuple[list[int], str]] = []
     for lo in range(0, n_buckets, buckets_per_chunk):
@@ -200,23 +174,17 @@ def run_extraction_job(
     # (counted commits + in-flight workers), never the whole queue
     abort = threading.Event()
 
-    def extract_chunk(chunk_buckets: list[int], chunk_id: str) -> None:
-        chunk = staged.filter(F.col("url_bucket").isin(chunk_buckets))
-        extracted = with_bucket(extract_pages(chunk), n_buckets)
-        # one write materializes the kernel once; metrics are derived
-        # from the committed files (consistent by construction)
-        cat.commit_append(extracted, "extracted", chunk_id,
-                          meta={"run_id": run_id, "buckets": chunk_buckets})
-
-    def commit_lineage(chunk_id: str) -> None:
-        _commit_run_metrics(spark, cat, chunk_id, run_id)
-
     def do_chunk(chunk_buckets: list[int], chunk_id: str) -> None:
         if abort.is_set():
             return
         try:
-            extract_chunk(chunk_buckets, chunk_id)
-            commit_lineage(chunk_id)
+            chunk = staged.filter(F.col("url_bucket").isin(chunk_buckets))
+            extracted = with_bucket(extract_pages(chunk), n_buckets)
+            # one write materializes the kernel once; the rows carry
+            # their lineage, the manifest entry their run and buckets
+            cat.commit_append(extracted, "extracted", chunk_id, meta={
+                "run_id": run_id, "buckets": chunk_buckets, "n_buckets": n_buckets,
+            })
             with lock:
                 state["committed"] += 1
                 if fail_after_chunks is not None and state["committed"] >= fail_after_chunks:
@@ -232,40 +200,13 @@ def run_extraction_job(
             [b for chunk_buckets, _ in pending for b in chunk_buckets], staging,
         )
         if max_concurrent_chunks <= 1:
-            _run_pipelined(spark, extract_chunk, commit_lineage, pending, fail_after_chunks)
+            for chunk_buckets, chunk_id in pending:
+                do_chunk(chunk_buckets, chunk_id)
         else:
             _run_concurrently(do_chunk, pending, max_concurrent_chunks)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
     return cat
-
-
-def _run_pipelined(spark, extract_chunk, commit_lineage, pending, fail_after_chunks) -> None:
-    """One chunk at a time, each chunk's lineage commit running on a
-    second thread while the next chunk extracts: the lineage job and
-    its driver-side planning (~0.2 s on ``local[4]``) hide behind the
-    extraction job. At most one lineage commit is in flight, and its
-    error surfaces before the next one starts. If an extraction raises,
-    leaving the ``with`` block still waits for the in-flight lineage
-    commit; should that commit fail too, its error is dropped for the
-    extraction's and the next run commits the missing lineage."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    # the job group, tags and other local properties follow the job
-    in_thread = inheritable_thread_target(spark)(commit_lineage)
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        lineage = None
-        for n, (chunk_buckets, chunk_id) in enumerate(pending, 1):
-            extract_chunk(chunk_buckets, chunk_id)
-            if lineage is not None:
-                lineage.result()
-            lineage = pool.submit(in_thread, chunk_id)
-            if fail_after_chunks is not None and n >= fail_after_chunks:
-                lineage.result()
-                raise ChunkFailure(f"injected failure after {n} chunks")
-        lineage.result()
 
 
 def _run_concurrently(do_chunk, pending: list[tuple[list[int], str]], workers: int) -> None:
@@ -294,6 +235,24 @@ def read_extracted(spark: SparkSession, out_root: str) -> DataFrame | None:
     return None if df is None else df.select(*EXTRACTED_COLS)
 
 
+def read_run_metrics(spark: SparkSession, out_root: str) -> DataFrame | None:
+    """Per-partition lineage of the committed extraction output
+    (``RUN_METRICS_COLS``): each committed chunk's ride-along columns,
+    aggregated under the chunk id and ``run_id`` of its manifest entry.
+    Nothing is stored, so a chunk's lineage lands in its own commit and
+    costs a scan only when read. Each chunk is coalesced to one
+    partition, so its aggregation needs no shuffle."""
+    chunks = sorted(LocalCatalog(out_root).committed_chunks("extracted").items())
+    views = [
+        run_metrics_from_extracted(
+            spark.read.schema(CHUNK_SCHEMA).parquet(entry["path"]).coalesce(1),
+            entry["run_id"], chunk_id,
+        )
+        for chunk_id, entry in chunks
+    ]
+    return reduce(DataFrame.unionByName, views) if views else None
+
+
 def run_score_job(
     spark: SparkSession,
     out_root: str,
@@ -301,18 +260,30 @@ def run_score_job(
     extractor: str = "justext_spark",
 ) -> LocalCatalog:
     """Score the committed extraction output against gold and commit
-    ``scores`` + ``report`` tables (S4) — idempotent like extraction."""
+    ``scores`` + ``report`` tables (S4) — idempotent like extraction.
+
+    Raises, committing nothing, unless the committed chunks cover
+    every url hash: the commit id is the fixed ``full``, so a report
+    over a partial extraction (one a failed run left) would be returned
+    by every later run. A resume may change ``n_buckets``, so a hash is
+    covered when the buckets of any ``n_buckets`` it was cut under
+    hold it; each residue modulo their lcm is checked."""
     from ..operators.report import ranked_report
     from ..operators.score import score_extracted
 
     cat = LocalCatalog(out_root)
+    cover: dict[int | None, set[int]] = {}
+    for c in cat.committed_chunks("extracted").values():
+        cover.setdefault(c.get("n_buckets"), set()).update(c["buckets"])
+    if not cover or None in cover or not all(
+        any(r % n in buckets for n, buckets in cover.items())
+        for r in range(math.lcm(*cover))
+    ):
+        raise RuntimeError(f"incomplete extraction under {out_root}: buckets {cover}")
     # orphans of a hard-killed run, as in run_extraction_job
     cat.vacuum("scores")
     cat.vacuum("report")
-    extracted = read_extracted(spark, out_root)
-    if extracted is None:
-        raise RuntimeError(f"no committed extraction output under {out_root}")
-    scores = score_extracted(extracted, gold, extractor=extractor)
+    scores = score_extracted(read_extracted(spark, out_root), gold, extractor=extractor)
     cat.commit_append(scores, "scores", "full")
     cat.commit_append(ranked_report(cat.read(spark, "scores")), "report", "full")
     return cat
