@@ -18,7 +18,11 @@ from collections.abc import Callable
 import pandas as pd
 
 from text_extraction_evaluation_spark.algo.bte import extract_bytes_bte
-from text_extraction_evaluation_spark.algo.justext import ExtractionResult, extract_bytes
+from text_extraction_evaluation_spark.algo.justext import (
+    STATUS_PARSE_ERROR,
+    ExtractionResult,
+    extract_bytes,
+)
 from text_extraction_evaluation_spark.algo.metrics import score_texts
 from text_extraction_evaluation_spark.algo.params import DEFAULT_PARAMS, JustextParams
 from text_extraction_evaluation_spark.algo.textdensity import extract_bytes_density
@@ -99,7 +103,9 @@ def oracle_scores(
 ) -> pd.DataFrame:
     g = gold.set_index("url")
     rows = []
-    for url, text in zip(extracted["url"], extracted["text"], strict=True):
+    for url, text, status in zip(
+        extracted["url"], extracted["text"], extracted["status"], strict=True
+    ):
         if url not in g.index:
             continue
         grow = g.loc[url]
@@ -108,7 +114,8 @@ def oracle_scores(
             (url, extractor, grow["dataset"],
              s.precision, s.recall, s.f1,
              s.precision_bow, s.recall_bow, s.f1_bow,
-             s.matched, s.matched_bow, s.retrieved, s.relevant, s.status)
+             s.matched, s.matched_bow, s.retrieved, s.relevant,
+             STATUS_PARSE_ERROR if status == STATUS_PARSE_ERROR else s.status)
         )
     return pd.DataFrame(
         rows,

@@ -46,16 +46,13 @@ DOUBLE_ALLOWLIST: dict[str, tuple[str, ...]] = {
     "doc_containment": ("containment",),
     "doc_sample_group_topk": ("priority",),
     "doc_sample_weighted": ("priority",),
-    "dsir_importance_weights": ("log_weight",),
     "dup_span_census": ("dup_frac",),
     "embedding_norms": ("avg_norm", "min_norm", "max_norm"),
     "embedding_sq8_census": ("mse_per_dim",),
     "hard_negative_mining": ("avg_hard_cos",),
     "lang_distribution": ("avg_chars",),
     "lang_id": ("lang_score",),
-    "lm_perplexity_score": ("avg_nll", "ppl"),
     "media_features": ("value",),
-    "passage_chunk_census": ("expansion_ratio",),
     "pca_project_census": ("mean_proj",),
     "q10_returned_items": ("revenue", "c_acctbal"),
     "q14_promo_revenue": ("promo_revenue_pct",),
@@ -83,7 +80,6 @@ DOUBLE_ALLOWLIST: dict[str, tuple[str, ...]] = {
     "q_rank_customers_window": ("acctbal",),
     "q_rollup_order_counts": ("total_price",),
     "q_top_customers": ("revenue",),
-    "quality_classifier_score": ("score",),
     "quality_filter": ("avg_mean_len", "avg_stop_ratio", "avg_uniq_ratio"),
     "quality_repetition": (
         "top_token_frac",

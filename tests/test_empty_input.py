@@ -24,9 +24,6 @@ REPRESENTATIVE = [
     "bm25_topk",
     "tfidf_top_terms",
     "lang_id",
-    "lm_perplexity_score",
-    "dsir_importance_weights",
-    "linear_probe_train",
     "kmeans_embeddings",
     "pca_power_iteration",
     "pca_project_census",
@@ -40,8 +37,6 @@ REPRESENTATIVE = [
     "unicode_nfc_census",
     "quality_filter",
     "quality_repetition",
-    "quality_classifier_score",
-    "sequence_packing",
     "benchmark_decontamination",
     "decontamination_clean",
     "crawl_novel_shingles",
@@ -52,13 +47,11 @@ REPRESENTATIVE = [
     "crawl_content_diff",
     "vocab_growth_census",
     "token_entropy_census",
-    "bigram_lift_topk",
     "anchor_text_census",
     "page_encoding_census",
     "hard_negative_mining",
     "embedding_sq8_census",
     "phrase_search_census",
-    "quality_ppl_contingency",
     "mixture_temperature_plan",
     "q_event_funnel",
     "q_retention_cohorts",
@@ -70,7 +63,6 @@ REPRESENTATIVE = [
     "stopword_discovery",
     "bm25_mrr_eval",
     "ann_dim_truncation_recall",
-    "passage_chunk_census",
     "dedup_banding_sweep",
     "span_churn_census",
     "q18_large_orders",

@@ -97,3 +97,62 @@ def test_null_html_row_through_the_spark_kernels(spark):
             assert got[url].status == "ok", op.__name__
             assert got[url].err is None
             assert got[url].bytes_in == len(PAGE)
+
+
+def test_parse_error_is_a_report_failure(spark, docs_pdf):
+    """A page whose extraction failed keeps ``parse_error`` through
+    scoring, so the report counts it in ``n_fail`` and not in
+    ``n_empty`` (its metrics are those of its empty text), in Spark and
+    in the oracle alike."""
+    from pyspark.sql import functions as F
+
+    from oracle.run_oracle import (
+        oracle_extract,
+        oracle_gold,
+        oracle_latest_crawl,
+        oracle_pages,
+        oracle_report,
+        oracle_scores,
+    )
+    from tests.conftest import SF0001
+    from text_extraction_evaluation_spark.operators.extract import (
+        extract_pages,
+        latest_crawl,
+    )
+    from text_extraction_evaluation_spark.operators.report import report
+    from text_extraction_evaluation_spark.operators.score import score_extracted
+    from text_extraction_evaluation_spark.sources.readers import gold_df, pages_df
+
+    pages_o, gold_o = oracle_pages(docs_pdf), oracle_gold(docs_pdf)
+    url = min(set(pages_o["url"]) & set(gold_o["url"]))
+    pages_o.loc[pages_o["url"] == url, "html"] = None
+    scores_o = oracle_scores(oracle_extract(oracle_latest_crawl(pages_o)), gold_o)
+
+    pages = pages_df(spark, SF0001).withColumn(
+        "html",
+        F.when(F.col("url") == url, F.lit(None).cast("binary")).otherwise(F.col("html")),
+    )
+    scores = score_extracted(extract_pages(latest_crawl(pages)), gold_df(spark, SF0001))
+    scores = scores.cache()
+    try:
+        got = {r.url: r for r in scores.collect()}
+        rep = {(r.extractor, r.dataset): r for r in report(scores).collect()}
+    finally:
+        scores.unpersist()
+
+    assert got[url].status == "parse_error"
+    assert got[url].retrieved == 0
+    assert {u: r.status for u, r in got.items()} == dict(
+        zip(scores_o["url"], scores_o["status"], strict=True)
+    )
+    dataset = got[url].dataset
+    same = [r for r in got.values() if r.dataset == dataset]
+    n_no_gold = sum(r.status == "no_gold" for r in same)
+    row = rep[("justext_spark", dataset)]
+    assert row.n_fail == 1 + n_no_gold
+    assert row.n_empty == sum(r.retrieved == 0 for r in same) - 1
+    want = oracle_report(scores_o).set_index(["extractor", "dataset"])
+    for key, r in rep.items():
+        assert (r.n_ok, r.n_empty, r.n_fail) == tuple(
+            want.loc[key, ["n_ok", "n_empty", "n_fail"]]
+        ), key

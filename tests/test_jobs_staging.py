@@ -159,7 +159,7 @@ def test_rerun_reclaims_orphans_of_a_killed_run(spark, latest, tmp_path):
 
     orphans = [
         plant("_staged-deadbeef"),
-        plant("extracted", "chunk=b0002-0003.staging-deadbeef"),
+        plant("extracted", "chunk=n0004-b0002-0003.staging-deadbeef"),
     ]
     run_extraction_job(spark, latest, root, n_buckets=4, buckets_per_chunk=2)
     assert [p for p in orphans if os.path.exists(p)] == []

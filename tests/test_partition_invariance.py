@@ -20,7 +20,6 @@ from text_extraction_evaluation_spark.plans.queries import SQL_CHECKED
 # aggregates, window-gated dedup.
 INVARIANCE_QUERIES = [
     "extract_report_exact",      # q9 metric sums over the Arrow kernel
-    "lm_perplexity_score",       # integer micro-nat NLL sums
     "hll_distinct_census",       # sketch register max + BIGINT sums
     "dedup_minhash_lsh",         # banded signature equi-join
     "q1_pricing_summary",        # DECIMAL money aggregates

@@ -24,7 +24,7 @@ PIPELINE_KERNEL = re.compile(
 )
 
 # Registry entries whose executed plan runs no pipeline kernel: the
-# relational, corpus, NLP, LM and embedding analytics. CHANGES.md names
+# relational, corpus, NLP and embedding analytics. CHANGES.md names
 # the plan node that decided each one. They are the backlog of
 # ROADMAP item 5; the set may shrink but never grow, and it must match
 # the registry exactly.
@@ -33,11 +33,11 @@ NON_PIPELINE = frozenset({
     "ann_ivf_kmeans_topk", "ann_ivf_recall", "ann_ivf_topk",
     "ann_ivfpq_topk", "ann_lsh_topk", "ann_pq_adc_topk",
     "ann_quality_filtered_topk", "benchmark_decontamination",
-    "bigram_lift_topk", "bm25_mrr_eval", "bm25_topk", "bpe_encode_census",
+    "bm25_mrr_eval", "bm25_topk", "bpe_encode_census",
     "bpe_pair_census", "bpe_train_merges", "corpus_length_histogram",
     "corpus_length_percentiles", "corpus_mixture_weights",
     "crawl_bloom_novelty", "crawl_content_diff", "crawl_novel_shingles",
-    "curation_funnel", "decontamination_clean",
+    "decontamination_clean",
     "dedup_banding_sweep", "dedup_cluster_histogram", "dedup_components",
     "dedup_edit_distance", "dedup_embedding_cosine", "dedup_exact",
     "dedup_jaccard_prefix", "dedup_keep_best_census", "dedup_keep_census",
@@ -46,16 +46,16 @@ NON_PIPELINE = frozenset({
     "dedup_simhash_pairs", "dedup_threshold_sweep", "doc_containment",
     "doc_fingerprint", "doc_rolling_fingerprints", "doc_sample_group_topk",
     "doc_sample_stratified", "doc_sample_weighted", "doc_shard_assignment",
-    "dsir_importance_weights", "dup_span_census", "dup_span_clean",
+    "dup_span_census", "dup_span_clean",
     "embedding_norms", "embedding_sq8_census", "hard_negative_mining",
     "heavy_hitters_cms", "hll_distinct_census", "kmeans_embeddings",
     "lang_distribution", "lang_id", "lang_source_pivot", "langid_confusion",
-    "leakage_safe_split_census", "linear_probe_train",
-    "lm_perplexity_score", "media_features", "mixture_temperature_plan",
+    "leakage_safe_split_census",
+    "media_features", "mixture_temperature_plan",
     "outlink_path_census", "page_byte_census", "page_encoding_census",
-    "passage_chunk_census", "pca_power_iteration", "pca_project_census",
+    "pca_power_iteration", "pca_project_census",
     "pdf_pages", "phrase_search_census", "pii_redaction",
-    "ppl_bucket_census", "q10_returned_items", "q13_customer_distribution",
+    "q10_returned_items", "q13_customer_distribution",
     "q14_promo_revenue", "q15_top_supplier", "q16_parts_supplier",
     "q17_small_quantity", "q18_large_orders", "q19_disjunctive_revenue",
     "q1_pricing_summary", "q20_promo_excess_suppliers",
@@ -72,11 +72,11 @@ NON_PIPELINE = frozenset({
     "q_min_cost_supplier", "q_nation_revenue", "q_price_ntile",
     "q_rank_customers_window", "q_retention_cohorts",
     "q_rollup_order_counts", "q_top_customers", "q_urgent_shipped_orders",
-    "q_user_state_scd2", "quality_classifier_score", "quality_filter",
-    "quality_ppl_contingency", "quality_repetition",
+    "q_user_state_scd2", "quality_filter",
+    "quality_repetition",
     "quantile_sample_audit", "readability_census",
     "scd2_incremental_census", "scd2_page_history", "semantic_dedup_census",
-    "sequence_packing", "source_length_trend", "source_median_chars",
+    "source_length_trend", "source_median_chars",
     "source_overlap_matrix", "source_trimmed_mean", "stopword_discovery",
     "table_profile_census", "template_shape_census", "text_quality",
     "text_token_stats", "textrank_keywords", "tfidf_top_terms",

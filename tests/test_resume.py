@@ -253,11 +253,11 @@ def test_vacuum_reclaims_unrecorded_chunk_dirs(spark, pages, tmp_path_factory):
     run_extraction_job(spark, pages, root, n_buckets=4, buckets_per_chunk=2)
     cat = LocalCatalog(root)
     before = set(cat.committed_chunks("extracted"))
-    assert before == {"b0000-0001", "b0002-0003"}
+    assert before == {"n0004-b0000-0001", "n0004-b0002-0003"}
 
     tdir = os.path.join(root, "extracted")
-    orphans = [os.path.join(tdir, "chunk=b0000-0003"),
-               os.path.join(tdir, "chunk=b0004-0007.staging-ab")]
+    orphans = [os.path.join(tdir, "chunk=n0008-b0000-0003"),
+               os.path.join(tdir, "chunk=n0008-b0004-0007.staging-ab")]
     for o in orphans:
         os.makedirs(o)
         open(os.path.join(o, "part-0.parquet"), "wb").close()

@@ -39,10 +39,10 @@ STOPLISTS: dict[str, frozenset[str]] = {
 }
 
 # Compact natural-language stoplists (top function words; public
-# knowledge) — the production default for real corpora. Pass
-# ``stoplists=NATURAL_STOPLISTS`` into the extraction operators. The
-# benchmark keeps the corpus-frequency lists above so golden parity
-# files stay meaningful on the synthetic vocabulary.
+# knowledge) for real corpora: pass ``stoplists=NATURAL_STOPLISTS`` to
+# ``justext.extract_text`` or ``extract_bytes``. The Spark operators
+# use the corpus-frequency lists above, so golden parity files stay
+# meaningful on the synthetic vocabulary.
 NATURAL_STOPLISTS: dict[str, frozenset[str]] = {
     "en": frozenset("""a about after all also an and any are as at be because been
         but by can could do even first for from had has have he her his how i if in

@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..algo.params import DEFAULT_PARAMS, JustextParams
 from .extract import extract_spans
 
 CHURN_SCHEMA = (
@@ -58,17 +57,14 @@ def recrawled_pair(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
     return old, new
 
 
-def crawl_span_churn(
-    pages: DataFrame,
-    params: JustextParams = DEFAULT_PARAMS,
-) -> DataFrame:
+def crawl_span_churn(pages: DataFrame) -> DataFrame:
     """Paragraph-multiset diff between the oldest and newest crawl of
     every recrawled url: n_common = Σ_text min(count_old, count_new),
     n_added/n_removed are the remainders. Runs the span kernel over
     exactly the recrawled subset (never the whole corpus twice)."""
     old, new = recrawled_pair(pages)
-    spans_old = extract_spans(old, params).select("url", "text")
-    spans_new = extract_spans(new, params).select("url", "text")
+    spans_old = extract_spans(old).select("url", "text")
+    spans_new = extract_spans(new).select("url", "text")
 
     def span_churn_diff(key: tuple, a: pd.DataFrame, b: pd.DataFrame) -> pd.DataFrame:
         ca = a["text"].value_counts()

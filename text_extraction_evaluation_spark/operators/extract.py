@@ -41,7 +41,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..algo.justext import extract_bytes
-from ..algo.params import DEFAULT_PARAMS, JustextParams
 
 EXTRACTED_COLS = ["url", "warc_ts", "lang", "text", "n_paragraphs", "n_good", "status", "err"]
 
@@ -137,15 +136,9 @@ def _extraction_kernel(pages: DataFrame, extract_fn) -> DataFrame:
     return pruned.mapInArrow(extract_kernel, EXTRACT_SCHEMA)
 
 
-def extract_pages(
-    pages: DataFrame,
-    params: JustextParams = DEFAULT_PARAMS,
-    stoplists: dict[str, frozenset[str]] | None = None,
-) -> DataFrame:
+def extract_pages(pages: DataFrame) -> DataFrame:
     """pages(url, warc_ts, html, lang, ...) -> extracted rows + lineage cols."""
-    return _extraction_kernel(
-        pages, lambda raw, lang: extract_bytes(raw, lang, params, stoplists)
-    )
+    return _extraction_kernel(pages, extract_bytes)
 
 
 def extracted_clean(extracted: DataFrame) -> DataFrame:
@@ -153,11 +146,7 @@ def extracted_clean(extracted: DataFrame) -> DataFrame:
     return extracted.select(*EXTRACTED_COLS)
 
 
-def extract_spans(
-    pages: DataFrame,
-    params: JustextParams = DEFAULT_PARAMS,
-    stoplists: dict[str, frozenset[str]] | None = None,
-) -> DataFrame:
+def extract_spans(pages: DataFrame) -> DataFrame:
     """Span-level parity output: one row per paragraph with context-free
     and final classes + features (FIXTURES.md §4 ``paragraphs``)."""
     pruned = pages.select("url", "html", "lang")
@@ -172,7 +161,7 @@ def extract_spans(
                 batch.column(names.index("lang")).to_pylist(),
                 strict=True,
             ):
-                res = extract_bytes(raw, lang, params, stoplists)
+                res = extract_bytes(raw, lang)
                 for cp in res.paragraphs:
                     for lst, v in zip(cols, (
                         url, cp.idx, cp.text, cp.class_cf, cp.class_final,

@@ -10,7 +10,9 @@ kernel in operators/extract.py — the kernel reads plain Python strings
 per row, so the pandas leg's DataFrame build on both sides of every
 batch is pure overhead), emitting both metric families side by side
 plus raw token counters so dataset-level micro aggregates can be
-recomputed relationally.
+recomputed relationally. A page whose extraction failed keeps its
+``parse_error`` status (its metrics are those of its empty text), so the
+report counts it as a failure, not as an empty extract.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..algo.justext import STATUS_PARSE_ERROR
 from ..algo.metrics import score_texts
 
 SCORES_SCHEMA = (
@@ -38,7 +41,7 @@ def score_extracted(
     extractor: str = "justext_spark",
 ) -> DataFrame:
     """scores(url, extractor, dataset, P/R/F1 x {lcs,bow}, counters, status)."""
-    joined = extracted.select("url", "text").join(
+    joined = extracted.select("url", "text", "status").join(
         F.broadcast(gold.select("url", "gold_text", "dataset")), "url", "inner"
     )
 
@@ -48,6 +51,7 @@ def score_extracted(
             urls = batch.column(names.index("url"))
             texts = batch.column(names.index("text")).to_pylist()
             gtexts = batch.column(names.index("gold_text")).to_pylist()
+            extract_status = batch.column(names.index("status")).to_pylist()
             ds_arr = batch.column(names.index("dataset"))
             scored = [
                 score_texts(t or "", g or "")
@@ -68,7 +72,11 @@ def score_extracted(
                 pa.array([s.matched_bow for s in scored], pa.int64()),
                 pa.array([s.retrieved for s in scored], pa.int64()),
                 pa.array([s.relevant for s in scored], pa.int64()),
-                pa.array([s.status for s in scored], pa.string()),
+                pa.array(
+                    [STATUS_PARSE_ERROR if e == STATUS_PARSE_ERROR else s.status
+                     for s, e in zip(scored, extract_status, strict=True)],
+                    pa.string(),
+                ),
             ]
             out_names = ["url", "extractor", "dataset",
                          "precision", "recall", "f1",

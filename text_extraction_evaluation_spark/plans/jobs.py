@@ -8,7 +8,9 @@ rows (the kernel's ``pid``/``bytes_in``/batch-time columns) and its
 commit as the data; ``read_run_metrics`` aggregates it when asked. A
 re-run after any failure:
 
-* skips chunks whose commit is already in the manifest (fast path);
+* skips chunks whose commit is already in the manifest (fast path; a
+  chunk id names its bucketing and bucket range, so a resume under
+  another ``n_buckets`` skips nothing it has not extracted);
 * anti-joins the committed url set out of the staged input (safety
   net — no url is ever extracted twice even if bucket assignment
   changed between runs, BASELINE.json:6 resumable runs).
@@ -159,7 +161,7 @@ def run_extraction_job(
     pending: list[tuple[list[int], str]] = []
     for lo in range(0, n_buckets, buckets_per_chunk):
         chunk_buckets = list(range(lo, min(lo + buckets_per_chunk, n_buckets)))
-        chunk_id = f"b{chunk_buckets[0]:04d}-{chunk_buckets[-1]:04d}"
+        chunk_id = f"n{n_buckets:04d}-b{chunk_buckets[0]:04d}-{chunk_buckets[-1]:04d}"
         if not cat.is_committed("extracted", chunk_id):
             pending.append((chunk_buckets, chunk_id))
     if not pending:

@@ -50,7 +50,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Cross-engine determinism: tf/df/dl/N are exact integers; the one
     transcendental (idf's ln) is quantized to integer micro-nats
-    before any ranking (same convention as lm_perplexity_score); the
+    before any ranking (as in token_entropy_census); the
     remaining arithmetic is identically-ordered double ops from exact
     integers, so scores are bitwise equal and the (score desc, doc_id)
     rank cannot flap."""
@@ -740,6 +740,18 @@ WHERE term_rank <= 5
 """
 
 
+def _bigram_structs(tok):
+    """Positional (w1, w2) bigrams as an array of structs — slice+zip
+    (O(n) per row) rather than per-index element_at (O(n^2)); see
+    functions.text.word_shingles_all for the measured rationale."""
+    length = F.greatest(F.size(tok) - 1, F.lit(0))
+    pre = F.slice(tok, 1, length)
+    suf = F.slice(tok, 2, length)
+    return F.zip_with(
+        pre, suf, lambda a, b: F.struct(a.alias("w1"), b.alias("w2"))
+    )
+
+
 # TextRank (Mihalcea & Tarau 2004) constants: the published damping
 # d = 0.85 as the exact integer pair 85/100; ranks live in micro-units
 # so the whole power iteration is BIGINT-exact in both engines.
@@ -779,8 +791,6 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     the symmetrized graph has >= 1 in-edge, so the per-iteration
     aggregate covers the whole node set and no outer join is needed."""
     docs = _docs_par(spark, sf_dir)
-    from .q_lm import _bigram_structs
-
     adj = (
         docs.select(
             F.explode(_bigram_structs(tokens_col(F.lower(F.col("text"))))).alias("bg")
@@ -1578,7 +1588,7 @@ def token_entropy_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Cross-engine determinism: the one ``ln`` per (doc, type) is taken
     on an exact-integer ratio ``n/c_i`` and quantized to micro-nats
-    (module convention, see plans.q_lm); per-doc entropy is the exact
+    (as bm25_topk's idf is); per-doc entropy is the exact
     BIGINT ``sum(c_i * term_e6) DIV n`` and per-source results are
     exact BIGINT sums, so no aggregation-order drift is possible.
 

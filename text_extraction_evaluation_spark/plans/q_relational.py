@@ -1484,7 +1484,7 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     a LEFT ANTI join; the scalar aggregate broadcasts as a one-row
     frame (shows as BroadcastNestedLoopJoin in the plan, but with a
     single-row build side — the wanted scalar-subquery shape, same as
-    the q_lm/q_corpus scalar joins)."""
+    the q_corpus scalar joins)."""
     cust = _t(spark, sf_dir, "customer").select(
         "c_custkey",
         (F.col("c_custkey") % 7).cast("bigint").alias("band"),

@@ -16,7 +16,6 @@ directly above/below its SQL twin, so the pair stays in sync):
 * ``plans.q_embedding``  — ANN/similarity, specialty joins, TPC-H tail
 * ``plans.q_extraction`` — extraction-family gates + profiling/pivot
 * ``plans.q_webtext``    — crawl/host/URL/layout operators
-* ``plans.q_lm``         — perplexity, DSIR, packing, curation funnel
 
 Cross-engine determinism rules used throughout:
 * money/quantity aggregates leave the query as exact integer units
@@ -44,7 +43,6 @@ from __future__ import annotations
 from .q_corpus import *  # noqa: F401,F403
 from .q_embedding import *  # noqa: F401,F403
 from .q_extraction import *  # noqa: F401,F403
-from .q_lm import *  # noqa: F401,F403
 from .q_nlp import *  # noqa: F401,F403
 from .q_relational import *  # noqa: F401,F403
 from .q_webtext import *  # noqa: F401,F403
@@ -52,7 +50,6 @@ from . import (
     q_corpus,
     q_embedding,
     q_extraction,
-    q_lm,
     q_nlp,
     q_relational,
     q_webtext,
@@ -79,6 +76,5 @@ SQL_CHECKED = merge_registries(
     q_embedding._REGISTRY,
     q_extraction._REGISTRY,
     q_webtext._REGISTRY,
-    q_lm._REGISTRY,
     q_nlp._REGISTRY,
 )
