@@ -24,7 +24,6 @@ from text_extraction_evaluation_spark.algo.justext import (
     extract_bytes,
 )
 from text_extraction_evaluation_spark.algo.metrics import score_texts
-from text_extraction_evaluation_spark.algo.params import DEFAULT_PARAMS, JustextParams
 from text_extraction_evaluation_spark.algo.textdensity import extract_bytes_density
 from text_extraction_evaluation_spark.sources.synth import (
     synth_gold_pdf,
@@ -67,10 +66,8 @@ def _oracle_extract_rows(
     )
 
 
-def oracle_extract(
-    pages: pd.DataFrame, params: JustextParams = DEFAULT_PARAMS
-) -> pd.DataFrame:
-    return _oracle_extract_rows(pages, lambda raw, lang: extract_bytes(raw, lang, params))
+def oracle_extract(pages: pd.DataFrame) -> pd.DataFrame:
+    return _oracle_extract_rows(pages, extract_bytes)
 
 
 def oracle_extract_density(pages: pd.DataFrame) -> pd.DataFrame:
@@ -83,10 +80,10 @@ def oracle_extract_bte(pages: pd.DataFrame) -> pd.DataFrame:
     return _oracle_extract_rows(pages, lambda raw, _lang: extract_bytes_bte(raw))
 
 
-def oracle_spans(pages: pd.DataFrame, params: JustextParams = DEFAULT_PARAMS) -> pd.DataFrame:
+def oracle_spans(pages: pd.DataFrame) -> pd.DataFrame:
     rows = []
     for url, raw, lang in zip(pages["url"], pages["html"], pages["lang"], strict=True):
-        res = extract_bytes(raw, lang, params)
+        res = extract_bytes(raw, lang)
         for cp in res.paragraphs:
             rows.append((url, cp.idx, cp.text, cp.class_cf, cp.class_final,
                          cp.link_density, cp.stopword_density, cp.word_count,

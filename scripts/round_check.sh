@@ -7,10 +7,11 @@
 #      count it ran is printed at the end),
 # and then prints the package's .py line count, the tier-1 test count and
 # the dead-code scans (the verify skill's deleting-code step 0): every
-# top-level def/class in the package that only its own definition line
-# and tests/ name (a registry entry is named twice in its own file, at
-# its def and in _REGISTRY, so only unreached helpers show), then every
-# package module that nothing outside tests/ imports.
+# top-level def/class and top-level constant (``NAME =``/``_NAME =``) in
+# the package that only its own definition line and tests/ name (a
+# registry entry is named twice in its own file, at its def and in
+# _REGISTRY, so only unreached helpers show), then every package module
+# that nothing outside tests/ imports.
 # Any failure stops the chain with a non-zero exit.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -35,12 +36,12 @@ pkg_lines="$(find text_extraction_evaluation_spark -name '*.py' -print0 | xargs 
 n_tests="$(python -m pytest tests/ -q --collect-only -p no:cacheprovider | tail -n 1)"
 echo "SIZE: package ${pkg_lines} .py lines; tier-1 ${n_tests}"
 
-# step-0 scan: "<hits in own file> <file> <name>" for each top-level name
-# nothing outside its own file names except tests; 1 hit = only the
-# definition, so only tests reach it (no pipefail: grep -q may close the
-# pipe early)
+# step-0 scan: "<hits in own file> <file> <name>" for each top-level
+# def/class/constant nothing outside its own file names except tests;
+# 1 hit = only the definition, so only tests reach it (no pipefail:
+# grep -q may close the pipe early)
 dead="$(set +o pipefail; for f in $(find text_extraction_evaluation_spark -name '*.py'); do
-  { grep -oP '^(def|class) \K\w+' "$f" || true; } | while read -r n; do
+  { grep -oP '^(?:(?:def|class) \K\w+|_?[A-Z][A-Z0-9_]+(?= =))' "$f" || true; } | while read -r n; do
     grep -rlw --include=*.py "$n" text_extraction_evaluation_spark scripts perfbench bench.py oracle __spark_entry__.py \
       | grep -qvx "$f" || echo "$(grep -cw "$n" "$f") $f $n"
   done

@@ -371,31 +371,6 @@ def test_stopword_discovery_ranks_and_stoplist_hits(spark):
         assert any(r["in_stoplist"] for r in rs), lang
 
 
-def test_bm25_mrr_eval_consistent_with_rankings(spark):
-    """MRR rows must agree with the bm25_topk rankings they evaluate:
-    first_rel_rank is the min rank whose tf clears the relevance bar,
-    reciprocal_rank is exactly 1/rank, and the corpus-wide relevant
-    count can never be smaller than the relevant docs seen in top-k."""
-    from text_extraction_evaluation_spark.plans.queries import (
-        REL_MIN_TF,
-        bm25_mrr_eval,
-        bm25_topk,
-    )
-
-    ranked = bm25_topk(spark, SF0001).collect()
-    mrr = {r["qid"]: r for r in bm25_mrr_eval(spark, SF0001).collect()}
-    assert set(mrr) == {r["qid"] for r in ranked}
-    for qid, row in mrr.items():
-        in_topk = [r for r in ranked if r["qid"] == qid and r["tf"] >= REL_MIN_TF]
-        want_first = min((r["rank"] for r in in_topk), default=0)
-        assert row["first_rel_rank"] == want_first
-        if want_first > 0:
-            assert row["reciprocal_rank"] == round(1.0 / want_first, 6)
-        else:
-            assert row["reciprocal_rank"] == 0.0
-        assert row["n_relevant"] >= len(in_topk)
-
-
 def test_banding_sweep_monotone_and_4x4_matches_lsh(spark):
     """Wider bands are strictly harder to collide: candidate pairs must
     be monotone non-decreasing from 2x8 -> 4x4 -> 8x2 (an 8-wide band

@@ -35,9 +35,6 @@ DOUBLE_ALLOWLIST: dict[str, tuple[str, ...]] = {
     "ann_lsh_topk": ("cos_sim",),
     "ann_quality_filtered_topk": ("cos_sim",),
     "benchmark_decontamination": ("contamination",),
-    "bm25_mrr_eval": ("reciprocal_rank",),
-    "bm25_topk": ("score",),
-    "bpe_encode_census": ("chars_per_token",),
     "corpus_length_percentiles": ("p50_chars", "p90_chars", "p99_chars"),
     "dedup_embedding_cosine": ("cos_sim",),
     "dedup_jaccard_prefix": ("jaccard",),

@@ -2,7 +2,7 @@
 an EMPTY (or schema-stable) result on a zero-row fixture, not crash —
 the behavior a production run hits on an empty partition/day/source.
 Covers each plan family: scans, aggregates, windows, joins, iterative
-loops (BPE / k-means / PCA / probe), sketches, kernels."""
+loops (k-means / PCA / probe), sketches, kernels."""
 
 from __future__ import annotations
 
@@ -19,9 +19,6 @@ REPRESENTATIVE = [
     "dedup_simhash_pairs",
     "doc_containment",
     "heavy_hitters_cms",
-    "bpe_train_merges",
-    "bpe_encode_census",
-    "bm25_topk",
     "tfidf_top_terms",
     "lang_id",
     "kmeans_embeddings",
@@ -51,7 +48,6 @@ REPRESENTATIVE = [
     "page_encoding_census",
     "hard_negative_mining",
     "embedding_sq8_census",
-    "phrase_search_census",
     "mixture_temperature_plan",
     "q_event_funnel",
     "q_retention_cohorts",
@@ -61,7 +57,6 @@ REPRESENTATIVE = [
     "dedup_jaccard_prefix",
     "dedup_threshold_sweep",
     "stopword_discovery",
-    "bm25_mrr_eval",
     "ann_dim_truncation_recall",
     "dedup_banding_sweep",
     "span_churn_census",

@@ -47,8 +47,8 @@ def test_score_job_refuses_a_partial_extraction(spark, tmp_path):
     nothing (a ``full`` report of the partial output would be returned
     by every later run); after a resume, under a finer bucketing that
     nests in the first or under one that does not, every url is
-    extracted once and the report covers every url that both the
-    extraction and gold hold."""
+    extracted once, no chunk is committed empty, and the report covers
+    every url that both the extraction and gold hold."""
     from text_extraction_evaluation_spark.operators.extract import latest_crawl
     from text_extraction_evaluation_spark.plans.jobs import (
         ChunkFailure,
@@ -74,12 +74,19 @@ def test_score_job_refuses_a_partial_extraction(spark, tmp_path):
         run_extraction_job(spark, pages, root, n_buckets=n_buckets, buckets_per_chunk=2)
         df = read_extracted(spark, root)
         assert df.count() == df.select("url").distinct().count() == pages.count()
+        chunks = LocalCatalog(root).committed_chunks("extracted")
+        assert all(spark.read.parquet(c["path"]).count() >= 1 for c in chunks.values())
         run_score_job(spark, root, gold)
         report = LocalCatalog(root).read(spark, "report").collect()
         n_scored = sum(r["n_ok"] + r["n_empty"] + r["n_fail"] for r in report)
         assert n_scored == read_extracted(spark, root).join(gold, "url").count()
 
     resumed_report_covers_every_url(root, 8)
+    # the first run's buckets 0-1 of 4 are buckets 0, 1, 4 and 5 of 8,
+    # so the resume skips those two chunks instead of committing them empty
+    committed = LocalCatalog(root).committed_chunks("extracted")
+    assert "n0008-b0000-0001" not in committed
+    assert "n0008-b0004-0005" not in committed
 
     other = str(tmp_path / "not_nested")
     with pytest.raises(ChunkFailure):

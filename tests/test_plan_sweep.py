@@ -33,9 +33,8 @@ NON_PIPELINE = frozenset({
     "ann_ivf_kmeans_topk", "ann_ivf_recall", "ann_ivf_topk",
     "ann_ivfpq_topk", "ann_lsh_topk", "ann_pq_adc_topk",
     "ann_quality_filtered_topk", "benchmark_decontamination",
-    "bm25_mrr_eval", "bm25_topk", "bpe_encode_census",
-    "bpe_pair_census", "bpe_train_merges", "corpus_length_histogram",
-    "corpus_length_percentiles", "corpus_mixture_weights",
+    "corpus_length_histogram", "corpus_length_percentiles",
+    "corpus_mixture_weights",
     "crawl_bloom_novelty", "crawl_content_diff", "crawl_novel_shingles",
     "decontamination_clean",
     "dedup_banding_sweep", "dedup_cluster_histogram", "dedup_components",
@@ -54,7 +53,7 @@ NON_PIPELINE = frozenset({
     "media_features", "mixture_temperature_plan",
     "outlink_path_census", "page_byte_census", "page_encoding_census",
     "pca_power_iteration", "pca_project_census",
-    "pdf_pages", "phrase_search_census", "pii_redaction",
+    "pdf_pages", "pii_redaction",
     "q10_returned_items", "q13_customer_distribution",
     "q14_promo_revenue", "q15_top_supplier", "q16_parts_supplier",
     "q17_small_quantity", "q18_large_orders", "q19_disjunctive_revenue",
@@ -80,7 +79,7 @@ NON_PIPELINE = frozenset({
     "source_overlap_matrix", "source_trimmed_mean", "stopword_discovery",
     "table_profile_census", "template_shape_census", "text_quality",
     "text_token_stats", "textrank_keywords", "tfidf_top_terms",
-    "token_entropy_census", "token_source_bitmap", "trigram_index_search",
+    "token_entropy_census",
     "unicode_nfc_census", "url_blocklist_filter", "vocab_growth_census",
     "zorder_layout_census"
 })

@@ -113,48 +113,6 @@ def test_cms_never_underestimates_and_is_mergeable(counts):
     assert merged == rows
 
 
-# --- BPE merge application (mirror of plans/q_corpus._bpe_learn) -----------
-
-
-def _seg_of(word: str) -> str:
-    return "".join(f"<{c}>" for c in word)
-
-
-def _apply_replace(seg: str, x: str, y: str) -> str:
-    return seg.replace(f"<{x}><{y}>", f"<{x}{y}>")
-
-
-def _apply_fold(seg: str, x: str, y: str) -> str:
-    import re
-
-    syms = re.findall(r"<([^>]*)>", seg)
-    out: list[str] = []
-    for s in syms:
-        if out and out[-1] == x and s == y:
-            out[-1] = x + y
-        else:
-            out.append(s)
-    return "".join(f"<{s}>" for s in out)
-
-
-@given(st.text("ab", min_size=1, max_size=12),
-       st.sampled_from(["a", "b", "aa", "ab", "ba", "bb"]),
-       st.sampled_from(["a", "b", "aa", "ab", "ba", "bb"]))
-@settings(max_examples=500, deadline=None)
-def test_bpe_string_replace_equals_greedy_fold(word, x, y):
-    """The bracket string-replace merge (what BOTH engines execute)
-    is exactly the left-to-right greedy fold of classic BPE, and a
-    merge never increases the symbol count."""
-    seg = _seg_of(word)
-    # also exercise a second-round segmentation containing multi-char
-    # symbols by first applying ('a','b') via the fold
-    for s in (seg, _apply_fold(seg, "a", "b")):
-        got = _apply_replace(s, x, y)
-        want = _apply_fold(s, x, y)
-        assert got == want
-        assert got.count("<") <= s.count("<")
-
-
 # --- A-ES weighted sampling (mirror of plans/q_embedding) ------------------
 
 

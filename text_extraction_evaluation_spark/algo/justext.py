@@ -177,15 +177,13 @@ def revise_classification(
 def classify(
     paragraphs: list[Paragraph],
     lang: str,
-    params: JustextParams = DEFAULT_PARAMS,
     stoplists: dict[str, frozenset[str]] | None = None,
 ) -> list[ClassifiedParagraph]:
     if stoplists is not None:
         stoplist = stoplists.get(lang, frozenset())
     else:
         stoplist = stoplist_for(lang)
-    if not stoplist:
-        params = params.for_no_stoplist()
+    params = DEFAULT_PARAMS if stoplist else DEFAULT_PARAMS.for_no_stoplist()
 
     cf: list[str] = []
     densities: list[tuple[float, float]] = []
@@ -240,11 +238,10 @@ def decode_and_extract(
 def extract_text(
     html_text: str,
     lang: str,
-    params: JustextParams = DEFAULT_PARAMS,
     stoplists: dict[str, frozenset[str]] | None = None,
 ) -> ExtractionResult:
     """html string -> main-content text ('\\n\\n'-joined good paragraphs)."""
-    classified = classify(segment(html_text), lang, params, stoplists)
+    classified = classify(segment(html_text), lang, stoplists)
     good = [cp.text for cp in classified if cp.class_final == GOOD]
     text = "\n\n".join(good)
     status = STATUS_OK if text else STATUS_EMPTY
@@ -260,10 +257,9 @@ def extract_text(
 def extract_bytes(
     raw: bytes,
     lang: str,
-    params: JustextParams = DEFAULT_PARAMS,
     stoplists: dict[str, frozenset[str]] | None = None,
 ) -> ExtractionResult:
     """Raw page bytes -> ExtractionResult via the deterministic
     charset sniff (the only supported entry point for ``html:binary``
     columns — bytes are never decoded JVM-side, see SURVEY.md §7)."""
-    return decode_and_extract(raw, extract_text, lang, params, stoplists)
+    return decode_and_extract(raw, extract_text, lang, stoplists)

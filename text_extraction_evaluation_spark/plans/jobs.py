@@ -8,9 +8,10 @@ rows (the kernel's ``pid``/``bytes_in``/batch-time columns) and its
 commit as the data; ``read_run_metrics`` aggregates it when asked. A
 re-run after any failure:
 
-* skips chunks whose commit is already in the manifest (fast path; a
-  chunk id names its bucketing and bucket range, so a resume under
-  another ``n_buckets`` skips nothing it has not extracted);
+* skips chunks whose url hashes the committed chunks already hold,
+  under this ``n_buckets`` or another (fast path; a chunk id names its
+  bucketing and bucket range, so ids of different bucketings never
+  collide);
 * anti-joins the committed url set out of the staged input (safety
   net — no url is ever extracted twice even if bucket assignment
   changed between runs, BASELINE.json:6 resumable runs).
@@ -102,6 +103,25 @@ def run_metrics_from_extracted(extracted_chunk: DataFrame, run_id: str, chunk_id
     )
 
 
+def _covered(chunks: dict[str, dict], n_buckets: int, buckets: list[int]) -> bool:
+    """Whether the committed ``extracted`` chunks (manifest entries by
+    chunk id) hold every url hash that falls in ``buckets`` under
+    ``n_buckets``. A resume may change ``n_buckets``, so a hash is held
+    when the buckets of any bucketing it was cut under hold it; each
+    residue modulo the lcm of the bucketings is checked. An entry that
+    does not record its bucketing proves nothing, so none is held."""
+    cover: dict[int | None, set[int]] = {}
+    for c in chunks.values():
+        cover.setdefault(c.get("n_buckets"), set()).update(c["buckets"])
+    if None in cover:
+        return False
+    return all(
+        any(r % n in held for n, held in cover.items())
+        for r in range(math.lcm(n_buckets, *cover))
+        if r % n_buckets in buckets
+    )
+
+
 def _stage(
     spark: SparkSession,
     pages: DataFrame,
@@ -145,8 +165,8 @@ def run_extraction_job(
 
     ``fail_after_chunks=k`` raises ChunkFailure after k successful chunk
     commits (resume-test hook). Re-invoking with the same ``out_root``
-    resumes: committed chunks are skipped, the committed url set is
-    anti-joined out of the staged input.
+    resumes: chunks whose url hashes earlier commits hold are skipped,
+    the committed url set is anti-joined out of the staged input.
     """
     import threading
 
@@ -158,11 +178,12 @@ def run_extraction_job(
         shutil.rmtree(orphan, ignore_errors=True)
     cat.vacuum("extracted")
 
+    committed = cat.committed_chunks("extracted")
     pending: list[tuple[list[int], str]] = []
     for lo in range(0, n_buckets, buckets_per_chunk):
         chunk_buckets = list(range(lo, min(lo + buckets_per_chunk, n_buckets)))
         chunk_id = f"n{n_buckets:04d}-b{chunk_buckets[0]:04d}-{chunk_buckets[-1]:04d}"
-        if not cat.is_committed("extracted", chunk_id):
+        if not _covered(committed, n_buckets, chunk_buckets):
             pending.append((chunk_buckets, chunk_id))
     if not pending:
         return cat
@@ -265,23 +286,16 @@ def run_score_job(
     ``scores`` + ``report`` tables (S4) — idempotent like extraction.
 
     Raises, committing nothing, unless the committed chunks cover
-    every url hash: the commit id is the fixed ``full``, so a report
-    over a partial extraction (one a failed run left) would be returned
-    by every later run. A resume may change ``n_buckets``, so a hash is
-    covered when the buckets of any ``n_buckets`` it was cut under
-    hold it; each residue modulo their lcm is checked."""
+    every url hash (``_covered``): the commit id is the fixed ``full``,
+    so a report over a partial extraction (one a failed run left) would
+    be returned by every later run."""
     from ..operators.report import ranked_report
     from ..operators.score import score_extracted
 
     cat = LocalCatalog(out_root)
-    cover: dict[int | None, set[int]] = {}
-    for c in cat.committed_chunks("extracted").values():
-        cover.setdefault(c.get("n_buckets"), set()).update(c["buckets"])
-    if not cover or None in cover or not all(
-        any(r % n in buckets for n, buckets in cover.items())
-        for r in range(math.lcm(*cover))
-    ):
-        raise RuntimeError(f"incomplete extraction under {out_root}: buckets {cover}")
+    chunks = cat.committed_chunks("extracted")
+    if not _covered(chunks, 1, [0]):
+        raise RuntimeError(f"incomplete extraction under {out_root}: chunks {sorted(chunks)}")
     # orphans of a hard-killed run, as in run_extraction_job
     cat.vacuum("scores")
     cat.vacuum("report")

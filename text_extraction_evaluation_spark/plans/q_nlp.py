@@ -1,8 +1,7 @@
-"""Lexical / index / LM-mixture analytics over `documents`:
-BM25 retrieval + MRR eval, TF-IDF, TextRank, BPE train/encode,
-readability, count-min heavy hitters, decontamination + clean,
-repetition, mixture planning, shard assignment, phrase/trigram/bitmap
-indexes, vocabulary growth, token entropy, stopword discovery.
+"""Lexical / LM-mixture analytics over `documents`: TF-IDF, TextRank,
+readability, count-min heavy hitters, decontamination + clean, source
+overlap, repetition, mixture planning, shard assignment, vocabulary
+growth, token entropy, stopword discovery.
 
 Split out of plans/q_corpus.py (round 4) to keep plan files under
 2,000 lines; each query function stays adjacent to its DuckDB SQL
@@ -10,8 +9,6 @@ twin. Registered into plans.queries.SQL_CHECKED via _REGISTRY.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,204 +19,7 @@ from .common import (  # noqa: F401 — shared helpers + SQL fragments
     STOPWORDS_SORTED,
     _STOP_SQL,
     _docs_par,
-    _t,
 )
-
-
-# BM25 retrieval constants (Robertson et al.; the standard defaults).
-BM25_K1 = 1.2
-BM25_B = 0.75
-BM25_TOPK = 5
-
-
-def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 top-k retrieval over an inverted index — the lexical
-    search primitive data pipelines use for RAG curation and
-    decontamination lookups. Query terms are picked deterministically
-    from the corpus itself (document-frequency ranks 11-15: high-df
-    but below the stopword head), so the fixture needs no external
-    query set.
-
-    Scale shape: term frequencies and document lengths come out of ONE
-    corpus explode + (doc_id, term) hash aggregate that carries dl
-    through the same shuffle (no separate dl join); the query-term
-    table (5 rows) broadcasts onto the postings, so scoring touches
-    only the candidate postings, never the full index; corpus-level N
-    and sum(dl) ride as a one-row broadcast. The final top-k window
-    partitions by query id over candidate rows only.
-
-    Cross-engine determinism: tf/df/dl/N are exact integers; the one
-    transcendental (idf's ln) is quantized to integer micro-nats
-    before any ranking (as in token_entropy_census); the
-    remaining arithmetic is identically-ordered double ops from exact
-    integers, so scores are bitwise equal and the (score desc, doc_id)
-    rank cannot flap."""
-    docs = _docs_par(spark, sf_dir)
-    tok = tokens_col("text")
-    exploded = docs.select(
-        "doc_id", F.size(tok).alias("dl"), F.explode(tok).alias("term")
-    )
-    tf = exploded.groupBy("doc_id", "term").agg(
-        F.count(F.lit(1)).alias("tf"), F.first("dl").alias("dl")
-    )
-    stats = tf.groupBy("doc_id").agg(F.first("dl").alias("dl")).agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-    )
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    wq = Window.orderBy(F.desc("df"), F.asc("term"))
-    qterms = (
-        df_.withColumn("r", F.row_number().over(wq))
-        .filter((F.col("r") >= 11) & (F.col("r") <= 15))
-        .select((F.col("r") - 10).cast("int").alias("qid"), "term", "df")
-    )
-    cand = tf.join(F.broadcast(qterms), "term").join(F.broadcast(stats))
-    idf_q6 = F.round(
-        F.log(
-            (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-        )
-        * 1e6
-    ).cast("bigint")
-    dlratio = (F.col("dl") * F.col("n_docs")) / F.col("sum_dl")
-    score = (idf_q6 / F.lit(1e6)) * (
-        F.col("tf") * F.lit(BM25_K1 + 1.0)
-    ) / (
-        F.col("tf")
-        + F.lit(BM25_K1) * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * dlratio)
-    )
-    wr = Window.partitionBy("qid").orderBy(F.desc("s"), F.asc("doc_id"))
-    return (
-        cand.withColumn("s", score)
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= BM25_TOPK)
-        .select(
-            "qid",
-            "term",
-            "doc_id",
-            "tf",
-            F.round("s", 6).alias("score"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
-
-
-_BM25_SQL = f"""
-WITH tokd AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tok FROM documents
-), e AS (
-  SELECT doc_id, len(tok) AS dl, unnest(tok) AS term FROM tokd
-), tf AS (
-  SELECT doc_id, term, COUNT(*) AS tf, MIN(dl) AS dl
-  FROM e GROUP BY 1, 2
-), stats AS (
-  SELECT COUNT(*) AS n_docs, SUM(dl) AS sum_dl
-  FROM (SELECT doc_id, MIN(dl) AS dl FROM tf GROUP BY 1)
-), dfx AS (
-  SELECT term, COUNT(*) AS df FROM tf GROUP BY 1
-), qterms AS (
-  SELECT CAST(r - 10 AS INTEGER) AS qid, term, df FROM (
-    SELECT term, df, ROW_NUMBER() OVER (ORDER BY df DESC, term) AS r FROM dfx
-  ) WHERE r BETWEEN 11 AND 15
-), cand AS (
-  SELECT q.qid, q.term, q.df, tf.doc_id, tf.tf, tf.dl,
-         s.n_docs, s.sum_dl
-  FROM tf JOIN qterms q USING (term) CROSS JOIN stats s
-), scored AS (
-  SELECT qid, term, doc_id, tf,
-         (CAST(ROUND(ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) * 1e6)
-               AS BIGINT) / 1e6)
-         * (tf * {BM25_K1 + 1.0})
-         / (tf + {BM25_K1} * ({1.0 - BM25_B} + {BM25_B}
-            * ((dl * n_docs) / CAST(sum_dl AS DOUBLE)))) AS s
-  FROM cand
-)
-SELECT qid, term, doc_id, CAST(tf AS BIGINT) AS tf,
-       ROUND(s, 6) AS score, rank
-FROM (
-  SELECT qid, term, doc_id, tf, s,
-         CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY s DESC, doc_id)
-              AS INTEGER) AS rank
-  FROM scored
-) WHERE rank <= {BM25_TOPK}
-"""
-
-
-# BPE pair census: report the top-N merge candidates of the FIRST
-# merge iteration. Subsequent BPE iterations run the identical plan
-# over re-segmented words, so this is the inner loop of distributed
-# tokenizer training.
-BPE_TOP_PAIRS = 30
-
-
-def bpe_pair_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE tokenizer training, step 1 (Sennrich et al.
-    2016): collapse the corpus to a word-frequency table, then count
-    adjacent character pairs weighted by word frequency — the merge
-    statistics the first BPE iteration maximizes over.
-
-    Scale shape: the corpus-sized work is ONE word hash-aggregate with
-    map-side combine (the word vocabulary is tiny relative to the
-    corpus, so partial aggregation collapses almost everything before
-    the shuffle — the same reason word-count scales). Pair explosion
-    runs over the *vocabulary*, not the corpus; the final ranking
-    window orders a character-bigram table bounded by alphabet^2 rows,
-    so the global window is safe at any corpus size.
-
-    Emits (pair, n_occ, n_forms, rank) for the top
-    ``BPE_TOP_PAIRS`` pairs; ties break on the pair string so the
-    ranking is deterministic across engines."""
-    docs = _docs_par(spark, sf_dir)
-    words = docs.select(
-        F.explode(
-            F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-        ).alias("word")
-    )
-    wc = (
-        words.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.length("word") >= 2)
-    )
-    pair = F.explode(
-        F.transform(
-            F.sequence(F.lit(1), F.length("word") - 1),
-            lambda i: F.col("word").substr(i, F.lit(2)),
-        )
-    )
-    pairs = wc.select("word", "n", pair.alias("pair"))
-    agg = pairs.groupBy("pair").agg(
-        F.sum("n").alias("n_occ"),
-        F.count_distinct("word").alias("n_forms"),
-    )
-    w = Window.orderBy(F.desc("n_occ"), F.asc("pair"))
-    return (
-        agg.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= BPE_TOP_PAIRS)
-        .select("pair", "n_occ", "n_forms", F.col("rank").cast("int").alias("rank"))
-    )
-
-
-_BPE_PAIR_SQL = f"""
-WITH w AS (
-  SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS word
-  FROM documents
-), wc AS (
-  SELECT word, COUNT(*) AS n FROM w GROUP BY 1 HAVING length(word) >= 2
-), p AS (
-  SELECT word, n, substr(word, i, 2) AS pair
-  FROM (
-    SELECT word, n, unnest(generate_series(1, length(word) - 1)) AS i
-    FROM wc
-  )
-), agg AS (
-  SELECT pair, SUM(n) AS n_occ, COUNT(DISTINCT word) AS n_forms
-  FROM p GROUP BY 1
-)
-SELECT pair, n_occ, n_forms, rank FROM (
-  SELECT pair, CAST(n_occ AS BIGINT) AS n_occ,
-         CAST(n_forms AS BIGINT) AS n_forms,
-         CAST(ROW_NUMBER() OVER (ORDER BY n_occ DESC, pair) AS INTEGER) AS rank
-  FROM agg
-) WHERE rank <= {BPE_TOP_PAIRS}
-"""
 
 
 def readability_census(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -417,255 +217,6 @@ FROM (
   FROM probes JOIN counters USING (i, b) GROUP BY 1, 2, 3
 )
 """
-
-
-# Full BPE training loop: how many merge rules to learn. Each
-# iteration is one vocabulary-sized aggregate, so the unrolled DuckDB
-# twin stays readable at this depth while still exercising the
-# iterate-merge-resegment dynamics (the first merged symbol feeds the
-# pair statistics of iteration 2, etc.).
-BPE_MERGE_ITERS = 4
-
-
-def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE tokenizer TRAINING (Sennrich et al. 2016): run
-    ``BPE_MERGE_ITERS`` full merge iterations — count adjacent symbol
-    pairs weighted by word frequency, adopt the argmax pair as a merge
-    rule, re-segment the vocabulary, repeat — and emit the learned
-    merge table ``(it, left_sym, right_sym, merged, n_occ)``.
-
-    This extends ``bpe_pair_census`` (the single-iteration census)
-    into the actual training loop. Scale shape: the ONLY corpus-sized
-    stage is the initial word-frequency hash-aggregate (map-side
-    combine collapses the corpus to its vocabulary before the
-    shuffle). Every iteration after that runs over the *vocabulary*
-    table: one pair aggregate + a bounded global top-1
-    (TakeOrderedAndProject) + a broadcast ONE-ROW cross-join that
-    applies the merge (it shows as BroadcastNestedLoopJoin in the
-    plan, but with a single-row build side that is the O(n)
-    attach-a-scalar pattern used throughout this registry, not a
-    quadratic join). No driver actions — the whole K-deep loop is a
-    single lazy plan.
-
-    The merge application is a plain string replace over a
-    bracket-delimited segmentation (``<l><o><w>`` + rule ``l+o`` ->
-    ``<lo><w>``): delimiters make the replace boundary-safe and
-    non-overlapping occurrences resolve left-to-right greedily,
-    identically in Spark's ``replace`` and DuckDB's — so the twin is
-    the exact same string algorithm, not a reimplementation.
-    Vocabulary is restricted to ``^[a-z]{2,}$`` words so symbols can
-    never contain the ``<>`` delimiters. All counts are exact BIGINTs;
-    argmax ties break on the pair string."""
-    merges, _seg = _bpe_learn(spark, sf_dir)
-    return merges.select(
-        "it",
-        "left_sym",
-        "right_sym",
-        F.concat("left_sym", "right_sym").alias("merged"),
-        "n_occ",
-    )
-
-
-def _bpe_learn(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Shared BPE training loop: returns (merge table, final
-    vocabulary segmentation carrying the original ``word`` column) so
-    the encode census can join documents back onto the learned
-    segmentation without re-deriving it."""
-    docs = _docs_par(spark, sf_dir)
-    words = docs.select(
-        F.explode(
-            F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-        ).alias("word")
-    )
-    wc = (
-        words.filter(F.col("word").rlike("^[a-z]{2,}$"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    seg = wc.select(
-        "word", F.regexp_replace("word", "(.)", "<$1>").alias("seg"), "n"
-    )
-    merges = None
-    for it in range(1, BPE_MERGE_ITERS + 1):
-        syms = F.regexp_extract_all(F.col("seg"), F.lit("<([^>]*)>"), 1)
-        length = F.greatest(F.size(syms) - 1, F.lit(0))
-        pair = F.explode(
-            F.zip_with(
-                F.slice(syms, 1, length),
-                F.slice(syms, 2, length),
-                lambda a, b: F.concat_ws(" ", a, b),
-            )
-        )
-        agg = (
-            seg.select("n", pair.alias("pair"))
-            .groupBy("pair")
-            .agg(F.sum("n").alias("n_occ"))
-        )
-        best = (
-            agg.orderBy(F.desc("n_occ"), F.asc("pair"))
-            .limit(1)
-            .select(
-                F.lit(it).cast("int").alias("it"),
-                F.split("pair", " ").getItem(0).alias("left_sym"),
-                F.split("pair", " ").getItem(1).alias("right_sym"),
-                "n_occ",
-            )
-        )
-        merges = best if merges is None else merges.unionByName(best)
-        seg = (
-            seg.crossJoin(
-                F.broadcast(best.select("left_sym", "right_sym"))
-            )
-            .withColumn(
-                "seg",
-                F.replace(
-                    F.col("seg"),
-                    F.concat(
-                        F.lit("<"), "left_sym", F.lit("><"),
-                        "right_sym", F.lit(">"),
-                    ),
-                    F.concat(
-                        F.lit("<"), "left_sym", "right_sym", F.lit(">")
-                    ),
-                ),
-            )
-            .select("word", "seg", "n")
-        )
-    return merges, seg
-
-
-def _bpe_chain_sql() -> str:
-    """Shared unrolled DuckDB WITH-prefix of the BPE training loop:
-    the identical segment-string algorithm, one (pairs, best, reseg)
-    CTE triple per merge iteration, carrying ``word`` through so the
-    encode census can join back onto the final segmentation."""
-    parts = [
-        """WITH w AS (
-  SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS word
-  FROM documents
-), wc AS (
-  SELECT word, COUNT(*) AS n FROM w
-  WHERE regexp_matches(word, '^[a-z]{2,}$') GROUP BY 1
-), s0 AS (
-  SELECT word, regexp_replace(word, '(.)', '<\\1>', 'g') AS seg, n FROM wc
-)"""
-    ]
-    for it in range(1, BPE_MERGE_ITERS + 1):
-        prev = f"s{it - 1}"
-        parts.append(
-            f""", p{it} AS (
-  SELECT p[1] || ' ' || p[2] AS pair, n FROM (
-    SELECT unnest(list_zip(syms[1:len(syms)-1], syms[2:len(syms)])) AS p, n
-    FROM (SELECT regexp_extract_all(seg, '<([^>]*)>', 1) AS syms, n
-          FROM {prev})
-  )
-), b{it} AS (
-  SELECT {it} AS it, split_part(pair, ' ', 1) AS left_sym,
-         split_part(pair, ' ', 2) AS right_sym, n_occ
-  FROM (
-    SELECT pair, SUM(n) AS n_occ FROM p{it} GROUP BY 1
-    ORDER BY n_occ DESC, pair LIMIT 1
-  )
-), s{it} AS (
-  SELECT word, replace(seg, '<' || b.left_sym || '><' || b.right_sym || '>',
-                 '<' || b.left_sym || b.right_sym || '>') AS seg, n
-  FROM {prev}, b{it} b
-)"""
-        )
-    return "".join(parts)
-
-
-def _bpe_train_sql() -> str:
-    union = " UNION ALL ".join(
-        f"SELECT * FROM b{i}" for i in range(1, BPE_MERGE_ITERS + 1)
-    )
-    return (
-        _bpe_chain_sql()
-        + f"""
-SELECT CAST(it AS INTEGER) AS it, left_sym, right_sym,
-       left_sym || right_sym AS merged, CAST(n_occ AS BIGINT) AS n_occ
-FROM ({union})"""
-    )
-
-
-def bpe_encode_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer APPLICATION: encode the corpus with the merge table
-    ``bpe_train_merges`` learns and report the per-language token
-    budget — words, characters, BPE tokens, and the chars-per-token
-    compression ratio (the number that decides how many documents fit
-    a training run's token budget).
-
-    Scale shape: encoding does NOT re-run the merges over the corpus —
-    the final vocabulary segmentation (already materialized by the
-    training loop, vocabulary-sized) broadcasts onto the corpus's
-    (lang, word) aggregate, so the corpus-sized work is one word
-    hash-aggregate plus a BroadcastHashJoin; tokens-per-word is a
-    delimiter count on the segmentation string. This is exactly how a
-    100 TB encode pass runs: tiny trained tokenizer shipped to every
-    executor, applied map-side."""
-    _merges, seg = _bpe_learn(spark, sf_dir)
-    vocab = seg.select(
-        "word",
-        (
-            F.length("seg")
-            - F.length(F.replace(F.col("seg"), F.lit("<"), F.lit("")))
-        ).cast("bigint").alias("n_tok"),
-    )
-    docs = _docs_par(spark, sf_dir)
-    wl = (
-        docs.select(
-            "lang",
-            F.explode(
-                F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-            ).alias("word"),
-        )
-        .filter(F.col("word").rlike("^[a-z]{2,}$"))
-        .groupBy("lang", "word")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    agg = (
-        wl.join(F.broadcast(vocab), "word")
-        .groupBy("lang")
-        .agg(
-            F.sum("n").alias("n_words"),
-            F.sum(F.col("n") * F.length("word")).alias("n_chars"),
-            F.sum(F.col("n") * F.col("n_tok")).alias("n_bpe_tokens"),
-        )
-    )
-    return agg.select(
-        "lang",
-        "n_words",
-        "n_chars",
-        "n_bpe_tokens",
-        F.round(
-            F.col("n_chars").cast("double") / F.col("n_bpe_tokens"), 6
-        ).alias("chars_per_token"),
-    )
-
-
-def _bpe_encode_sql() -> str:
-    last = f"s{BPE_MERGE_ITERS}"
-    return (
-        _bpe_chain_sql()
-        + f""", vocab AS (
-  SELECT word, length(seg) - length(replace(seg, '<', '')) AS n_tok
-  FROM {last}
-), wl AS (
-  SELECT lang, word, COUNT(*) AS n FROM (
-    SELECT lang, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS word
-    FROM documents
-  ) WHERE regexp_matches(word, '^[a-z]{{2,}}$') GROUP BY 1, 2
-)
-SELECT lang, CAST(SUM(n) AS BIGINT) AS n_words,
-       CAST(SUM(n * length(word)) AS BIGINT) AS n_chars,
-       CAST(SUM(n * n_tok) AS BIGINT) AS n_bpe_tokens,
-       ROUND(CAST(SUM(n * length(word)) AS DOUBLE) / SUM(n * n_tok), 6)
-         AS chars_per_token
-FROM wl JOIN vocab USING (word)
-GROUP BY lang"""
-    )
 
 
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1395,94 +946,6 @@ FROM cum GROUP BY 1
 
 
 # ---------------------------------------------------------------------------
-# Positional phrase search (n-way posting intersection)
-# ---------------------------------------------------------------------------
-
-# Fixed probe phrases (two bigrams + one trigram). Constant by design —
-# the operator is the POSITIONAL INTERSECTION machinery, not the query
-# set; a phrase absent from a given corpus reports 0, it does not
-# vanish from the result.
-PHRASES = [
-    ("order", "fast"),
-    ("part", "filter"),
-    ("part", "filter", "hash"),
-]
-
-
-def phrase_search_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact phrase search over a positional inverted index: for each
-    probe phrase, the documents and occurrence count where its words
-    appear CONSECUTIVELY — the positional-postings intersection every
-    search/dedup stack needs beyond bag-of-words (bm25_topk) matching.
-
-    Plan: postings (term, doc_id, pos) from one posexplode, filtered
-    map-side to the (tiny, constant) phrase vocabulary BEFORE anything
-    shuffles; a phrase of k words is a chain of k-1 equi-joins on
-    (doc_id, pos + offset) over those filtered postings. Every phrase
-    is reported, zero matches included (left join from the phrase dim).
-
-    Scale shape: the term filter cuts the posting stream to the probe
-    terms' document frequency; the intersection joins carry only those
-    postings, keyed on (doc_id, pos) — no text, no full-index shuffle."""
-    docs = _docs_par(spark, sf_dir)
-    all_terms = sorted({t for p in PHRASES for t in p})
-    postings = (
-        docs.select(
-            "doc_id", F.posexplode(tokens_col("text")).alias("pos", "w")
-        )
-        .filter(F.col("w").isin(all_terms))
-    )
-    per_phrase = []
-    for phrase in PHRASES:
-        m = postings.filter(F.col("w") == phrase[0]).select(
-            "doc_id", F.col("pos").alias("p0")
-        )
-        for i, term in enumerate(phrase[1:], start=1):
-            nxt = postings.filter(F.col("w") == term).select(
-                F.col("doc_id").alias("d"), F.col("pos").alias("p")
-            )
-            m = m.join(
-                nxt,
-                (m.doc_id == nxt.d) & (nxt.p == F.col("p0") + i),
-            ).select("doc_id", "p0")
-        per_phrase.append(
-            m.agg(
-                F.count_distinct("doc_id").alias("n_docs"),
-                F.count(F.lit(1)).alias("n_occurrences"),
-            ).select(
-                F.lit(" ".join(phrase)).alias("phrase"),
-                "n_docs",
-                "n_occurrences",
-            )
-        )
-    return reduce(DataFrame.unionAll, per_phrase)
-
-
-def _phrase_sql() -> str:
-    parts = []
-    for phrase in PHRASES:
-        k = len(phrase)
-        conds = " AND ".join(
-            f"w[i + {j}] = '{t}'" for j, t in enumerate(phrase)
-        )
-        parts.append(f"""
-SELECT '{" ".join(phrase)}' AS phrase,
-       COUNT(DISTINCT doc_id) AS n_docs, COUNT(*) AS n_occurrences
-FROM (
-  SELECT doc_id, unnest(range(1, len(w) - {k - 2})) AS i
-  FROM (
-    SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
-    FROM documents
-  ) WHERE len(w) >= {k}
-) s JOIN (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
-  FROM documents
-) d USING (doc_id)
-WHERE {conds}""")
-    return "\nUNION ALL\n".join(parts)
-
-
-# ---------------------------------------------------------------------------
 # Vocabulary growth (Heaps' law) — tokenizer/vocab sizing signal
 # ---------------------------------------------------------------------------
 
@@ -1587,8 +1050,8 @@ def token_entropy_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal that complements ``quality_repetition``'s n-gram ratios.
 
     Cross-engine determinism: the one ``ln`` per (doc, type) is taken
-    on an exact-integer ratio ``n/c_i`` and quantized to micro-nats
-    (as bm25_topk's idf is); per-doc entropy is the exact
+    on an exact-integer ratio ``n/c_i`` and quantized to micro-nats;
+    per-doc entropy is the exact
     BIGINT ``sum(c_i * term_e6) DIV n`` and per-source results are
     exact BIGINT sums, so no aggregation-order drift is possible.
 
@@ -1664,88 +1127,6 @@ FROM per_doc GROUP BY source
 """
 
 
-# Relevance rule for the BM25 evaluation: a document is relevant to a
-# query term iff it contains the term at least REL_MIN_TF times — a
-# deterministic corpus-derived judgment set, so the fixture needs no
-# external qrels.
-REL_MIN_TF = 2
-
-
-def bm25_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retrieval-quality EVALUATION for the BM25 ranker: MRR over the
-    registered bm25_topk rankings against the deterministic tf-based
-    relevance rule — the same evaluate-the-approximation discipline as
-    ann_ivf_recall, turned on lexical search. Reports, per query, the
-    corpus-wide relevant-doc count, the first relevant rank inside the
-    top-k (0 if none), and its reciprocal.
-
-    Scale shape: the ranking side is the already-bounded bm25_topk
-    output (k rows per query); relevance tf>=2 is read off the tf
-    column those rows already carry. The corpus-wide n_relevant pass
-    explodes tokens once and drops every non-query term with a
-    broadcast semi-ish inner join BEFORE the (doc, term) aggregate, so
-    the count costs one pruned map + one tiny aggregate."""
-    ranked = bm25_topk(spark, sf_dir)
-    qt = ranked.select("qid", "term").distinct()
-    docs = _docs_par(spark, sf_dir)
-    tok = tokens_col("text")
-    occ = (
-        docs.select("doc_id", F.explode(tok).alias("term"))
-        .join(F.broadcast(qt), "term")
-        .groupBy("qid", "term", "doc_id")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    nrel = occ.filter(F.col("tf") >= REL_MIN_TF).groupBy("qid", "term").agg(
-        F.count(F.lit(1)).alias("n_relevant")
-    )
-    first = (
-        ranked.filter(F.col("tf") >= REL_MIN_TF)
-        .groupBy("qid")
-        .agg(F.min("rank").alias("first_rel_rank"))
-    )
-    rank0 = F.coalesce("first_rel_rank", F.lit(0)).cast("int")
-    return (
-        nrel.join(first, "qid", "left")
-        .select(
-            "qid",
-            "term",
-            F.col("n_relevant").cast("bigint").alias("n_relevant"),
-            rank0.alias("first_rel_rank"),
-            F.when(rank0 > 0, F.round(F.lit(1.0) / rank0, 6))
-            .otherwise(F.lit(0.0))
-            .alias("reciprocal_rank"),
-        )
-    )
-
-
-def _bm25_mrr_sql() -> str:
-    return f"""
-WITH b AS ({_BM25_SQL}),
-qt AS (
-  SELECT DISTINCT qid, term FROM b
-), e AS (
-  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS term
-  FROM documents
-), occ AS (
-  SELECT qt.qid, qt.term, e.doc_id, COUNT(*) AS tf
-  FROM e JOIN qt USING (term)
-  GROUP BY 1, 2, 3
-), nrel AS (
-  SELECT qid, term, COUNT(*) AS n_relevant
-  FROM occ WHERE tf >= {REL_MIN_TF} GROUP BY 1, 2
-), first AS (
-  SELECT qid, MIN(rank) AS first_rel_rank
-  FROM b WHERE tf >= {REL_MIN_TF} GROUP BY qid
-)
-SELECT n.qid, n.term, CAST(n.n_relevant AS BIGINT) AS n_relevant,
-       CAST(COALESCE(f.first_rel_rank, 0) AS INTEGER) AS first_rel_rank,
-       CASE WHEN COALESCE(f.first_rel_rank, 0) > 0
-            THEN ROUND(1.0 / f.first_rel_rank, 6) ELSE 0.0 END
-         AS reciprocal_rank
-FROM nrel n LEFT JOIN first f USING (qid)
-"""
-
-
 # Stopword-discovery shape: top-K tokens by document frequency per
 # language — the data-driven way the jusText stoplists would be built
 # for a language that ships without one.
@@ -1808,112 +1189,11 @@ FROM ranked WHERE rank <= {STOPWORD_DISCOVERY_TOPK}
 """
 
 
-TRIGRAM_QUERY = "merge sort"  # fixed probe, non-empty at every fixture SF
-
-
-def trigram_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index-accelerated substring search: build a character-trigram
-    posting list over the corpus, intersect the postings of the query
-    string's trigrams (a doc must hold ALL of them — countDistinct ==
-    n_query_trigrams), then verify the surviving candidates with one
-    real ``contains`` probe. This is the standard trigram-index LIKE
-    acceleration (pg_trgm / code-search style): the full scan touches
-    every byte of every document, the index path touches only the
-    posting lists plus the (tiny) candidate set — at 100 TB the
-    posting table is built once and amortized across queries, and the
-    verify step reads ~0.001% of the corpus. The oracle is the direct
-    full-scan LIKE, so the check proves the index path EXACT (trigram
-    intersection can only over-generate; verification closes it)."""
-    docs = _docs_par(spark, sf_dir).select("doc_id", "text")
-    q = TRIGRAM_QUERY
-    q_grams = sorted({q[i : i + 3] for i in range(len(q) - 2)})
-    # posting list build: explode distinct char-trigrams per doc,
-    # pre-filtered to the query's grams (a stored index would skip the
-    # filter; pruning here keeps the fixture query self-contained)
-    grams = F.array_distinct(
-        F.expr("transform(sequence(1, length(text) - 2), i -> substring(text, i, 3))")
-    )
-    postings = docs.select(
-        "doc_id", F.explode(grams).alias("gram")
-    ).filter(F.col("gram").isin(*q_grams))
-    cands = (
-        postings.groupBy("doc_id")
-        .agg(F.countDistinct("gram").alias("n_hit"))
-        .filter(F.col("n_hit") == len(q_grams))
-        .select("doc_id")
-    )
-    verified = docs.join(F.broadcast(cands), "doc_id").filter(
-        F.col("text").contains(q)
-    )
-    return verified.select(
-        "doc_id", F.length("text").cast("bigint").alias("n_chars")
-    )
-
-
-def _trigram_search_sql() -> str:
-    q = TRIGRAM_QUERY.replace("'", "''")
-    return f"""
-SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars
-FROM documents
-WHERE contains(text, '{q}')
-"""
-
-
-def token_source_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bitmap-index aggregation: for each sufficiently frequent token,
-    a 20-bit presence bitmap over the src0..src19 sources built with
-    bit_or(1 << src_id) — the roaring-bitmap-style set representation
-    that makes cross-segment membership tests one integer AND at query
-    time. array_distinct before the explode bounds the shuffle at
-    distinct (token, source) pairs; the bitmap aggregate is map-side
-    combining (bit_or is associative)."""
-    docs = _t(spark, sf_dir, "documents").select("source", "text")
-    toks = docs.select(
-        F.explode(F.array_distinct(tokens_col("text"))).alias("token"),
-        F.substring("source", 4, 2).cast("int").alias("src_id"),
-    ).distinct()
-    bm = toks.groupBy("token").agg(
-        F.expr("bit_or(cast(pow(2, src_id) as bigint))").alias("source_bitmap"),
-        F.count(F.lit(1)).alias("n_sources"),
-    )
-    return bm.filter(F.col("n_sources") >= 10).select(
-        "token",
-        "source_bitmap",
-        "n_sources",
-        F.expr("bit_count(source_bitmap)").cast("bigint").alias("popcount"),
-    )
-
-
-_TOKEN_BITMAP_SQL = """
-WITH t AS (
-  SELECT DISTINCT token,
-         CAST(substr(source, 4, 2) AS INTEGER) AS src_id
-  FROM (
-    SELECT source, unnest(list_distinct(regexp_split_to_array(trim(text), '\\s+')))
-             AS token
-    FROM documents
-  )
-), bm AS (
-  SELECT token,
-         CAST(bit_or(CAST(pow(2, src_id) AS BIGINT)) AS BIGINT) AS source_bitmap,
-         COUNT(*) AS n_sources
-  FROM t GROUP BY token
-)
-SELECT token, source_bitmap, n_sources,
-       CAST(bit_count(source_bitmap) AS BIGINT) AS popcount
-FROM bm WHERE n_sources >= 10
-"""
-
-
 _REGISTRY = {
     "tfidf_top_terms": (tfidf_top_terms, _TFIDF_SQL),
     "textrank_keywords": (textrank_keywords, _textrank_sql()),
-    "bpe_pair_census": (bpe_pair_census, _BPE_PAIR_SQL),
-    "bpe_train_merges": (bpe_train_merges, _bpe_train_sql()),
     "heavy_hitters_cms": (heavy_hitters_cms, _CMS_SQL),
-    "bpe_encode_census": (bpe_encode_census, _bpe_encode_sql()),
     "readability_census": (readability_census, _READABILITY_SQL),
-    "bm25_topk": (bm25_topk, _BM25_SQL),
     "benchmark_decontamination": (benchmark_decontamination, _DECONTAM_SQL),
     "decontamination_clean": (decontamination_clean, _DECONTAM_CLEAN_SQL),
     "source_overlap_matrix": (source_overlap_matrix, _OVERLAP_SQL),
@@ -1922,10 +1202,6 @@ _REGISTRY = {
     "doc_shard_assignment": (doc_shard_assignment, _SHARD_SQL),
     "vocab_growth_census": (vocab_growth_census, _VOCAB_GROWTH_SQL),
     "token_entropy_census": (token_entropy_census, _ENTROPY_SQL),
-    "phrase_search_census": (phrase_search_census, _phrase_sql()),
     "mixture_temperature_plan": (mixture_temperature_plan, _MIX_TEMP_SQL),
     "stopword_discovery": (stopword_discovery, _STOPWORD_DISCOVERY_SQL),
-    "bm25_mrr_eval": (bm25_mrr_eval, _bm25_mrr_sql()),
-    "trigram_index_search": (trigram_index_search, _trigram_search_sql()),
-    "token_source_bitmap": (token_source_bitmap, _TOKEN_BITMAP_SQL),
 }

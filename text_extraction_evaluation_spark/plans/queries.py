@@ -11,8 +11,8 @@ directly above/below its SQL twin, so the pair stays in sync):
 * ``plans.common``       — shared helpers (_t, _docs_par, stopword SQL)
 * ``plans.q_relational`` — star-schema battery (SURVEY.md §2.2/2.4-2.7)
 * ``plans.q_corpus``     — text stats + every dedup tier
-* ``plans.q_nlp``        — BM25/TF-IDF/TextRank/BPE, decontamination,
-  mixtures, phrase/trigram/bitmap indexes
+* ``plans.q_nlp``        — TF-IDF/TextRank, decontamination, mixtures,
+  vocabulary and stopword statistics
 * ``plans.q_embedding``  — ANN/similarity, specialty joins, TPC-H tail
 * ``plans.q_extraction`` — extraction-family gates + profiling/pivot
 * ``plans.q_webtext``    — crawl/host/URL/layout operators
