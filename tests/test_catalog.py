@@ -51,3 +51,34 @@ def test_snapshot_read_ignores_uncommitted_dirs(spark, tmp_path):
     assert cat.commit_append(_df(spark, [4], "c2"), "t", "c2")
     assert not leftover_files & _data_files(leftover)
     assert _rows(cat.read(spark, "t")) == committed + [(4, "c2")]
+
+
+def test_read_of_copied_root_uses_its_own_chunks(spark, tmp_path):
+    """A root copied elsewhere, with the original removed, still reads
+    every committed row: chunk paths come from root + table + id, not
+    from a path the manifest recorded at commit time."""
+    import datetime
+    import shutil
+
+    from text_extraction_evaluation_spark.plans.jobs import (
+        CHUNK_SCHEMA,
+        read_run_metrics,
+    )
+
+    ts = datetime.datetime(2024, 1, 1)
+
+    def chunk(urls, bucket):
+        rows = [(u, ts, "en", "t", 1, 1, "ok", None, 0, 10, 1.0, 2.0, bucket) for u in urls]
+        return spark.createDataFrame(rows, CHUNK_SCHEMA)
+
+    a, b = tmp_path / "a", tmp_path / "b"
+    cat = LocalCatalog(a)
+    assert cat.commit_append(chunk(["u1", "u2"], 0), "extracted", "c0", meta={"run_id": "r1"})
+    assert cat.commit_append(chunk(["u3"], 1), "extracted", "c1", meta={"run_id": "r1"})
+    shutil.copytree(a, b)
+    shutil.rmtree(a)
+
+    got = LocalCatalog(b).read(spark, "extracted")
+    assert sorted(r["url"] for r in got.collect()) == ["u1", "u2", "u3"]
+    metrics = read_run_metrics(spark, str(b)).collect()
+    assert sorted((r["chunk_id"], r["n_docs"]) for r in metrics) == [("c0", 2), ("c1", 1)]

@@ -29,11 +29,8 @@ from tests.conftest import SF0001
 DOUBLE_ALLOWLIST: dict[str, tuple[str, ...]] = {
     "ann_cosine_topk": ("cos_sim",),
     "ann_dim_truncation_recall": ("recall_at_5",),
-    "ann_ivf_kmeans_topk": ("cos_sim",),
     "ann_ivf_recall": ("recall_at_3",),
     "ann_ivf_topk": ("cos_sim",),
-    "ann_lsh_topk": ("cos_sim",),
-    "ann_quality_filtered_topk": ("cos_sim",),
     "benchmark_decontamination": ("contamination",),
     "corpus_length_percentiles": ("p50_chars", "p90_chars", "p99_chars"),
     "dedup_embedding_cosine": ("cos_sim",),
@@ -49,8 +46,6 @@ DOUBLE_ALLOWLIST: dict[str, tuple[str, ...]] = {
     "hard_negative_mining": ("avg_hard_cos",),
     "lang_distribution": ("avg_chars",),
     "lang_id": ("lang_score",),
-    "media_features": ("value",),
-    "pca_project_census": ("mean_proj",),
     "q10_returned_items": ("revenue", "c_acctbal"),
     "q14_promo_revenue": ("promo_revenue_pct",),
     "q18_large_orders": ("o_totalprice",),

@@ -2,7 +2,8 @@
 an EMPTY (or schema-stable) result on a zero-row fixture, not crash —
 the behavior a production run hits on an empty partition/day/source.
 Covers each plan family: scans, aggregates, windows, joins, iterative
-loops (k-means / PCA / probe), sketches, kernels."""
+loops (``ann_pq_adc_topk``'s codebook loop is the representative),
+probes, sketches, kernels."""
 
 from __future__ import annotations
 
@@ -21,9 +22,6 @@ REPRESENTATIVE = [
     "heavy_hitters_cms",
     "tfidf_top_terms",
     "lang_id",
-    "kmeans_embeddings",
-    "pca_power_iteration",
-    "pca_project_census",
     "ann_cosine_topk",
     "ann_ivf_topk",
     "ann_ivf_recall",
@@ -52,7 +50,6 @@ REPRESENTATIVE = [
     "q_event_funnel",
     "q_retention_cohorts",
     "ann_pq_adc_topk",
-    "ann_ivfpq_topk",
     "zorder_layout_census",
     "dedup_jaccard_prefix",
     "dedup_threshold_sweep",

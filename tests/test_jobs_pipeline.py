@@ -74,8 +74,11 @@ def test_score_job_refuses_a_partial_extraction(spark, tmp_path):
         run_extraction_job(spark, pages, root, n_buckets=n_buckets, buckets_per_chunk=2)
         df = read_extracted(spark, root)
         assert df.count() == df.select("url").distinct().count() == pages.count()
-        chunks = LocalCatalog(root).committed_chunks("extracted")
-        assert all(spark.read.parquet(c["path"]).count() >= 1 for c in chunks.values())
+        cat = LocalCatalog(root)
+        assert all(
+            spark.read.parquet(cat.chunk_path("extracted", cid)).count() >= 1
+            for cid in cat.committed_chunks("extracted")
+        )
         run_score_job(spark, root, gold)
         report = LocalCatalog(root).read(spark, "report").collect()
         n_scored = sum(r["n_ok"] + r["n_empty"] + r["n_fail"] for r in report)

@@ -149,7 +149,11 @@ def test_rerun_reclaims_orphans_of_a_killed_run(spark, latest, tmp_path):
     cat = LocalCatalog(root)
     committed = cat.committed_chunks("extracted")
     assert len(committed) == 1
-    files = {cid: sorted(os.listdir(c["path"])) for cid, c in committed.items()}
+
+    def chunk_files():
+        return {cid: sorted(os.listdir(cat.chunk_path("extracted", cid))) for cid in committed}
+
+    files = chunk_files()
 
     def plant(*parts):
         path = os.path.join(root, *parts)
@@ -165,7 +169,7 @@ def test_rerun_reclaims_orphans_of_a_killed_run(spark, latest, tmp_path):
     assert [p for p in orphans if os.path.exists(p)] == []
     assert {cid: c for cid, c in cat.committed_chunks("extracted").items()
             if cid in committed} == committed
-    assert {cid: sorted(os.listdir(c["path"])) for cid, c in committed.items()} == files
+    assert chunk_files() == files
     assert cat.read(spark, "extracted").count() == latest.count()
 
     orphans = [plant("scores", "chunk=full.staging-deadbeef"),

@@ -30,9 +30,8 @@ PIPELINE_KERNEL = re.compile(
 # the registry exactly.
 NON_PIPELINE = frozenset({
     "anchor_text_census", "ann_cosine_topk", "ann_dim_truncation_recall",
-    "ann_ivf_kmeans_topk", "ann_ivf_recall", "ann_ivf_topk",
-    "ann_ivfpq_topk", "ann_lsh_topk", "ann_pq_adc_topk",
-    "ann_quality_filtered_topk", "benchmark_decontamination",
+    "ann_ivf_recall", "ann_ivf_topk", "ann_pq_adc_topk",
+    "benchmark_decontamination",
     "corpus_length_histogram", "corpus_length_percentiles",
     "corpus_mixture_weights",
     "crawl_bloom_novelty", "crawl_content_diff", "crawl_novel_shingles",
@@ -47,13 +46,12 @@ NON_PIPELINE = frozenset({
     "doc_sample_stratified", "doc_sample_weighted", "doc_shard_assignment",
     "dup_span_census", "dup_span_clean",
     "embedding_norms", "embedding_sq8_census", "hard_negative_mining",
-    "heavy_hitters_cms", "hll_distinct_census", "kmeans_embeddings",
+    "heavy_hitters_cms", "hll_distinct_census",
     "lang_distribution", "lang_id", "lang_source_pivot", "langid_confusion",
     "leakage_safe_split_census",
-    "media_features", "mixture_temperature_plan",
+    "mixture_temperature_plan",
     "outlink_path_census", "page_byte_census", "page_encoding_census",
-    "pca_power_iteration", "pca_project_census",
-    "pdf_pages", "pii_redaction",
+    "pii_redaction",
     "q10_returned_items", "q13_customer_distribution",
     "q14_promo_revenue", "q15_top_supplier", "q16_parts_supplier",
     "q17_small_quantity", "q18_large_orders", "q19_disjunctive_revenue",
@@ -74,7 +72,7 @@ NON_PIPELINE = frozenset({
     "q_user_state_scd2", "quality_filter",
     "quality_repetition",
     "quantile_sample_audit", "readability_census",
-    "scd2_incremental_census", "scd2_page_history", "semantic_dedup_census",
+    "scd2_incremental_census", "scd2_page_history",
     "source_length_trend", "source_median_chars",
     "source_overlap_matrix", "source_trimmed_mean", "stopword_discovery",
     "table_profile_census", "template_shape_census", "text_quality",

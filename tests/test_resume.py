@@ -160,10 +160,12 @@ def test_run_metrics_view_is_each_chunks_own_lineage(spark, pages, tmp_path_fact
     view = read_run_metrics(spark, root)
     assert view.columns == RUN_METRICS_COLS
     rows = view.collect()
-    committed = LocalCatalog(root).committed_chunks("extracted")
+    cat = LocalCatalog(root)
+    committed = cat.committed_chunks("extracted")
     assert {r["chunk_id"] for r in rows} == set(committed)
-    for chunk_id, entry in committed.items():
-        own = run_metrics_from_extracted(spark.read.parquet(entry["path"]), "r1", chunk_id)
+    for chunk_id in committed:
+        chunk = spark.read.parquet(cat.chunk_path("extracted", chunk_id))
+        own = run_metrics_from_extracted(chunk, "r1", chunk_id)
         assert sorted(r for r in rows if r["chunk_id"] == chunk_id) == sorted(own.collect())
 
 
@@ -188,8 +190,8 @@ def test_four_in_flight_failure_manifest_consistent(spark, pages, tmp_path_facto
     # the 3 counted commits are durable; fail-fast cancelled the queued
     # tail (in-flight chunks may still land — never all 8)
     assert 3 <= len(committed) < 8
-    for c in committed.values():
-        assert spark.read.parquet(c["path"]).count() > 0  # no torn chunk
+    for cid in committed:
+        assert spark.read.parquet(cat.chunk_path("extracted", cid)).count() > 0  # no torn chunk
 
     run_extraction_job(spark, pages, root, n_buckets=16, buckets_per_chunk=2,
                        max_concurrent_chunks=4)
@@ -232,8 +234,8 @@ def test_vacuum_reclaims_orphan_staging_only(spark, pages, tmp_path_factory):
     assert removed == [orphan]
     assert not os.path.exists(orphan)
     assert set(cat.committed_chunks("extracted")) == before
-    for c in cat.committed_chunks("extracted").values():
-        assert spark.read.parquet(c["path"]).count() > 0
+    for cid in cat.committed_chunks("extracted"):
+        assert spark.read.parquet(cat.chunk_path("extracted", cid)).count() > 0
 
 
 def test_vacuum_reclaims_unrecorded_chunk_dirs(spark, pages, tmp_path_factory):

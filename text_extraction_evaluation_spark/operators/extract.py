@@ -56,16 +56,19 @@ SPANS_SCHEMA = (
 )
 
 
-def salted_repartition(pages: DataFrame, num_partitions: int, salt: int = 8) -> DataFrame:
-    """Repartition by url-hash + salt so a hot host (many urls hashing
-    near one another, or one url crawled many times) cannot pin a
-    single Python worker (BASELINE.json:6 "partitions by url-hash with
-    salting for skewed hosts"). Salting is safe here because E1 is
-    stateless per row — no key-locality requirement."""
+_SALT = 8
+
+
+def salted_repartition(pages: DataFrame, num_partitions: int) -> DataFrame:
+    """Repartition by url-hash + one of ``_SALT`` salts so a hot host
+    (many urls hashing near one another, or one url crawled many times)
+    cannot pin a single Python worker (BASELINE.json:6 "partitions by
+    url-hash with salting for skewed hosts"). Salting is safe here
+    because E1 is stateless per row — no key-locality requirement."""
     return pages.repartition(
         num_partitions,
         F.pmod(F.xxhash64("url"), F.lit(num_partitions)),
-        F.pmod(F.xxhash64("url", "warc_ts"), F.lit(salt)),
+        F.pmod(F.xxhash64("url", "warc_ts"), F.lit(_SALT)),
     )
 
 

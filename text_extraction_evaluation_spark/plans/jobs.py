@@ -66,6 +66,9 @@ RUN_METRICS_COLS = [
 # what one committed ``extracted`` chunk holds: kernel output + bucket
 CHUNK_SCHEMA = f"{EXTRACT_SCHEMA}, url_bucket int"
 
+# the label run_score_job scores the committed jusText output under
+_EXTRACTOR = "justext_spark"
+
 
 class ChunkFailure(RuntimeError):
     """Injected failure for resume tests."""
@@ -265,23 +268,20 @@ def read_run_metrics(spark: SparkSession, out_root: str) -> DataFrame | None:
     Nothing is stored, so a chunk's lineage lands in its own commit and
     costs a scan only when read. Each chunk is coalesced to one
     partition, so its aggregation needs no shuffle."""
-    chunks = sorted(LocalCatalog(out_root).committed_chunks("extracted").items())
+    cat = LocalCatalog(out_root)
     views = [
         run_metrics_from_extracted(
-            spark.read.schema(CHUNK_SCHEMA).parquet(entry["path"]).coalesce(1),
+            spark.read.schema(CHUNK_SCHEMA)
+            .parquet(cat.chunk_path("extracted", chunk_id))
+            .coalesce(1),
             entry["run_id"], chunk_id,
         )
-        for chunk_id, entry in chunks
+        for chunk_id, entry in sorted(cat.committed_chunks("extracted").items())
     ]
     return reduce(DataFrame.unionByName, views) if views else None
 
 
-def run_score_job(
-    spark: SparkSession,
-    out_root: str,
-    gold: DataFrame,
-    extractor: str = "justext_spark",
-) -> LocalCatalog:
+def run_score_job(spark: SparkSession, out_root: str, gold: DataFrame) -> LocalCatalog:
     """Score the committed extraction output against gold and commit
     ``scores`` + ``report`` tables (S4) — idempotent like extraction.
 
@@ -299,7 +299,7 @@ def run_score_job(
     # orphans of a hard-killed run, as in run_extraction_job
     cat.vacuum("scores")
     cat.vacuum("report")
-    scores = score_extracted(read_extracted(spark, out_root), gold, extractor=extractor)
+    scores = score_extracted(read_extracted(spark, out_root), gold, extractor=_EXTRACTOR)
     cat.commit_append(scores, "scores", "full")
     cat.commit_append(ranked_report(cat.read(spark, "scores")), "report", "full")
     return cat

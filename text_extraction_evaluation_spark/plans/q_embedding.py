@@ -1,5 +1,5 @@
 """Embedding similarity / ANN + specialty joins (as-of, banded
-range) + remaining TPC-H shapes + multimodal/lang-id queries.
+range) + remaining TPC-H shapes + lang-id queries.
 
 Split out of plans/queries.py (round 3)."""
 
@@ -352,7 +352,7 @@ GROUP BY 1, 2
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate nearest neighbours: the scale path past
-    brute-force (`ann_cosine_topk`) and RP-LSH (`ann_lsh_topk`).
+    brute-force (`ann_cosine_topk`).
 
     Coarse quantizer = the first N_CENTROIDS vectors (deterministic so
     the DuckDB oracle reproduces it; production swaps in k-means
@@ -654,43 +654,6 @@ GROUP BY CUBE (o_orderstatus, o_orderpriority)
 """
 
 
-def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal decode plumbing, driver-hashable shape: synthesize the
-    deterministic media table, run the Arrow feature kernel, and explode
-    the feature vector to (media_id, dim_idx, value) rows. The fake
-    decode is the registry's md5-prefix hash primitive, so the DuckDB
-    twin regenerates the identical float32 features from scratch."""
-    from ..operators.multimodal import extract_media_features, synth_media_df
-
-    feats = extract_media_features(synth_media_df(spark, n=128), dim=16)
-    return feats.select(
-        "media_id",
-        "kind",
-        "n_bytes",
-        "feat_dim",
-        "status",
-        F.posexplode("feature").alias("dim_idx", "value"),
-    ).withColumn("value", F.round(F.col("value").cast("double"), 6))
-
-
-_MEDIA_FEATURES_SQL = """
-WITH m AS (
-  SELECT media_id,
-         CASE media_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-         repeat(sha256('media-' || media_id), 4 + media_id % 5) AS payload_str
-  FROM range(128) t(media_id)
-), f AS (
-  SELECT media_id, kind, length(payload_str) AS n_bytes, CAST(i AS INTEGER) AS dim_idx,
-         ('0x' || substr(md5(payload_str || ':' || i), 1, 15))::BIGINT AS h
-  FROM m, range(16) r(i)
-)
-SELECT media_id, kind, CAST(n_bytes AS BIGINT) AS n_bytes, 16 AS feat_dim, 'ok' AS status,
-       dim_idx,
-       ROUND(CAST(CAST((h / 1152921504606846976.0 - 0.5) * 2.0 AS FLOAT) AS DOUBLE), 6) AS value
-FROM f
-"""
-
-
 def lang_id_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID over documents (Arrow kernel, broadcast-frozen
     profiles). SQL-checkable because the trigram profiles are frozen
@@ -737,100 +700,6 @@ SELECT doc_id, lang,
        CASE WHEN best = 0 THEN 'und' {detect_chain} ELSE 'und' END AS detected_lang,
        CASE WHEN best = 0 THEN 0.0 ELSE best END AS lang_score
 FROM b
-"""
-
-
-def pdf_pages_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PDF layout parse over the deterministic fake container: one row
-    per page, blocks sorted into reading order (y, x). The DuckDB twin
-    regenerates the same container content from the sha256 seeds."""
-    from ..operators.multimodal import pdf_extract_pages, synth_pdf_df
-
-    return pdf_extract_pages(synth_pdf_df(spark, n=128))
-
-
-_PDF_PAGES_SQL = """
-WITH pages AS (
-  SELECT doc_id, p FROM range(128) t(doc_id), range(4) r(p)
-  WHERE p < 1 + doc_id % 4
-), blocks AS (
-  SELECT doc_id, p, b, sha256(doc_id || '-' || p || '-' || b) AS h
-  FROM pages, range(5) rb(b) WHERE b < 2 + (doc_id + p) % 3
-), pos AS (
-  SELECT doc_id, p,
-         ('0x' || substr(h, 1, 2))::INT % 100 AS y,
-         ('0x' || substr(h, 3, 2))::INT % 50 AS x,
-         'block ' || doc_id || '.' || p || '.' || b || ' word'
-           || (('0x' || substr(h, 5, 2))::INT % 7) AS text
-  FROM blocks
-)
-SELECT doc_id, CAST(p AS INT) AS page,
-       string_agg(text, chr(10) ORDER BY y, x, text) AS text,
-       CAST(COUNT(*) AS INT) AS n_blocks, 'ok' AS status
-FROM pos GROUP BY doc_id, p
-"""
-
-
-def ann_lsh_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RP-LSH ANN with multiprobe, driver-checkable shape (cos rounded
-    like ann_cosine_topk). The DuckDB twin replays bucket assignment
-    from the frozen splitmix hyperplanes as literal arrays — only the
-    SIGN of each plane dot-product matters, so cross-engine float-sum
-    ordering cannot flip buckets except exactly at the hyperplane."""
-    from ..operators.similarity import ann_lsh_topk
-
-    emb = _t(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism, "vec_id"
-    )
-    r = ann_lsh_topk(emb, list(range(10)), k=5)
-    return r.select(
-        "query_id", "neighbor_id", "nn_rank", F.round("cos", 4).alias("cos_sim")
-    )
-
-
-def _ann_lsh_sql(n_planes: int = 8, multiprobe: int = 2, dim: int = 64, k: int = 5) -> str:
-    from itertools import combinations
-
-    from ..operators.similarity import hyperplanes
-
-    planes = hyperplanes(dim, n_planes)
-    bucket = " + ".join(
-        "(CASE WHEN list_dot_product(v, [{}]) >= 0 THEN {} ELSE 0 END)".format(
-            ", ".join(repr(float(x)) for x in planes[i]), 1 << i
-        )
-        for i in range(n_planes)
-    )
-    masks = [0] + [
-        sum(1 << b for b in bits)
-        for d in range(1, multiprobe + 1)
-        for bits in combinations(range(n_planes), d)
-    ]
-    return f"""
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), n AS (
-  SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm,
-         {bucket} AS bucket
-  FROM e
-), q AS (
-  SELECT vec_id AS query_id, v AS qv, nrm AS qn, bucket AS qbucket
-  FROM n WHERE vec_id < 10
-), qx AS (
-  SELECT query_id, qv, qn, xor(qbucket, m) AS bucket
-  FROM q, (SELECT unnest([{", ".join(map(str, masks))}]) AS m)
-), s AS (
-  SELECT query_id, c.vec_id AS neighbor_id,
-         MAX(list_dot_product(qv, c.v) / (qn * c.nrm)) AS cos
-  FROM qx JOIN n c USING (bucket)
-  WHERE c.vec_id <> query_id
-  GROUP BY query_id, c.vec_id
-), r AS (
-  SELECT query_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS nn_rank
-  FROM s
-)
-SELECT query_id, neighbor_id, nn_rank, ROUND(cos, 4) AS cos_sim
-FROM r WHERE nn_rank <= {k}
 """
 
 
@@ -1349,8 +1218,8 @@ def _pq_split_expr(vec_col: str) -> Column:
 
 def _pq_subvectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, m, sqv): each embedding quantized to integers
-    (floor(x*1e6) — exact cross-engine arithmetic, same rule as
-    kmeans_embeddings) and split map-side into PQ_M subvectors."""
+    (floor(x*1e6) — exact cross-engine arithmetic) and split map-side
+    into PQ_M subvectors."""
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -1361,11 +1230,11 @@ def _pq_subvectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_codebooks(subs: DataFrame, ks: int = PQ_KS, iters: int = PQ_ITERS) -> DataFrame:
-    """Per-subspace Lloyd's k-means — the kmeans_embeddings recipe run
-    over ALL subspaces at once by carrying ``m`` through the keys: one
-    (m, cell, d) shuffle per iteration, assignment a map-side broadcast
-    argmin, exact integer arithmetic throughout. Init = subvectors of
-    the first ``ks`` embeddings. Returns (m, cid, cq)."""
+    """Per-subspace Lloyd's k-means run over ALL subspaces at once by
+    carrying ``m`` through the keys: one (m, cell, d) shuffle per
+    iteration, assignment a map-side broadcast argmin, exact integer
+    arithmetic throughout. Init = subvectors of the first ``ks``
+    embeddings. Returns (m, cid, cq)."""
     cent = subs.filter(F.col("vec_id") < ks).select(
         "m", F.col("vec_id").cast("int").alias("cid"), F.col("sqv").alias("cq")
     )
@@ -1415,7 +1284,7 @@ def ann_pq_adc_topk(
        row of nested arrays, and each candidate's distance is a pure
        map-side array lookup + fold — the only exchange in the whole
        scan is the final per-query top-k window. Production composes
-       stage 3 with the IVF cell filter (ann_ivf_kmeans_topk) to bound
+       stage 3 with an IVF cell filter (as in ann_ivf_topk) to bound
        candidates; the full scan here is the stated-exhaustive variant.
 
     Distances are exact integer arithmetic end to end (quantized
@@ -1500,8 +1369,8 @@ def ann_pq_adc_topk(
 def _pq_kmeans_ctes(
     m: int = PQ_M, sub: int = PQ_SUB, ks: int = PQ_KS, iters: int = PQ_ITERS
 ) -> str:
-    """Per-subspace k-means as unrolled CTEs (the kmeans_embeddings
-    oracle recipe with the subspace index carried through every key)."""
+    """Per-subspace k-means as unrolled CTEs (Lloyd's iterations with
+    the subspace index carried through every key)."""
     parts = [
         f"""WITH e AS (
   SELECT vec_id,
@@ -1806,10 +1675,7 @@ _REGISTRY = {
     "q5_local_supplier_volume": (q5_local_supplier_volume, _Q5_SQL),
     "q_cube_order_stats": (q_cube_order_stats, _CUBE_SQL),
     "embedding_norms": (embedding_norms, _EMB_NORMS_SQL),
-    "media_features": (media_features, _MEDIA_FEATURES_SQL),
     "lang_id": (lang_id_query, _lang_id_sql()),
-    "pdf_pages": (pdf_pages_query, _PDF_PAGES_SQL),
-    "ann_lsh_topk": (ann_lsh_topk_query, _ann_lsh_sql()),
     "doc_sample_stratified": (doc_sample_stratified, _sample_sql()),
     "doc_sample_weighted": (doc_sample_weighted, _WSAMPLE_SQL),
     "quality_filter": (quality_filter, _QUALITY_FILTER_SQL),

@@ -1,5 +1,5 @@
 """Extraction-family driver gates (golden fingerprints), extractor
-ranking, corpus profiling, pivot/map surfaces, k-means + IVF-kmeans.
+ranking, corpus profiling and the pivot/map surfaces.
 
 Split out of plans/queries.py (round 3)."""
 
@@ -9,22 +9,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window  # noqa: F401 — used in window queries
 
-from .common import (  # noqa: F401 — shared helpers + SQL fragments
-    STOPWORDS_SORTED,
-    _STOP_SQL,
-    _dec,
-    _t,
-)
-from .q_embedding import (  # noqa: F401
-    PQ_M,
-    PQ_SUB,
-    _emb_with_norm,
-    _ivf_probe,
-    _pq_codebooks,
-    _pq_codes_expr,
-    _pq_split_expr,
-    _pq_sq_dist,
-)
+from .common import _t
 
 
 # ---------------------------------------------------------------------------
@@ -886,67 +871,6 @@ GROUP BY 1, 2
 """
 
 
-def ann_quality_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pipeline composition: similarity search restricted to documents
-    that pass the C4-style quality gate — the embed-then-filter shape a
-    training-data mix actually runs (corpus gate -> LEFT SEMI join onto
-    the embedding table on vec_id == doc_id -> exact cosine top-k).
-    The semi join prunes the scan side BEFORE the distance work."""
-    from ..operators.similarity import brute_force_topk
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.trim("text"), r"\s+")
-    n_tok = F.size(toks)
-    mean_len = F.aggregate(
-        toks, F.lit(0).cast("bigint"), lambda a, w: a + F.length(w)
-    ).cast("double") / n_tok
-    stop_ratio = (
-        F.size(F.filter(toks, lambda w: F.lower(w).isin(*STOPWORDS_SORTED))).cast(
-            "double"
-        )
-        / n_tok
-    )
-    keep_ids = docs.filter(
-        (n_tok >= 50) & (mean_len >= 3.0) & (mean_len <= 10.0) & (stop_ratio >= 0.05)
-    ).select(F.col("doc_id").alias("vec_id"))
-    emb = _t(spark, sf_dir, "embeddings").join(keep_ids, "vec_id", "left_semi")
-    r = brute_force_topk(emb, list(range(10)), k=5)
-    return r.select(
-        "query_id", "neighbor_id", "nn_rank", F.round("cos", 4).alias("cos_sim")
-    )
-
-
-_ANN_QUALITY_SQL = f"""
-WITH t AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks FROM documents
-), keep AS (
-  SELECT doc_id FROM (
-    SELECT doc_id, len(toks) AS n_tok,
-           CAST(list_sum(list_transform(toks, w -> length(w))) AS DOUBLE) / len(toks) AS mean_len,
-           CAST(len(list_filter(toks, w -> list_contains([{_STOP_SQL}], lower(w)))) AS DOUBLE) / len(toks) AS stop_ratio
-    FROM t
-  ) WHERE n_tok >= 50 AND mean_len >= 3.0 AND mean_len <= 10.0 AND stop_ratio >= 0.05
-), e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-  WHERE vec_id IN (SELECT doc_id FROM keep)
-), n AS (
-  SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e
-), q AS (
-  SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM n WHERE vec_id < 10
-), s AS (
-  SELECT query_id, n.vec_id AS neighbor_id,
-         list_dot_product(qv, v) / (qn * nrm) AS cos
-  FROM q JOIN n ON n.vec_id <> query_id
-), r AS (
-  SELECT query_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS nn_rank
-  FROM s
-)
-SELECT query_id, neighbor_id, nn_rank, ROUND(cos, 4) AS cos_sim
-FROM r WHERE nn_rank <= 5
-"""
-
-
 _PIVOT_SOURCES = ["src0", "src1", "src2", "src3"]
 
 
@@ -986,610 +910,6 @@ SELECT lang,
        {cols},
        CAST(SUM(CASE WHEN source NOT IN ({not_in}) THEN 1 ELSE 0 END) AS BIGINT) AS n_other
 FROM documents GROUP BY lang
-"""
-
-
-def kmeans_embeddings(
-    spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 3
-) -> DataFrame:
-    """Distributed Lloyd's k-means over the embedding table — the
-    iterative-algorithm shape (like connected_components) done entirely
-    as composed DataFrame ops with ZERO driver actions: per iteration,
-    centroids collapse to a one-row broadcast array, assignment is a
-    map-side integer argmin (no shuffle), and the update is one
-    (cell, dim) hash aggregate. At 10^9 vectors each iteration is one
-    shuffle of (cell, dim, q) partial sums — partial-agg friendly.
-
-    Determinism across engines: vectors are quantized to integers
-    (floor(x * 1e6)), so distances and centroid updates are EXACT
-    integer arithmetic — no float-sum ordering anywhere — and Spark's
-    ``div`` matches DuckDB's ``//`` (both truncate toward zero).
-    Init = first k vectors (production swaps in k-means|| sampling).
-    Emits (cid, n_members, dim_idx, centroid_q)."""
-    cent = _kmeans_centroids(spark, sf_dir, k, iters)
-    return cent.select(
-        "cid",
-        "n_members",
-        F.posexplode("cq").alias("dim_idx", "centroid_q"),
-    )
-
-
-def _kmeans_centroids(
-    spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 3
-) -> DataFrame:
-    """(cid, cq: array<bigint>, n_members) after ``iters`` Lloyd
-    updates — the composable form (ann_ivf_kmeans_topk feeds these
-    into the IVF probe as its coarse quantizer)."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    qv = F.transform("v", lambda x: F.floor(x * 1e6).cast("bigint"))
-    base = emb.select("vec_id", qv.alias("qv"))
-    cent = base.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").cast("int").alias("cid"), F.col("qv").alias("cq")
-    )
-    assigned = None
-    for _ in range(iters):
-        cent_arr = cent.select(F.struct("cid", "cq").alias("c")).agg(
-            F.collect_list("c").alias("cents")
-        )
-        scored = F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                F.aggregate(
-                    F.zip_with(F.col("qv"), c["cq"], lambda a, b: (a - b) * (a - b)),
-                    F.lit(0).cast("bigint"),
-                    lambda acc, x: acc + x,
-                ).alias("dist"),
-                c["cid"].alias("cid"),
-            ),
-        )
-        assigned = base.join(F.broadcast(cent_arr)).withColumn(
-            "cell", F.element_at(F.array_sort(scored), 1)["cid"]
-        )
-        upd = (
-            assigned.select("cell", F.posexplode("qv").alias("d", "q"))
-            .groupBy("cell", "d")
-            .agg(F.sum("q").alias("s"), F.count(F.lit(1)).alias("n"))
-            .select("cell", "d", "n", F.expr("s div n").alias("cq"))
-        )
-        cent = (
-            upd.groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("d", "cq"))),
-                    lambda p: p["cq"],
-                ).alias("cq"),
-                F.min("n").alias("n_members"),
-            )
-            .select(F.col("cell").cast("int").alias("cid"), "cq", "n_members")
-        )
-    return cent
-
-
-def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with the LEARNED coarse quantizer: k-means centroids
-    (integer-exact Lloyd iterations) dequantized to doubles feed the
-    same map-side-argmin probe as ann_ivf_topk — the production IVF
-    composition the first-k variant stubs."""
-    base = _emb_with_norm(spark, sf_dir)
-    cv = F.transform("cq", lambda x: x / F.lit(1e6))
-    cent = _kmeans_centroids(spark, sf_dir).select(
-        "cid", cv.alias("cv")
-    )
-    cn = F.sqrt(
-        F.aggregate(F.transform("cv", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    cent = cent.withColumn("cn", cn)
-    return _ivf_probe(base, cent, nprobe=2, topk=3, n_queries=10)
-
-
-# IVF-PQ (Jégou et al. 2011 §IV): coarse k-means cells + a product
-# quantizer trained on RESIDUALS (vector minus its cell centroid),
-# shared across cells — the FAISS IVFPQ index layout. Small parameters
-# keep the unrolled oracle CTE chain tractable; the Spark plan is the
-# real 10^9-vector shape.
-IVFPQ_COARSE_K = 4
-IVFPQ_COARSE_ITERS = 2
-IVFPQ_NPROBE = 2
-
-
-def ann_ivfpq_topk(
-    spark: SparkSession, sf_dir: str, n_queries: int = 10, topk: int = 5
-) -> DataFrame:
-    """The full IVF-PQ composition the flat PQ scan (ann_pq_adc_topk)
-    and the IVF probe (ann_ivf_kmeans_topk) each stub one half of:
-
-    1. coarse quantizer: integer-exact k-means over full vectors
-       (`_kmeans_centroids`); every vector gets its cell + RESIDUAL via
-       one broadcast argmin — map-side, zero shuffle;
-    2. product quantizer: per-subspace k-means over the residuals
-       (codebooks shared across cells, the classic IVFPQ layout);
-       encoding is again a broadcast argmin — the stored index is
-       (vec_id, cell, 4 codes), ~100x smaller than raw vectors;
-    3. query: probe the NPROBE nearest cells, build one ADC lookup
-       table per (query, probed cell) from the query's residual in
-       that cell, and score ONLY candidates in probed cells via a
-       broadcast equi-join on cell — candidate work is
-       O(n * nprobe / k), never a full scan, and the sole exchange is
-       the final top-k window.
-
-    Integer-exact end to end (quantized vectors, integer residuals and
-    LUTs; Spark `div` and DuckDB `//` both truncate toward zero), so
-    the oracle matches bitwise. Emits
-    (query_id, neighbor_id, nn_rank, adc_dist_q)."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.floor(x * 1e6).cast("bigint"),
-        ).alias("qv"),
-    )
-    coarse = _kmeans_centroids(
-        spark, sf_dir, k=IVFPQ_COARSE_K, iters=IVFPQ_COARSE_ITERS
-    )
-    coarse_arr = coarse.select(F.struct("cid", "cq").alias("c")).agg(
-        F.array_sort(F.collect_list("c")).alias("coarse")
-    )
-    cell_scored = F.transform(
-        F.col("coarse"),
-        lambda c: F.struct(
-            _pq_sq_dist(F.col("qv"), c["cq"]).alias("dist"),
-            c["cid"].alias("cid"),
-            c["cq"].alias("cq"),
-        ),
-    )
-    best = F.element_at(F.array_sort(cell_scored), 1)
-    with_cell = emb.join(F.broadcast(coarse_arr)).select(
-        "vec_id",
-        "qv",
-        best["cid"].alias("cell"),
-        F.zip_with("qv", best["cq"], lambda a, b: a - b).alias("rv"),
-    )
-
-    subs = with_cell.select(
-        "vec_id", F.explode(_pq_split_expr("rv")).alias("s")
-    ).select("vec_id", F.col("s.m").alias("m"), F.col("s.sqv").alias("sqv"))
-    cents_arr = (
-        _pq_codebooks(subs)
-        .select(F.struct("m", "cid", "cq").alias("c"))
-        .agg(F.array_sort(F.collect_list("c")).alias("cents"))
-    )
-    codes = (
-        with_cell.join(F.broadcast(cents_arr))
-        .withColumn("codes", _pq_codes_expr("rv"))
-        .select("vec_id", "cell", "codes")
-    )
-
-    # probes: top-NPROBE cells per query, with the query's residual in
-    # each probed cell; then the nested [m][cid] LUT per (query, cell)
-    probes = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .join(F.broadcast(coarse_arr))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "qv",
-            F.explode(
-                F.slice(F.array_sort(cell_scored), 1, IVFPQ_NPROBE)
-            ).alias("p"),
-        )
-        .select(
-            "query_id",
-            F.col("p.cid").alias("cell"),
-            F.zip_with("qv", F.col("p.cq"), lambda a, b: a - b).alias("rvq"),
-        )
-    )
-    lut = probes.join(F.broadcast(cents_arr)).select(
-        "query_id",
-        "cell",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(PQ_M - 1)),
-            lambda i: F.transform(
-                F.filter(F.col("cents"), lambda c: c["m"] == i),
-                lambda c: _pq_sq_dist(
-                    F.slice(F.col("rvq"), i * PQ_SUB + 1, F.lit(PQ_SUB)), c["cq"]
-                ),
-            ),
-        ).alias("lut_q"),
-    )
-
-    scored = (
-        codes.join(F.broadcast(lut), "cell")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.aggregate(
-                F.sequence(F.lit(0), F.lit(PQ_M - 1)),
-                F.lit(0).cast("bigint"),
-                lambda acc, i: acc
-                + F.element_at(
-                    F.element_at(F.col("lut_q"), i + F.lit(1)),
-                    F.element_at(F.col("codes"), i + F.lit(1)) + F.lit(1),
-                ),
-            ).alias("adc_dist_q"),
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist_q").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .filter(F.col("nn_rank") <= topk)
-        .select("query_id", "neighbor_id", "nn_rank", "adc_dist_q")
-    )
-
-
-def _ivfpq_sql(
-    k: int = IVFPQ_COARSE_K,
-    iters: int = IVFPQ_COARSE_ITERS,
-    dim: int = 64,
-    m: int = 4,
-    sub: int = 16,
-    pq_ks: int = 8,
-    pq_iters: int = 2,
-    nprobe: int = IVFPQ_NPROBE,
-    n_queries: int = 10,
-    topk: int = 5,
-) -> str:
-    """Oracle: the coarse kmeans CTE chain, residual grid, a second
-    (per-subspace) kmeans chain over residuals, then the probe/LUT/ADC
-    joins — every step exact integer arithmetic."""
-    parts = [_kmeans_ctes(k, iters, dim)]
-    parts.append(f""", adist AS (
-  SELECT ev.vec_id, c.cid, SUM((ev.q - c.cq) * (ev.q - c.cq)) AS dist
-  FROM ev JOIN c{iters} c ON ev.d = c.d GROUP BY 1, 2
-), acell AS (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT vec_id, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-    FROM adist
-  ) WHERE rn = 1
-), rsub AS (
-  SELECT ev.vec_id, CAST((ev.d - 1) // {sub} AS INTEGER) AS m,
-         CAST(((ev.d - 1) % {sub}) + 1 AS INTEGER) AS sd,
-         ev.q - c.cq AS r
-  FROM ev JOIN acell a ON a.vec_id = ev.vec_id
-          JOIN c{iters} c ON c.cid = a.cell AND c.d = ev.d
-), p0 AS (
-  SELECT m, CAST(vec_id AS INTEGER) AS cid, sd, r AS cq
-  FROM rsub WHERE vec_id < {pq_ks}
-)""")
-    for i in range(1, pq_iters + 1):
-        parts.append(f""", pdist{i} AS (
-  SELECT s.vec_id, s.m, c.cid, SUM((s.r - c.cq) * (s.r - c.cq)) AS dist
-  FROM rsub s JOIN p{i - 1} c ON s.m = c.m AND s.sd = c.sd
-  GROUP BY 1, 2, 3
-), pa{i} AS (
-  SELECT vec_id, m, cid FROM (
-    SELECT vec_id, m, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dist, cid) AS rn
-    FROM pdist{i}
-  ) WHERE rn = 1
-), p{i} AS (
-  SELECT a.m, a.cid, s.sd, CAST(SUM(s.r) // COUNT(*) AS BIGINT) AS cq
-  FROM pa{i} a JOIN rsub s ON s.vec_id = a.vec_id AND s.m = a.m
-  GROUP BY 1, 2, 3
-)""")
-    parts.append(f""", pcdist AS (
-  SELECT s.vec_id, s.m, c.cid, SUM((s.r - c.cq) * (s.r - c.cq)) AS dist
-  FROM rsub s JOIN p{pq_iters} c ON s.m = c.m AND s.sd = c.sd
-  GROUP BY 1, 2, 3
-), codes AS (
-  SELECT vec_id, m, cid AS code FROM (
-    SELECT vec_id, m, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dist, cid) AS rn
-    FROM pcdist
-  ) WHERE rn = 1
-), probes AS (
-  SELECT vec_id AS query_id, cid AS cell FROM (
-    SELECT vec_id, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-    FROM adist WHERE vec_id < {n_queries}
-  ) WHERE rn <= {nprobe}
-), qres AS (
-  SELECT p.query_id, p.cell, CAST((ev.d - 1) // {sub} AS INTEGER) AS m,
-         CAST(((ev.d - 1) % {sub}) + 1 AS INTEGER) AS sd, ev.q - c.cq AS r
-  FROM probes p JOIN ev ON ev.vec_id = p.query_id
-       JOIN c{iters} c ON c.cid = p.cell AND c.d = ev.d
-), lut AS (
-  SELECT q.query_id, q.cell, q.m, c.cid,
-         SUM((q.r - c.cq) * (q.r - c.cq)) AS dist
-  FROM qres q JOIN p{pq_iters} c ON c.m = q.m AND c.sd = q.sd
-  GROUP BY 1, 2, 3, 4
-), adc AS (
-  SELECT l.query_id, k.vec_id AS neighbor_id,
-         CAST(SUM(l.dist) AS BIGINT) AS adc_dist_q
-  FROM codes k JOIN acell a ON a.vec_id = k.vec_id
-       JOIN lut l ON l.cell = a.cell AND l.m = k.m AND l.cid = k.code
-  WHERE k.vec_id <> l.query_id
-  GROUP BY 1, 2
-), top AS (
-  SELECT query_id, neighbor_id, adc_dist_q,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY adc_dist_q, neighbor_id) AS nn_rank
-  FROM adc
-)
-SELECT query_id, neighbor_id, nn_rank, adc_dist_q
-FROM top WHERE nn_rank <= {topk}
-""")
-    return "".join(parts)
-
-
-def _kmeans_ctes(k: int = 8, iters: int = 3, dim: int = 64) -> str:
-    """The WITH-clause body shared by _kmeans_sql and _ivf_kmeans_sql."""
-    parts = [
-        f"""WITH e AS (
-  SELECT vec_id,
-         list_transform(embedding::DOUBLE[], x -> CAST(floor(x * 1000000.0) AS BIGINT)) AS qv
-  FROM embeddings
-), ev AS (
-  SELECT vec_id, d, qv[d] AS q FROM e, range(1, {dim + 1}) t(d)
-), c0 AS (
-  SELECT vec_id AS cid, d, qv[d] AS cq, 1 AS n
-  FROM e, range(1, {dim + 1}) t(d) WHERE vec_id < {k}
-)"""
-    ]
-    for i in range(1, iters + 1):
-        parts.append(f""", dist{i} AS (
-  SELECT ev.vec_id, c.cid, SUM((ev.q - c.cq) * (ev.q - c.cq)) AS dist
-  FROM ev JOIN c{i - 1} c ON ev.d = c.d
-  GROUP BY 1, 2
-), a{i} AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-    FROM dist{i}
-  ) WHERE rn = 1
-), c{i} AS (
-  SELECT a.cid, ev.d, CAST(SUM(ev.q) // COUNT(*) AS BIGINT) AS cq,
-         COUNT(*) AS n
-  FROM a{i} a JOIN ev ON ev.vec_id = a.vec_id
-  GROUP BY 1, 2
-)""")
-    return "".join(parts)
-
-
-def _kmeans_sql(k: int = 8, iters: int = 3, dim: int = 64) -> str:
-    return _kmeans_ctes(k, iters, dim) + f"""
-SELECT CAST(cid AS INTEGER) AS cid, CAST(n AS BIGINT) AS n_members,
-       CAST(d - 1 AS INTEGER) AS dim_idx, cq AS centroid_q
-FROM c{iters}
-"""
-
-
-def _ivf_kmeans_sql(
-    k: int = 8, iters: int = 3, dim: int = 64,
-    nprobe: int = 2, topk: int = 3, n_queries: int = 10,
-) -> str:
-    """IVF probe over the k-means centroids: the kmeans CTE chain plus
-    the same cosine/rank logic as _IVF_SQL, with centroid vectors
-    reassembled as ordered lists and dequantized (cq / 1e6 — exact in
-    doubles) so list_dot_product mirrors the Spark fold."""
-    return _kmeans_ctes(k, iters, dim) + f""", cent AS (
-  SELECT CAST(cid AS INTEGER) AS cid,
-         list_transform(list(cq ORDER BY d), x -> x / 1000000.0) AS cv
-  FROM c{iters} GROUP BY cid
-), centn AS (
-  SELECT cid, cv, sqrt(list_dot_product(cv, cv)) AS cn FROM cent
-), nv AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-  FROM embeddings
-), ranked AS (
-  SELECT nv.vec_id, nv.v, nv.nrm, centn.cid,
-         ROW_NUMBER() OVER (
-           PARTITION BY nv.vec_id
-           ORDER BY list_dot_product(nv.v, centn.cv) / (nv.nrm * centn.cn) DESC, centn.cid
-         ) AS crank
-  FROM nv CROSS JOIN centn
-), cells AS (
-  SELECT vec_id, v, nrm, cid AS cell FROM ranked WHERE crank = 1
-), probes AS (
-  SELECT vec_id AS query_id, v AS qv, nrm AS qn, cid AS cell
-  FROM ranked WHERE vec_id < {n_queries} AND crank <= {nprobe}
-), scored AS (
-  SELECT query_id, cells.vec_id AS neighbor_id,
-         list_dot_product(qv, cells.v) / (qn * cells.nrm) AS cos
-  FROM probes JOIN cells USING (cell)
-  WHERE cells.vec_id <> query_id
-), top AS (
-  SELECT query_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS nn_rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, nn_rank, ROUND(cos, 4) AS cos_sim
-FROM top WHERE nn_rank <= {topk}
-"""
-
-
-# SemDeDup duplicate threshold: within-cluster pairs at cosine >= tau
-# are duplicate groups. 0.3 matches the corpus-wide near-dup threshold
-# used by dedup_embedding_cosine so the two tiers are comparable.
-SEMDEDUP_TAU = 0.3
-
-
-def semantic_dedup_census(
-    spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 3,
-    tau: float = SEMDEDUP_TAU,
-) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
-    deduplication by clustering embeddings with k-means, then pruning
-    within-cluster cosine-near-duplicates — keeping, per duplicate
-    relation, the member with the LOWEST similarity to its cluster
-    centroid (the paper's diversity-preserving survivor rule).
-
-    Scale shape: clustering bounds pair work — the self-join runs
-    per-cell, so with k sized for a target occupancy the pair count is
-    O(n * occupancy), never O(n^2). Assignment to the final centroids
-    is a map-side broadcast argmin (zero shuffle, same pattern as
-    ann_ivf_topk); the only shuffles are the per-iteration (cell, dim)
-    k-means aggregate and the one self-join exchange on the cell key.
-    Drop policy is a dominance semi-join (v is dropped iff some
-    same-cell u has cos(u, v) >= tau and a strictly lower
-    (centroid_sim, vec_id) key), which needs NO connected-components
-    iteration — the standard at-scale approximation of the paper's
-    per-group keep-one rule.
-
-    Cross-engine determinism: vectors quantize to integers
-    (floor(x*1e6), same as kmeans_embeddings), so every dot product /
-    squared distance is exact integer arithmetic (< 2^53, exact in
-    doubles too); cosines divide two exact values, giving bitwise-equal
-    doubles in Spark and DuckDB. Emits one census row per cluster:
-    (cid, n_members, n_dup_pairs, n_dropped, n_kept)."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    qv = F.transform("v", lambda x: F.floor(x * 1e6).cast("bigint"))
-    base = emb.select("vec_id", qv.alias("qv"))
-
-    def _idot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-
-    cent_arr = (
-        _kmeans_centroids(spark, sf_dir, k, iters)
-        .select(F.struct("cid", "cq").alias("c"))
-        .agg(F.collect_list("c").alias("cents"))
-    )
-    # Map-side argmin over the broadcast one-row centroid array; carry
-    # the winning centroid's dot/self-dot as scalars so the sort struct
-    # stays array-free. (dist, cid) is unique => later fields unused.
-    scored = F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(F.col("qv"), c["cq"], lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ).alias("dist"),
-            c["cid"].alias("cid"),
-            _idot(F.col("qv"), c["cq"]).alias("dq"),
-            _idot(c["cq"], c["cq"]).alias("cc"),
-        ),
-    )
-    best = F.element_at(F.array_sort(scored), 1)
-    qq = _idot(F.col("qv"), F.col("qv"))
-    assigned = (
-        base.join(F.broadcast(cent_arr))
-        .select(
-            "vec_id",
-            "qv",
-            best["cid"].alias("cell"),
-            F.sqrt(qq).alias("qn"),
-            (best["dq"] / (F.sqrt(qq) * F.sqrt(best["cc"]))).alias("csim"),
-        )
-    )
-    a = assigned.select(
-        F.col("cell").alias("cid"),
-        F.col("vec_id").alias("vec_a"),
-        F.col("qv").alias("qv_a"),
-        F.col("qn").alias("qn_a"),
-        F.col("csim").alias("cs_a"),
-    )
-    b = assigned.select(
-        F.col("cell").alias("cid"),
-        F.col("vec_id").alias("vec_b"),
-        F.col("qv").alias("qv_b"),
-        F.col("qn").alias("qn_b"),
-        F.col("csim").alias("cs_b"),
-    )
-    cos = _idot(F.col("qv_a"), F.col("qv_b")) / (F.col("qn_a") * F.col("qn_b"))
-    pairs = (
-        a.join(b.withColumnRenamed("cid", "cid_b"),
-               (F.col("cid") == F.col("cid_b")) & (F.col("vec_a") < F.col("vec_b")))
-        .withColumn("cos", cos)
-        .filter(F.col("cos") >= tau)
-        .select(
-            "cid", "vec_a", "vec_b", "cs_a", "cs_b",
-            # survivor keeps the LOWEST (csim, vec_id); the pairwise
-            # loser is the higher key
-            F.when(
-                (F.col("cs_a") > F.col("cs_b"))
-                | ((F.col("cs_a") == F.col("cs_b")) & (F.col("vec_a") > F.col("vec_b"))),
-                F.col("vec_a"),
-            ).otherwise(F.col("vec_b")).alias("loser"),
-        )
-    )
-    mem = assigned.groupBy(F.col("cell").alias("cid")).agg(
-        F.count(F.lit(1)).alias("n_members")
-    )
-    pcnt = pairs.groupBy("cid").agg(F.count(F.lit(1)).alias("n_dup_pairs"))
-    dropped = pairs.groupBy("cid").agg(
-        F.count_distinct("loser").alias("n_dropped")
-    )
-    return (
-        mem.join(pcnt, "cid", "left")
-        .join(dropped, "cid", "left")
-        .select(
-            F.col("cid").cast("int").alias("cid"),
-            "n_members",
-            F.coalesce("n_dup_pairs", F.lit(0)).alias("n_dup_pairs"),
-            F.coalesce("n_dropped", F.lit(0)).alias("n_dropped"),
-            (F.col("n_members") - F.coalesce("n_dropped", F.lit(0))).alias("n_kept"),
-        )
-    )
-
-
-def _semdedup_sql(
-    k: int = 8, iters: int = 3, dim: int = 64, tau: float = SEMDEDUP_TAU
-) -> str:
-    """DuckDB twin: the kmeans CTE chain, a final-assignment argmin,
-    exact-integer norms/dots, the same dominance loser rule."""
-    return _kmeans_ctes(k, iters, dim) + f""", qe AS (
-  SELECT vec_id,
-         list_transform(embedding::DOUBLE[], x -> CAST(floor(x * 1000000.0) AS BIGINT)) AS qv
-  FROM embeddings
-), fdist AS (
-  SELECT ev.vec_id, c.cid, SUM((ev.q - c.cq) * (ev.q - c.cq)) AS dist
-  FROM ev JOIN c{iters} c ON ev.d = c.d
-  GROUP BY 1, 2
-), fa AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-    FROM fdist
-  ) WHERE rn = 1
-), vnorm AS (
-  SELECT vec_id, SUM(q * q) AS qq FROM ev GROUP BY 1
-), cnorm AS (
-  SELECT cid, SUM(cq * cq) AS cc FROM c{iters} GROUP BY 1
-), vdot AS (
-  SELECT ev.vec_id, SUM(ev.q * c.cq) AS dq
-  FROM ev JOIN fa ON fa.vec_id = ev.vec_id
-          JOIN c{iters} c ON c.cid = fa.cid AND c.d = ev.d
-  GROUP BY 1
-), pv AS (
-  SELECT fa.vec_id, fa.cid, qe.qv,
-         sqrt(vnorm.qq::DOUBLE) AS qn,
-         vdot.dq / (sqrt(vnorm.qq::DOUBLE) * sqrt(cnorm.cc::DOUBLE)) AS csim
-  FROM fa JOIN qe USING (vec_id)
-          JOIN vnorm USING (vec_id)
-          JOIN vdot USING (vec_id)
-          JOIN cnorm ON cnorm.cid = fa.cid
-), pr AS (
-  SELECT a.cid, a.vec_id AS va, b.vec_id AS vb,
-         CASE WHEN a.csim > b.csim
-                OR (a.csim = b.csim AND a.vec_id > b.vec_id)
-              THEN a.vec_id ELSE b.vec_id END AS loser
-  FROM pv a JOIN pv b ON a.cid = b.cid AND a.vec_id < b.vec_id
-  WHERE list_dot_product(a.qv, b.qv) / (a.qn * b.qn) >= {tau}
-), mem AS (
-  SELECT cid, COUNT(*) AS n_members FROM fa GROUP BY 1
-), pcnt AS (
-  SELECT cid, COUNT(*) AS n_dup_pairs FROM pr GROUP BY 1
-), dropped AS (
-  SELECT cid, COUNT(DISTINCT loser) AS n_dropped FROM pr GROUP BY 1
-)
-SELECT CAST(mem.cid AS INTEGER) AS cid,
-       CAST(n_members AS BIGINT) AS n_members,
-       CAST(COALESCE(n_dup_pairs, 0) AS BIGINT) AS n_dup_pairs,
-       CAST(COALESCE(n_dropped, 0) AS BIGINT) AS n_dropped,
-       CAST(n_members - COALESCE(n_dropped, 0) AS BIGINT) AS n_kept
-FROM mem LEFT JOIN pcnt USING (cid) LEFT JOIN dropped USING (cid)
 """
 
 
@@ -1664,219 +984,6 @@ WHERE n_events = (SELECT COUNT(*) FROM events)
 """
 
 
-# ---------------------------------------------------------------------------
-# PCA top component via power iteration (integer-exact, like k-means)
-# ---------------------------------------------------------------------------
-
-PCA_ITERS = 3
-_EMB_DIM = 64
-
-
-def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed PCA: the corpus embedding matrix's top principal
-    component by POWER ITERATION — mean-center, then repeat
-    ``v <- normalize(Xᵀ X v)`` — done entirely as composed DataFrame
-    ops with ZERO driver actions, the same iterative-algorithm shape
-    as ``kmeans_embeddings``. Emits the unit component in micro-units
-    per dimension plus the final Rayleigh norm (``sigma_q``, the
-    un-normalized ``‖Xᵀ X v‖`` — the convergence/variance signal).
-
-    Scale shape per iteration: the current vector rides as a ONE-ROW
-    broadcast; projections ``s_i = x_i·v`` are a map-side fold (no
-    shuffle); the update ``w = Σ s_i·x_i`` is one (dim) hash aggregate
-    of 64-key partial sums — at 10^9 vectors each iteration moves only
-    #dims rows per partition. The mean vector is the same one-row
-    broadcast shape. Never materializes the d×d covariance.
-
-    Determinism across engines: embeddings quantize to integers
-    (floor(x·1e6)); every sum is exact integer arithmetic; the two
-    rescales are truncating integer division (Spark ``div`` == DuckDB
-    ``//``); the only floats are sqrt (IEEE-exact-rounded) and one
-    final division, quantized back to integers — so both engines walk
-    the identical integer trajectory. Magnitude budget (documented,
-    not enforced): per-dim update sums stay < 2^63 up to ~10^7 rows at
-    these scales; a 100 TB run raises the two downscale constants."""
-    _centered, v_row = _pca_learn(spark, sf_dir)
-    return v_row.select(
-        "sigma_q", F.posexplode("vq").alias("dim_idx", "v_e6")
-    ).select(F.col("dim_idx").cast("int").alias("dim_idx"), "v_e6", "sigma_q")
-
-
-def _pca_learn(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Shared power-iteration core: returns (centered quantized
-    vectors carrying vec_id+label, one-row component DataFrame with
-    ``vq``/``sigma_q``) so projection queries can reuse the learned
-    component without re-deriving it."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    qv = F.transform("v", lambda x: F.floor(x * 1e6).cast("bigint"))
-    base = emb.select("vec_id", "label", qv.alias("qv"))
-    means = (
-        base.select(F.posexplode("qv").alias("d", "q"))
-        .groupBy("d")
-        .agg(F.sum("q").alias("s"), F.count(F.lit(1)).alias("n"))
-        .select("d", F.expr("s div n").alias("m"))
-    )
-    marr = means.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "m"))), lambda p: p["m"]
-        ).alias("ml")
-    )
-    centered = base.crossJoin(F.broadcast(marr)).select(
-        "vec_id",
-        "label",
-        F.zip_with("qv", "ml", lambda a, b: a - b).alias("cq"),
-    )
-    v_row = spark.range(1).select(
-        F.array(*[F.lit(125000).cast("bigint")] * _EMB_DIM).alias("vq")
-    )
-    for _ in range(PCA_ITERS):
-        s_raw = F.aggregate(
-            F.zip_with("cq", "vq", lambda a, b: a * b),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-        scored = (
-            centered.select("cq")
-            .crossJoin(F.broadcast(v_row.select("vq")))
-            .withColumn("s_raw", s_raw)
-            .withColumn("s2", F.expr("s_raw div 1000000"))
-        )
-        w = (
-            scored.select("s2", F.posexplode("cq").alias("d", "c"))
-            .groupBy("d")
-            .agg(F.sum(F.col("s2") * F.col("c")).alias("w"))
-            .select("d", F.expr("w div 1000000").alias("wp"))
-        )
-        warr = w.agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "wp"))),
-                lambda p: p["wp"],
-            ).alias("wl")
-        )
-        norm = F.sqrt(
-            F.aggregate(
-                F.transform("wl", lambda x: x * x),
-                F.lit(0).cast("bigint"),
-                lambda a, x: a + x,
-            ).cast("double")
-        )
-        v_row = warr.select(
-            F.transform(
-                "wl",
-                lambda x: F.round(x.cast("double") * 1e6 / norm).cast("bigint"),
-            ).alias("vq"),
-            F.round(norm).cast("bigint").alias("sigma_q"),
-        )
-    return centered, v_row
-
-
-def pca_project_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PCA APPLICATION: project every centered embedding onto the
-    learned top component and census the projection per label — the
-    one-number-per-vector reduction used for stratified diagnostics
-    ("does the dominant variance direction separate the labels?") and
-    for cheap 1-D binning/range-partitioning of a vector corpus.
-
-    Scale shape: the component is a ONE-ROW broadcast; projections are
-    a map-side integer fold (zero shuffle); the census is one (label)
-    hash aggregate. Exact BIGINT sums; the derived mean is one fixed
-    double expression."""
-    centered, v_row = _pca_learn(spark, sf_dir)
-    s_raw = F.aggregate(
-        F.zip_with("cq", "vq", lambda a, b: a * b),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    proj = (
-        centered.crossJoin(F.broadcast(v_row.select("vq")))
-        .withColumn("s_raw", s_raw)
-        .withColumn("s2", F.expr("s_raw div 1000000"))
-    )
-    return (
-        proj.groupBy("label")
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.sum("s2").alias("proj_sum"),
-            F.sum(F.col("s2") * F.col("s2")).alias("proj_sumsq"),
-        )
-        .select(
-            "label",
-            "n_vecs",
-            "proj_sum",
-            "proj_sumsq",
-            F.round(
-                F.col("proj_sum").cast("double") / F.col("n_vecs"), 6
-            ).alias("mean_proj"),
-        )
-    )
-
-
-def _pca_project_sql(iters: int = PCA_ITERS, dim: int = _EMB_DIM) -> str:
-    chain = _pca_sql(iters, dim)
-    # reuse the iteration chain's WITH-prefix (everything before the
-    # final SELECT) and append the projection census
-    prefix = chain.rsplit("\nSELECT CAST(d - 1 AS INTEGER)", 1)[0]
-    return prefix + f""", lbl AS (
-  SELECT vec_id, label FROM embeddings
-), proj AS (
-  SELECT cv.vec_id, CAST(SUM(cv.c * v.v) AS BIGINT) // 1000000 AS s2
-  FROM cv JOIN v{iters} v USING (d) GROUP BY cv.vec_id
-)
-SELECT label, COUNT(*) AS n_vecs,
-       CAST(SUM(s2) AS BIGINT) AS proj_sum,
-       CAST(SUM(s2 * s2) AS BIGINT) AS proj_sumsq,
-       ROUND(CAST(SUM(s2) AS DOUBLE) / COUNT(*), 6) AS mean_proj
-FROM proj JOIN lbl USING (vec_id)
-GROUP BY label
-"""
-
-
-def _pca_sql(iters: int = PCA_ITERS, dim: int = _EMB_DIM) -> str:
-    """Unrolled power-iteration twin: one (projection, update,
-    rescale+normalize) CTE block per iteration, identical integer
-    trajectory (SUMs cast from HUGEINT back to BIGINT before the
-    truncating ``//``)."""
-    parts = [
-        f"""WITH e AS (
-  SELECT vec_id,
-         list_transform(embedding::DOUBLE[],
-                        x -> CAST(floor(x * 1000000.0) AS BIGINT)) AS qv
-  FROM embeddings
-), ev AS (
-  SELECT vec_id, d, qv[d] AS q FROM e, range(1, {dim + 1}) t(d)
-), mean AS (
-  SELECT d, CAST(SUM(q) // COUNT(*) AS BIGINT) AS m FROM ev GROUP BY d
-), cv AS (
-  SELECT ev.vec_id, ev.d, ev.q - mean.m AS c FROM ev JOIN mean USING (d)
-), v0 AS (
-  SELECT d, CAST(125000 AS BIGINT) AS v FROM range(1, {dim + 1}) t(d)
-)"""
-    ]
-    for i in range(1, iters + 1):
-        parts.append(f""", s{i} AS (
-  SELECT cv.vec_id, CAST(SUM(cv.c * v.v) AS BIGINT) // 1000000 AS s2
-  FROM cv JOIN v{i - 1} v USING (d) GROUP BY cv.vec_id
-), wp{i} AS (
-  SELECT cv.d, CAST(SUM(s.s2 * cv.c) AS BIGINT) // 1000000 AS wp
-  FROM cv JOIN s{i} s USING (vec_id) GROUP BY cv.d
-), nrm{i} AS (
-  SELECT sqrt(CAST(CAST(SUM(wp * wp) AS BIGINT) AS DOUBLE)) AS nrm
-  FROM wp{i}
-), v{i} AS (
-  SELECT d, CAST(ROUND(wp * 1000000.0 / nrm) AS BIGINT) AS v
-  FROM wp{i}, nrm{i}
-)""")
-    return "".join(parts) + f"""
-SELECT CAST(d - 1 AS INTEGER) AS dim_idx, v AS v_e6,
-       (SELECT CAST(ROUND(nrm) AS BIGINT) FROM nrm{iters}) AS sigma_q
-FROM v{iters}
-"""
-
-
 # -- module registry (merged into plans.queries.SQL_CHECKED) ----------------
 _REGISTRY = {
     "extract_text_fingerprint": (extract_text_fingerprint, _TEXT_FP_SQL),
@@ -1891,16 +998,9 @@ _REGISTRY = {
     "extractor_bootstrap_ci": (extractor_bootstrap_ci, _bootstrap_ci_sql()),
     "span_churn_census": (span_churn_census, _span_churn_sql()),
     "page_byte_census": (page_byte_census, _PAGE_BYTE_CENSUS_SQL),
-    "kmeans_embeddings": (kmeans_embeddings, _kmeans_sql()),
-    "pca_power_iteration": (pca_power_iteration, _pca_sql()),
-    "pca_project_census": (pca_project_census, _pca_project_sql()),
-    "ann_ivf_kmeans_topk": (ann_ivf_kmeans_topk, _ivf_kmeans_sql()),
-    "ann_ivfpq_topk": (ann_ivfpq_topk, _ivfpq_sql()),
-    "semantic_dedup_census": (semantic_dedup_census, _semdedup_sql()),
     "corpus_length_percentiles": (corpus_length_percentiles, _PERCENTILES_SQL),
     "corpus_length_histogram": (corpus_length_histogram, _HISTOGRAM_SQL),
     "extract_report_exact": (extract_report_exact, _report_exact_sql()),
     "lang_source_pivot": (lang_source_pivot, _pivot_sql()),
-    "ann_quality_filtered_topk": (ann_quality_filtered_topk, _ANN_QUALITY_SQL),
     "q_events_props_map": (q_events_props_map, _EVENTS_PROPS_MAP_SQL),
 }

@@ -331,7 +331,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides on the node key (a production run persists ``edges``
     bucketed by u so only ranks move per iteration; here the unrolled
     lineage keeps the query a pure DataFrame composition with zero
-    driver actions, like ``kmeans_embeddings``). The final top-k is a
+    driver actions). The final top-k is a
     distributed TakeOrdered, then a rank window over only the
     surviving k rows.
 

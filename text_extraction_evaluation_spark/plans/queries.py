@@ -13,7 +13,8 @@ directly above/below its SQL twin, so the pair stays in sync):
 * ``plans.q_corpus``     — text stats + every dedup tier
 * ``plans.q_nlp``        — TF-IDF/TextRank, decontamination, mixtures,
   vocabulary and stopword statistics
-* ``plans.q_embedding``  — ANN/similarity, specialty joins, TPC-H tail
+* ``plans.q_embedding``  — embedding ANN (brute force, IVF, PQ),
+  specialty joins, TPC-H tail, lang-ID and sampling
 * ``plans.q_extraction`` — extraction-family gates + profiling/pivot
 * ``plans.q_webtext``    — crawl/host/URL/layout operators
 

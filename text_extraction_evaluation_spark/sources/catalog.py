@@ -9,11 +9,14 @@ the pipeline uses on plain parquet dirs, and nothing else:
    becomes visible only when the JSON manifest is atomically replaced
    (tmp + os.replace) — readers never see partial writes, re-running a
    failed chunk is idempotent (same chunk_id -> skip);
-2. **snapshot reads** (``read``): loads exactly the committed chunk
-   paths from the manifest, never a directory listing. Each commit
-   records its chunk's schema in the manifest, so a read is typed from
-   the manifest and launches no parquet-footer inference job (legacy
-   chunks without a recorded schema fall back to inference);
+2. **snapshot reads** (``read``): loads exactly the chunks the
+   manifest names, never a directory listing. A chunk's path is
+   derived from the root, the table and its id (``chunk_path``), never
+   stored, so a root copied or moved elsewhere reads its own files.
+   Each commit records its chunk's schema in the manifest, so a read is
+   typed from the manifest and launches no parquet-footer inference
+   job (legacy chunks without a recorded schema fall back to
+   inference);
 3. **orphan cleanup** (``vacuum``): removes every chunk dir the
    manifest does not name — the staging dirs of a hard-killed write
    and the published-but-unrecorded dir of a commit killed between its
@@ -133,7 +136,6 @@ class LocalCatalog:
             shutil.rmtree(path, ignore_errors=True)
             os.replace(staging, path)
             manifest["chunks"][chunk_id] = {
-                "path": path,
                 "committed_at_unix": time.time(),
                 **(meta or {}),
             }
@@ -145,11 +147,11 @@ class LocalCatalog:
         committed chunk id (Iceberg's remove_orphan_files analogue):
         staging dirs of hard-killed writes, and the dir of a commit
         killed between its rename and its manifest store, which a rerun
-        with other buckets never commits again. Decided by id, not by
-        the manifest's recorded path, so a catalog opened under another
-        root never loses committed data. Run only while no writer is
-        active on ``table``: an in-flight commit's dirs look like
-        orphans. Returns the removed paths."""
+        with other buckets never commits again. Decided by id, like
+        every read, so a catalog opened under another root never loses
+        committed data. Run only while no writer is active on
+        ``table``: an in-flight commit's dirs look like orphans.
+        Returns the removed paths."""
         import shutil
 
         tdir = self.root / table
@@ -166,19 +168,15 @@ class LocalCatalog:
 
     def read(self, spark: SparkSession, table: str) -> DataFrame | None:
         """Snapshot read of the committed chunks, in the order the
-        manifest lists them (None if no commits)."""
-        chunks = list(self.committed_chunks(table).values())
+        manifest lists them (None if no commits). Typed by the recorded
+        schema when every chunk carries the same one; otherwise (legacy
+        manifest, or chunks that disagree) parquet infers it from the
+        footers."""
+        chunks = self.committed_chunks(table)
         if not chunks:
             return None
-        return _scan(spark, chunks)
-
-
-def _scan(spark: SparkSession, chunks: list[dict[str, Any]]) -> DataFrame:
-    """Read committed chunks, typed by their recorded schema when every
-    chunk carries the same one; otherwise (legacy manifest, or chunks
-    that disagree) let parquet infer it from the footers."""
-    schemas = {c.get("schema") for c in chunks}
-    reader = spark.read
-    if len(schemas) == 1 and None not in schemas:
-        reader = reader.schema(StructType.fromJson(json.loads(schemas.pop())))
-    return reader.parquet(*[c["path"] for c in chunks])
+        schemas = {c.get("schema") for c in chunks.values()}
+        reader = spark.read
+        if len(schemas) == 1 and None not in schemas:
+            reader = reader.schema(StructType.fromJson(json.loads(schemas.pop())))
+        return reader.parquet(*[self.chunk_path(table, cid) for cid in chunks])
